@@ -49,40 +49,20 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 # inference per path, so every read resolves to exactly the schema
 # inference would have produced.
 _SCHEMA_CACHE: dict[str, object] = {}
-_NPART_CACHE: dict[tuple[str, int], int] = {}
-
-
-# Resolved-DataFrame cache for the STATIC testdata tables (r14, VERDICT
-# item 7): even with the schema cached, every load_table call built a
-# fresh reader — a py4j round trip plus a fresh InMemoryFileIndex listing
-# of the (immutable) path, paid dozens of times per bench session as part
-# of each query's driver-side planning gap. Caching the resolved
-# DataFrame per (session, path) reuses the analyzed relation — PLAN
-# reuse, never result caching: the frame is lazy and immutable, every
-# action still computes from the parquet files. Keyed by the session's
-# applicationId so a stopped session's (unusable) frames are never served
-# to a new one.
-_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
+_NPART_CACHE: dict[tuple[str, str, int], int] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    cache_key = (spark.sparkContext.applicationId, path)
-    df = _DF_CACHE.get(cache_key)
-    if df is not None:
-        return df
     if name == "events":
-        df = _load_events(spark, path)
-    else:
-        schema = _SCHEMA_CACHE.get(path)
-        if schema is None:
-            schema = spark.read.parquet(path).schema
-            _SCHEMA_CACHE[path] = schema
-        df = spark.read.schema(schema).parquet(path)
-    _DF_CACHE[cache_key] = df
-    return df
+        return _load_events(spark, path)
+    schema = _SCHEMA_CACHE.get(path)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        _SCHEMA_CACHE[path] = schema
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -103,13 +83,16 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     # target parallelism. The probe (df.rdd conversion → scan partition
     # count) is driver-only but not free — it builds the whole RDD lineage
     # through py4j — and the answer is a pure function of the immutable
-    # testdata path + session parallelism, so cache it per (path, want)
-    # like the schema above (r14; metadata only, never data).
+    # testdata path, the session's reader config and its parallelism, so
+    # cache it per (application, path, want) like the schema above (r14;
+    # metadata only, never data). The applicationId keeps a later session
+    # with a different reader config from reusing a stale count.
     path = os.path.join(sf_dir, f"{name}.parquet")
-    nparts = _NPART_CACHE.get((path, want))
+    npart_key = (spark.sparkContext.applicationId, path, want)
+    nparts = _NPART_CACHE.get(npart_key)
     if nparts is None:
         nparts = df.rdd.getNumPartitions()
-        _NPART_CACHE[(path, want)] = nparts
+        _NPART_CACHE[npart_key] = nparts
     if nparts * 2 >= want:
         return df
     return df.repartition(want)

@@ -41,8 +41,11 @@ reference has no views; this extends its O15 materialize-query seam.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
+from dataclasses import dataclass, replace
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,7 +59,11 @@ from pgcp_spark.sources.lake import (
     append_delta,
     current_snapshot,
     delete_delta,
+    flatten_deltas,
     merge_cdc,
+    merge_cdc_delta,
+    pending_changes,
+    pending_state,
     read_current,
     read_current_with_deltas,
     table_changes,
@@ -278,6 +285,230 @@ def fold_join_view(
         overlap(*fact_writes)
 
 
+# --- the fact/dim/view cycle, shared by every lake_*join_view* query -------
+# One scenario, one driver: base fact = orders keys with o_orderkey % 3 != 0,
+# dim = customer, view = fact ⋈ dim on custkey keyed by o_orderkey and
+# written CLUSTER BY o_custkey (the dim-arm pruning layout). An aggregate
+# kind maintained OVER the view is a ``ViewSpec`` (one constant per kind,
+# each defined next to its fold below); the streaming driver
+# (``streaming/ingest_view.py``) drives the same specs per CDC batch.
+
+VIEW_KEY = ["o_orderkey"]
+GROUP_COL = "c_mktsegment"  # every kind groups the view by segment
+
+
+@dataclass(frozen=True)
+class ViewSpec:
+    """One aggregate kind maintained over the join view, as the drivers
+    see it: the downstream ``tables`` it owns (build and commit order),
+    their initial build over a view frame, the fold that advances them
+    from the view's state-diff feed, and the serving projection over the
+    stored ``agg`` table. Every owned table carries the
+    ``applied_view_state`` watermark, so every one is re-stamped after a
+    view flatten. Every kind groups by ``GROUP_COL``; the aggregated
+    column is a field so a caller re-targets a kind with
+    ``dataclasses.replace`` (the batch COUNT DISTINCT counts
+    o_orderpriority, the streaming one c_name)."""
+
+    tables: tuple[str, ...]
+    _build: Callable[["ViewSpec", DataFrame], tuple[DataFrame, ...]]
+    _fold: Callable[[SparkSession, "ViewSpec", dict[str, str], int], bool]
+    _serve: Callable[["ViewSpec", DataFrame], DataFrame]
+    clustered: tuple[str, ...] = ()  # tables laid out CLUSTER BY GROUP_COL
+    value_col: str = "o_totalprice"
+
+    def build(self, view: DataFrame) -> dict[str, DataFrame]:
+        """Each owned table's content over a view-shaped frame — the
+        initial build and every test's recompute oracle."""
+        return dict(zip(self.tables, self._build(self, view)))
+
+    def fold(self, spark: SparkSession, dirs: dict[str, str], keep: int = 1) -> bool:
+        """Fold ``dirs["view"]``'s changes since the watermark into the
+        owned tables at ``dirs[name]``."""
+        return self._fold(spark, self, dirs, keep)
+
+    def serve(self, stored: DataFrame) -> DataFrame:
+        """The ordered serving projection over a stored ``agg`` frame."""
+        return self._serve(self, stored)
+
+
+def member_dirs(
+    root: str, spec: ViewSpec | None, bases: tuple[str, ...] = ("fact", "view")
+) -> dict[str, str]:
+    """The run's tables, one lake dir each under ``root``: ``bases`` plus
+    the tables ``spec`` owns."""
+    names = bases + (spec.tables if spec is not None else ())
+    return {n: os.path.join(root, n) for n in names}
+
+
+def write_spec_tables(
+    spec: ViewSpec, view: DataFrame, dirs: dict[str, str], keep: int = 1
+) -> None:
+    """Build ``spec``'s tables over ``view`` (the frame just written to
+    ``dirs["view"]``) and write each stamped with the view's committed
+    state — the watermark the first fold diffs from. The owned tables are
+    independent of each other, so they land overlapped (§2.6)."""
+    stamp = {"applied_view_state": pending_state(dirs["view"])}
+    overlap(
+        *[
+            lambda t=t, df=df: write_snapshot(
+                df,
+                dirs[t],
+                cluster_by=[GROUP_COL] if t in spec.clustered else None,
+                keep=keep,
+                meta=stamp,
+            )
+            for t, df in spec.build(view).items()
+        ]
+    )
+
+
+def write_view_and_tables(
+    view: DataFrame, dirs: dict[str, str], spec: ViewSpec | None, keep: int = 1
+) -> None:
+    """The view's base snapshot, then ``spec``'s stamped tables over it —
+    chained, because the stamp reads the view's committed state."""
+    write_snapshot(view, dirs["view"], cluster_by=["o_custkey"], keep=keep)
+    if spec is not None:
+        write_spec_tables(spec, view, dirs, keep=keep)
+
+
+def serve_view_tables(
+    spark: SparkSession, dirs: dict[str, str], spec: ViewSpec | None
+) -> DataFrame:
+    """The served result of a maintained run: the view itself, resolved
+    merge-on-read, without a spec; else the spec's projection over its
+    stored aggregate — always the FOLD's state, never a recompute."""
+    if spec is None:
+        return read_current_with_deltas(spark, dirs["view"], key=VIEW_KEY).orderBy(
+            *VIEW_KEY
+        )
+    return spec.serve(read_current(spark, dirs["agg"]))
+
+
+def _join_view_cycle(
+    spark: SparkSession,
+    sf_dir: str,
+    spec: ViewSpec | None = None,
+    mor: bool = False,
+    flatten: bool = False,
+) -> DataFrame:
+    """One batch IVM cycle on driver-checkable data (section comment):
+    set up fact, dim, view and ``spec``'s stamped tables; mutate both
+    bases — the dim appends ``_R`` to every 10th customer's segment, the
+    fact applies the repo's standard CDC batch (every 5th key upserted
+    with doubled total — an insert where the key is outside the base —
+    every 7th non-5th key deleted, the %21 keys proving the unmatched-
+    delete no-op); fold the two change feeds into the view, then the
+    view's feed into ``spec``'s tables; serve. The view's base snapshot
+    must survive the join fold untouched (it lands as deltas only), so
+    every result is served across the fold's own deltas. A spec counting
+    o_orderpriority gets upserts that set it to 'X-RECLASS' instead of
+    doubling o_totalprice (the fact carries the aggregated column).
+
+    - ``mor``: both base mutations land MERGE-ON-READ (``append_delta`` /
+      ``merge_cdc_delta``) and the fold consumes ``pending_changes``,
+      with ``dim_current`` resolved merge-on-read too; otherwise copy-on-
+      write (keep=2) with the snapshot-diff feed (``table_changes``).
+    - ``flatten``: flatten the view's deltas after the folds.
+
+    NULL-custkey facts and childless dim keys drop out of the INNER join
+    identically on both engines."""
+    value = spec.value_col if spec is not None else "o_totalprice"
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", value
+    )
+    # the join-only view serves c_name; the aggregates never read it
+    if spec is None:
+        dim_cols = ["c_custkey", "c_name", "c_mktsegment"]
+    else:
+        dim_cols = ["c_custkey", "c_mktsegment"]
+    dim = load_table(spark, sf_dir, "customer").select(*dim_cols)
+    base_fact = orders.filter(F.col("o_orderkey") % 3 != 0)
+    root = tempfile.mkdtemp(prefix="pgcp_ivm_")
+    dirs = member_dirs(root, spec, bases=("fact", "dim", "view"))
+    try:
+        view0 = base_fact.join(
+            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
+        ).select("o_orderkey", "o_custkey", value, *dim_cols[1:])
+        # fact, dim and the view chain land three INDEPENDENT table sets
+        fact_snap, dim_snap, _ = overlap(
+            lambda: write_snapshot(base_fact, dirs["fact"], keep=2),
+            lambda: write_snapshot(dim, dirs["dim"], keep=2),
+            lambda: write_view_and_tables(view0, dirs, spec),
+        )
+        view_base = current_snapshot(dirs["view"])
+
+        # --- mutations on the base tables ---
+        dim_updates = dim.filter(F.col("c_custkey") % 10 == 0).withColumn(
+            "c_mktsegment", F.concat(F.col("c_mktsegment"), F.lit("_R"))
+        )
+        ups = (
+            orders.filter(F.col("o_orderkey") % 5 == 0)
+            .withColumn(
+                value,
+                F.lit("X-RECLASS")
+                if value == "o_orderpriority"
+                else F.col("o_totalprice") * 2,
+            )
+            .withColumn("_op", F.lit("upsert"))
+        )
+        dels = orders.filter(
+            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
+        ).withColumn("_op", F.lit("delete"))
+        cdc = ups.unionByName(dels)
+        # the dim and fact mutations write disjoint tables — overlapped (§2.6)
+        if mor:
+            overlap(
+                lambda: append_delta(dim_updates, dirs["dim"]),
+                lambda: merge_cdc_delta(spark, dirs["fact"], cdc, key=VIEW_KEY),
+            )
+            fact_feed = pending_changes(spark, dirs["fact"], key=VIEW_KEY)
+            dim_feed = pending_changes(spark, dirs["dim"], key=["c_custkey"])
+            dim_current = read_current_with_deltas(
+                spark, dirs["dim"], key=["c_custkey"]
+            )
+        else:
+            overlap(
+                lambda: upsert(
+                    spark, dirs["dim"], dim_updates, key=["c_custkey"], keep=2
+                ),
+                lambda: merge_cdc(spark, dirs["fact"], cdc, key=VIEW_KEY, keep=2),
+            )
+            fact_feed = table_changes(spark, dirs["fact"], fact_snap, key=VIEW_KEY)
+            dim_feed = table_changes(spark, dirs["dim"], dim_snap, key=["c_custkey"])
+            dim_current = read_current(spark, dirs["dim"])
+
+        # --- the cascade: base feeds → join fold → view feed → spec fold ---
+        fold_join_view(
+            spark,
+            dirs["view"],
+            view_key=VIEW_KEY,
+            fact_feed=fact_feed,
+            dim_feed=dim_feed,
+            dim_current=dim_current,
+            fact_join_col="o_custkey",
+            dim_join_col="c_custkey",
+        )
+        if current_snapshot(dirs["view"]) != view_base:
+            raise RuntimeError("IVM fold must land as deltas, not a view rewrite")
+        # an EMPTY lake legitimately yields an empty feed (the fold returns
+        # False) — the sf0.01 oracle hash is what proves the fold actually
+        # ran and matched on real data, so no non-empty assertion here
+        if spec is not None:
+            spec.fold(spark, dirs)
+        if flatten:
+            flatten_deltas(
+                spark, dirs["view"], key=VIEW_KEY, cluster_by=["o_custkey"]
+            )
+        result = materialize(serve_view_tables(spark, dirs, spec))
+    except BaseException:
+        shutil.rmtree(root, ignore_errors=True)
+        raise
+    reclaim_by_mode(root)
+    return result
+
+
 _JOIN_VIEW_ORACLE = """
 WITH postfact AS (
     SELECT o_orderkey, o_custkey, o_totalprice FROM orders
@@ -312,96 +543,12 @@ ORDER BY f.o_orderkey
     ),
 )
 def lake_incremental_join_view_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end IVM cycle on driver-checkable data. Base fact = orders
-    keys with ``o_orderkey % 3 != 0`` (o_orderkey, o_custkey,
-    o_totalprice); dim = customer (c_custkey, c_name, c_mktsegment);
-    view = fact ⋈ dim on custkey, written CLUSTER BY o_custkey (the
-    dim-arm pruning layout) and keyed by o_orderkey.
-
-    Mutations: the dim upserts a new ``c_mktsegment || '_R'`` for every
-    10th customer; the fact applies the repo's standard CDC batch (every
-    5th key upserted with doubled total — an insert where the key is
-    outside the base — every 7th non-5th key deleted, the %21 keys
-    proving the unmatched-delete no-op). The fold consumes ONLY the two
-    change feeds and the stored view; the view's base snapshot is
-    asserted untouched (explicit raise), so the result the driver hashes
-    was served merge-on-read across the fold's own deltas. NULL-custkey
-    facts and childless dim keys drop out of the INNER join identically
-    on both engines.
-    """
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    base_fact = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_ivm_fact_")
-    dim_dir = tempfile.mkdtemp(prefix="pgcp_ivm_dim_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_ivm_view_")
-
-    def _cleanup() -> None:
-        for d in (fact_dir, dim_dir, view_dir):
-            shutil.rmtree(d, ignore_errors=True)
-
-    try:
-        view0 = base_fact.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select("o_orderkey", "o_custkey", "o_totalprice", "c_name", "c_mktsegment")
-        # setup writes land three INDEPENDENT tables — overlapped (§2.6)
-        fact_snap, dim_snap, _ = overlap(
-            lambda: write_snapshot(base_fact, fact_dir, keep=2),
-            lambda: write_snapshot(dim, dim_dir, keep=2),
-            lambda: write_snapshot(view0, view_dir, cluster_by=["o_custkey"]),
-        )
-        view_base = current_snapshot(view_dir)
-
-        # --- mutations on the base tables ---
-        dim_updates = dim.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "c_mktsegment", F.concat(F.col("c_mktsegment"), F.lit("_R"))
-        )
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
-        # copy-on-write CDC apply with keep=2: the fold consumes the
-        # snapshot-diff feed (table_changes); the merge-on-read CDC source
-        # (pending_changes) plugs into the same fold unchanged. The dim
-        # upsert and the fact CDC write disjoint tables — overlapped (§2.6)
-        overlap(
-            lambda: upsert(spark, dim_dir, dim_updates, key=["c_custkey"], keep=2),
-            lambda: merge_cdc(
-                spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"], keep=2
-            ),
-        )
-
-        # --- the fold: feeds only, base tables never rescanned ---
-        fold_join_view(
-            spark,
-            view_dir,
-            view_key=["o_orderkey"],
-            fact_feed=table_changes(spark, fact_dir, fact_snap, key=["o_orderkey"]),
-            dim_feed=table_changes(spark, dim_dir, dim_snap, key=["c_custkey"]),
-            dim_current=read_current(spark, dim_dir),
-            fact_join_col="o_custkey",
-            dim_join_col="c_custkey",
-        )
-        if current_snapshot(view_dir) != view_base:
-            raise RuntimeError("IVM fold must land as deltas, not a view rewrite")
-        result = materialize(
-            read_current_with_deltas(spark, view_dir, key=["o_orderkey"]).orderBy(
-                "o_orderkey"
-            )
-        )
-    except BaseException:
-        _cleanup()
-        raise
-    reclaim_by_mode(fact_dir, dim_dir, view_dir)
-    return result
+    """The ``_join_view_cycle`` scenario with no aggregate: the fold
+    consumes ONLY the two change feeds and the stored view; the view's
+    base snapshot is asserted untouched (explicit raise), so the result
+    the driver hashes was served merge-on-read across the fold's own
+    deltas."""
+    return _join_view_cycle(spark, sf_dir)
 
 
 # --- cascade IVM: aggregate OVER the maintained join view (round 11) -------
@@ -592,6 +739,16 @@ def stamp_applied_state(
     )
 
 
+AGG_SPEC = ViewSpec(
+    tables=("agg",),
+    _build=lambda s, view: (build_agg_over(view, GROUP_COL, s.value_col),),
+    _fold=lambda spark, s, d, keep: fold_agg_join_view(
+        spark, d["agg"], d["view"], VIEW_KEY, GROUP_COL, s.value_col, keep=keep
+    ),
+    _serve=lambda s, stored: serve_agg(stored, GROUP_COL).orderBy(GROUP_COL),
+)
+
+
 # --- MIN/MAX in the cascade fold (round 12) ---------------------------------
 # The signed fold above covers the sum/count/avg family; MIN/MAX — the
 # other half of every serving dashboard — cannot fold under deletes (a
@@ -698,7 +855,7 @@ def fold_minmax_join_view(
     group list is pushed as an IN filter into the view scan when small
     (``_pruned_by_keys``), so a view laid out CLUSTER BY the group column
     reads only affected files; it is measured against full recompute in
-    tools/minmax_ab.py (SCALE.md r12). The base tables are never read.
+    ``tools/fold_ab.py minmax`` (SCALE.md r12). The base tables are never read.
     """
     from pgcp_spark.operators._decimal import dec
     from pgcp_spark.sources.lake import (
@@ -805,6 +962,16 @@ def fold_minmax_join_view(
     return True
 
 
+MINMAX_SPEC = ViewSpec(
+    tables=("agg",),
+    _build=lambda s, view: (build_minmax_over(view, GROUP_COL, s.value_col),),
+    _fold=lambda spark, s, d, keep: fold_minmax_join_view(
+        spark, d["agg"], d["view"], VIEW_KEY, GROUP_COL, s.value_col, keep=keep
+    ),
+    _serve=lambda s, stored: serve_minmax(stored, GROUP_COL).orderBy(GROUP_COL),
+)
+
+
 _MINMAX_JOIN_VIEW_ORACLE = """
 WITH postfact AS (
     SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DECIMAL(12,2)) AS p
@@ -857,87 +1024,7 @@ def lake_incremental_minmax_join_view_orders(
     least/greatest fold, while its preimages and the deletes remove
     values that tie segment minima/maxima — those groups (and only
     those) rescan through the view."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    base_fact = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_minmax_fact_")
-    dim_dir = tempfile.mkdtemp(prefix="pgcp_minmax_dim_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_minmax_view_")
-    agg_dir = tempfile.mkdtemp(prefix="pgcp_minmax_agg_")
-
-    def _cleanup() -> None:
-        for d in (fact_dir, dim_dir, view_dir, agg_dir):
-            shutil.rmtree(d, ignore_errors=True)
-
-    try:
-        from pgcp_spark.sources.lake import pending_state
-
-        view0 = base_fact.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select("o_orderkey", "o_custkey", "o_totalprice", "c_mktsegment")
-
-        def _view_then_agg() -> None:
-            # the agg stamp reads the view's committed state — chained in
-            # one worker while fact/dim land in the others (§2.6)
-            write_snapshot(view0, view_dir, cluster_by=["o_custkey"])
-            write_snapshot(
-                build_minmax_over(view0, "c_mktsegment", "o_totalprice"),
-                agg_dir,
-                meta={"applied_view_state": pending_state(view_dir)},
-            )
-
-        fact_snap, dim_snap, _ = overlap(
-            lambda: write_snapshot(base_fact, fact_dir, keep=2),
-            lambda: write_snapshot(dim, dim_dir, keep=2),
-            _view_then_agg,
-        )
-
-        dim_updates = dim.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "c_mktsegment", F.concat(F.col("c_mktsegment"), F.lit("_R"))
-        )
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
-        overlap(  # disjoint tables (§2.6)
-            lambda: upsert(spark, dim_dir, dim_updates, key=["c_custkey"], keep=2),
-            lambda: merge_cdc(
-                spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"], keep=2
-            ),
-        )
-
-        fold_join_view(
-            spark,
-            view_dir,
-            view_key=["o_orderkey"],
-            fact_feed=table_changes(spark, fact_dir, fact_snap, key=["o_orderkey"]),
-            dim_feed=table_changes(spark, dim_dir, dim_snap, key=["c_custkey"]),
-            dim_current=read_current(spark, dim_dir),
-            fact_join_col="o_custkey",
-            dim_join_col="c_custkey",
-        )
-        fold_minmax_join_view(
-            spark, agg_dir, view_dir, ["o_orderkey"], "c_mktsegment", "o_totalprice"
-        )
-        from pgcp_spark.sources.lake import flatten_deltas
-
-        flatten_deltas(
-            spark, view_dir, key=["o_orderkey"], cluster_by=["o_custkey"]
-        )
-        result = materialize(
-            read_minmax_agg(spark, agg_dir, "c_mktsegment").orderBy("c_mktsegment")
-        )
-    except BaseException:
-        _cleanup()
-        raise
-    reclaim_by_mode(fact_dir, dim_dir, view_dir, agg_dir)
-    return result
+    return _join_view_cycle(spark, sf_dir, MINMAX_SPEC, flatten=True)
 
 
 _AGG_JOIN_VIEW_ORACLE = """
@@ -998,91 +1085,7 @@ def lake_incremental_agg_join_view_orders(
     shape a fact-feed-only consumer cannot see — the moved orders'
     totals must LEAVE the old segment group and ENTER the '_R' one, and
     only the view feed's pre/post pairs carry that."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    base_fact = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_cascade_fact_")
-    dim_dir = tempfile.mkdtemp(prefix="pgcp_cascade_dim_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_cascade_view_")
-    agg_dir = tempfile.mkdtemp(prefix="pgcp_cascade_agg_")
-
-    def _cleanup() -> None:
-        for d in (fact_dir, dim_dir, view_dir, agg_dir):
-            shutil.rmtree(d, ignore_errors=True)
-
-    try:
-        from pgcp_spark.sources.lake import pending_state
-
-        view0 = base_fact.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select("o_orderkey", "o_custkey", "o_totalprice", "c_mktsegment")
-
-        def _view_then_agg() -> None:
-            # agg stamp reads the committed view state — chained (§2.6)
-            write_snapshot(view0, view_dir, cluster_by=["o_custkey"])
-            write_snapshot(
-                build_agg_over(view0, "c_mktsegment", "o_totalprice"),
-                agg_dir,
-                meta={"applied_view_state": pending_state(view_dir)},
-            )
-
-        fact_snap, dim_snap, _ = overlap(
-            lambda: write_snapshot(base_fact, fact_dir, keep=2),
-            lambda: write_snapshot(dim, dim_dir, keep=2),
-            _view_then_agg,
-        )
-
-        # --- mutations on the base tables (the join-view query's set) ---
-        dim_updates = dim.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "c_mktsegment", F.concat(F.col("c_mktsegment"), F.lit("_R"))
-        )
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
-        overlap(  # disjoint tables (§2.6)
-            lambda: upsert(spark, dim_dir, dim_updates, key=["c_custkey"], keep=2),
-            lambda: merge_cdc(
-                spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"], keep=2
-            ),
-        )
-
-        # --- the cascade: base feeds → join fold → view feed → agg fold ---
-        fold_join_view(
-            spark,
-            view_dir,
-            view_key=["o_orderkey"],
-            fact_feed=table_changes(spark, fact_dir, fact_snap, key=["o_orderkey"]),
-            dim_feed=table_changes(spark, dim_dir, dim_snap, key=["c_custkey"]),
-            dim_current=read_current(spark, dim_dir),
-            fact_join_col="o_custkey",
-            dim_join_col="c_custkey",
-        )
-        # an EMPTY lake legitimately yields an empty feed (fold returns
-        # False) — the sf0.01 oracle hash is what proves the fold actually
-        # ran and matched on real data, so no non-empty assertion here
-        fold_agg_join_view(
-            spark, agg_dir, view_dir, ["o_orderkey"], "c_mktsegment", "o_totalprice"
-        )
-        from pgcp_spark.sources.lake import flatten_deltas
-
-        flatten_deltas(
-            spark, view_dir, key=["o_orderkey"], cluster_by=["o_custkey"]
-        )
-        result = materialize(
-            read_agg(spark, agg_dir, "c_mktsegment").orderBy("c_mktsegment")
-        )
-    except BaseException:
-        _cleanup()
-        raise
-    reclaim_by_mode(fact_dir, dim_dir, view_dir, agg_dir)
-    return result
+    return _join_view_cycle(spark, sf_dir, AGG_SPEC, flatten=True)
 
 
 @register(
@@ -1106,78 +1109,7 @@ def lake_join_view_from_pending_feeds(spark: SparkSession, sf_dir: str) -> DataF
     "plugs into the same fold unchanged"; this is that claim as a driver
     row. ``dim_current`` resolves merge-on-read too, so the fact arm
     rebuilds against the post dim state the deltas imply."""
-    from pgcp_spark.sources.lake import merge_cdc_delta, pending_changes
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    base_fact = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_ivm_mor_fact_")
-    dim_dir = tempfile.mkdtemp(prefix="pgcp_ivm_mor_dim_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_ivm_mor_view_")
-
-    def _cleanup() -> None:
-        for d in (fact_dir, dim_dir, view_dir):
-            shutil.rmtree(d, ignore_errors=True)
-
-    try:
-        view0 = base_fact.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select("o_orderkey", "o_custkey", "o_totalprice", "c_name", "c_mktsegment")
-        overlap(  # three independent tables (§2.6)
-            lambda: write_snapshot(base_fact, fact_dir, keep=2),
-            lambda: write_snapshot(dim, dim_dir, keep=2),
-            lambda: write_snapshot(view0, view_dir, cluster_by=["o_custkey"]),
-        )
-        view_base = current_snapshot(view_dir)
-
-        # --- merge-on-read mutations: base snapshots never rewritten ---
-        dim_updates = dim.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "c_mktsegment", F.concat(F.col("c_mktsegment"), F.lit("_R"))
-        )
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
-        overlap(  # disjoint tables (§2.6)
-            lambda: append_delta(dim_updates, dim_dir),
-            lambda: merge_cdc_delta(
-                spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"]
-            ),
-        )
-
-        # --- the fold: pending (un-flattened) feeds only ---
-        fold_join_view(
-            spark,
-            view_dir,
-            view_key=["o_orderkey"],
-            fact_feed=pending_changes(spark, fact_dir, key=["o_orderkey"]),
-            dim_feed=pending_changes(spark, dim_dir, key=["c_custkey"]),
-            dim_current=read_current_with_deltas(
-                spark, dim_dir, key=["c_custkey"]
-            ),
-            fact_join_col="o_custkey",
-            dim_join_col="c_custkey",
-        )
-        if current_snapshot(view_dir) != view_base:
-            raise RuntimeError("IVM fold must land as deltas, not a view rewrite")
-        result = materialize(
-            read_current_with_deltas(spark, view_dir, key=["o_orderkey"]).orderBy(
-                "o_orderkey"
-            )
-        )
-    except BaseException:
-        _cleanup()
-        raise
-    reclaim_by_mode(fact_dir, dim_dir, view_dir)
-    return result
+    return _join_view_cycle(spark, sf_dir, mor=True)
 
 
 # --- exact COUNT DISTINCT in the cascade fold (round 13) --------------------
@@ -1499,6 +1431,22 @@ def apply_distinct_feed(
     )
 
 
+DISTINCT_SPEC = ViewSpec(
+    tables=("support", "agg"),  # support commits first (crash protocol)
+    _build=lambda s, view: (
+        build_distinct_support(view, GROUP_COL, s.value_col),
+        build_distinct_over(view, GROUP_COL, s.value_col),
+    ),
+    _fold=lambda spark, s, d, keep: fold_distinct_join_view(
+        spark, d["support"], d["agg"], d["view"], VIEW_KEY,
+        GROUP_COL, s.value_col, keep=keep,
+    ),
+    _serve=lambda s, stored: serve_distinct(stored, GROUP_COL).orderBy(GROUP_COL),
+    clustered=("support",),
+    value_col="c_name",
+)
+
+
 _DISTINCT_JOIN_VIEW_ORACLE = """
 WITH postfact AS (
     SELECT o_orderkey, o_custkey, o_orderpriority FROM orders
@@ -1546,96 +1494,9 @@ def lake_incremental_distinct_join_view_orders(
     renaming every 10th customer's segment (whole groups appear and lose
     members). The aggregate is maintained purely from the cascade; the
     driver hash proves fold == recompute."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderpriority"
+    return _join_view_cycle(
+        spark, sf_dir, replace(DISTINCT_SPEC, value_col="o_orderpriority")
     )
-    dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    base_fact = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_dst_fact_")
-    dim_dir = tempfile.mkdtemp(prefix="pgcp_dst_dim_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_dst_view_")
-    sup_dir = tempfile.mkdtemp(prefix="pgcp_dst_sup_")
-    agg_dir = tempfile.mkdtemp(prefix="pgcp_dst_agg_")
-
-    def _cleanup() -> None:
-        for d in (fact_dir, dim_dir, view_dir, sup_dir, agg_dir):
-            shutil.rmtree(d, ignore_errors=True)
-
-    try:
-        from pgcp_spark.sources.lake import pending_state
-
-        view0 = base_fact.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select("o_orderkey", "o_custkey", "o_orderpriority", "c_mktsegment")
-
-        def _view_then_aggs() -> None:
-            # both stamps read the committed view state; the support and
-            # agg tables are themselves independent — chained view first,
-            # then the two downstream writes overlapped (§2.6)
-            write_snapshot(view0, view_dir, cluster_by=["o_custkey"])
-            state0 = pending_state(view_dir)
-            overlap(
-                lambda: write_snapshot(
-                    build_distinct_support(view0, "c_mktsegment", "o_orderpriority"),
-                    sup_dir,
-                    cluster_by=["c_mktsegment"],
-                    meta={"applied_view_state": state0},
-                ),
-                lambda: write_snapshot(
-                    build_distinct_over(view0, "c_mktsegment", "o_orderpriority"),
-                    agg_dir,
-                    meta={"applied_view_state": state0},
-                ),
-            )
-
-        fact_snap, dim_snap, _ = overlap(
-            lambda: write_snapshot(base_fact, fact_dir, keep=2),
-            lambda: write_snapshot(dim, dim_dir, keep=2),
-            _view_then_aggs,
-        )
-
-        dim_updates = dim.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "c_mktsegment", F.concat(F.col("c_mktsegment"), F.lit("_R"))
-        )
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn("o_orderpriority", F.lit("X-RECLASS"))
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
-        overlap(  # disjoint tables (§2.6)
-            lambda: upsert(spark, dim_dir, dim_updates, key=["c_custkey"], keep=2),
-            lambda: merge_cdc(
-                spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"], keep=2
-            ),
-        )
-
-        fold_join_view(
-            spark,
-            view_dir,
-            view_key=["o_orderkey"],
-            fact_feed=table_changes(spark, fact_dir, fact_snap, key=["o_orderkey"]),
-            dim_feed=table_changes(spark, dim_dir, dim_snap, key=["c_custkey"]),
-            dim_current=read_current(spark, dim_dir),
-            fact_join_col="o_custkey",
-            dim_join_col="c_custkey",
-        )
-        fold_distinct_join_view(
-            spark, sup_dir, agg_dir, view_dir, ["o_orderkey"],
-            "c_mktsegment", "o_orderpriority",
-        )
-        result = materialize(
-            read_distinct_agg(spark, agg_dir, "c_mktsegment").orderBy(
-                "c_mktsegment"
-            )
-        )
-    except BaseException:
-        _cleanup()
-        raise
-    reclaim_by_mode(fact_dir, dim_dir, view_dir, sup_dir, agg_dir)
-    return result
 
 
 # --- per-group TOP-K in the cascade fold (round 13) -------------------------
@@ -1882,6 +1743,24 @@ def fold_topk_join_view(
     return True
 
 
+TOPK_K = 3  # the served top-k depth (the oracle's rnk <= 3)
+
+TOPK_SPEC = ViewSpec(
+    tables=("agg",),
+    _build=lambda s, view: (
+        build_topk_over(view, GROUP_COL, VIEW_KEY[0], s.value_col, TOPK_K),
+    ),
+    _fold=lambda spark, s, d, keep: fold_topk_join_view(
+        spark, d["agg"], d["view"], VIEW_KEY,
+        GROUP_COL, VIEW_KEY[0], s.value_col, TOPK_K, keep=keep,
+    ),
+    _serve=lambda s, stored: serve_topk(stored, GROUP_COL, VIEW_KEY[0]).orderBy(
+        GROUP_COL, "rnk"
+    ),
+    clustered=("agg",),
+)
+
+
 _TOPK_JOIN_VIEW_ORACLE = """
 WITH postfact AS (
     SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DECIMAL(12,2)) AS p
@@ -1940,84 +1819,4 @@ def lake_incremental_topk_join_view_orders(
     rescan; renaming every 10th customer's segment moves rows between
     groups, driving both arms at once). The served ranking is the
     FOLD's, never a recompute; the driver hash proves fold == recompute."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    base_fact = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_topk_fact_")
-    dim_dir = tempfile.mkdtemp(prefix="pgcp_topk_dim_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_topk_view_")
-    agg_dir = tempfile.mkdtemp(prefix="pgcp_topk_agg_")
-
-    def _cleanup() -> None:
-        for d in (fact_dir, dim_dir, view_dir, agg_dir):
-            shutil.rmtree(d, ignore_errors=True)
-
-    try:
-        from pgcp_spark.sources.lake import pending_state
-
-        view0 = base_fact.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select("o_orderkey", "o_custkey", "o_totalprice", "c_mktsegment")
-
-        def _view_then_agg() -> None:
-            # agg stamp reads the committed view state — chained (§2.6)
-            write_snapshot(view0, view_dir, cluster_by=["o_custkey"])
-            write_snapshot(
-                build_topk_over(
-                    view0, "c_mktsegment", "o_orderkey", "o_totalprice", 3
-                ),
-                agg_dir,
-                cluster_by=["c_mktsegment"],
-                meta={"applied_view_state": pending_state(view_dir)},
-            )
-
-        fact_snap, dim_snap, _ = overlap(
-            lambda: write_snapshot(base_fact, fact_dir, keep=2),
-            lambda: write_snapshot(dim, dim_dir, keep=2),
-            _view_then_agg,
-        )
-
-        dim_updates = dim.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "c_mktsegment", F.concat(F.col("c_mktsegment"), F.lit("_R"))
-        )
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
-        overlap(  # disjoint tables (§2.6)
-            lambda: upsert(spark, dim_dir, dim_updates, key=["c_custkey"], keep=2),
-            lambda: merge_cdc(
-                spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"], keep=2
-            ),
-        )
-
-        fold_join_view(
-            spark,
-            view_dir,
-            view_key=["o_orderkey"],
-            fact_feed=table_changes(spark, fact_dir, fact_snap, key=["o_orderkey"]),
-            dim_feed=table_changes(spark, dim_dir, dim_snap, key=["c_custkey"]),
-            dim_current=read_current(spark, dim_dir),
-            fact_join_col="o_custkey",
-            dim_join_col="c_custkey",
-        )
-        fold_topk_join_view(
-            spark, agg_dir, view_dir, ["o_orderkey"],
-            "c_mktsegment", "o_orderkey", "o_totalprice", 3,
-        )
-        result = materialize(
-            serve_topk(
-                read_current(spark, agg_dir), "c_mktsegment", "o_orderkey"
-            ).orderBy("c_mktsegment", "rnk")
-        )
-    except BaseException:
-        _cleanup()
-        raise
-    reclaim_by_mode(fact_dir, dim_dir, view_dir, agg_dir)
-    return result
+    return _join_view_cycle(spark, sf_dir, TOPK_SPEC)

@@ -5,14 +5,19 @@ JOIN-view layer (``sources/view_maintenance.py``), the way each index
 family got its ingest loop: CDC batches arrive as a stream of files;
 each micro-batch (a) applies its batches to the fact's lake table
 MERGE-ON-READ (``merge_cdc_delta`` — data delta + tombstone, base
-untouched) and (b) folds the SAME batch through ``fold_join_view`` into
-the materialized ``fact ⋈ dim`` view, so the view tracks the fact with
-CDC-batch latency and no base-table rescans anywhere in the loop.
+untouched), (b) folds the SAME batch through ``fold_join_view`` into
+the materialized ``fact ⋈ dim`` view, and (c) when a ``ViewSpec`` is
+given, folds the view's changes into that aggregate kind's tables — so
+view and aggregate track the fact with CDC-batch latency and no
+base-table rescans anywhere in the loop. One driver runs every variant:
+``run_ingest_view(spark, sf_dir, spec, txn)``.
 
     readStream(files) ──► foreachBatch, per CDC batch IN SEQ ORDER:
         merge_cdc_delta(fact, batch)           # fact stays current
         fold_join_view(view, batch-as-feed)    # view stays current
+        spec.fold(view → spec tables)          # aggregate stays current
         loop.maybe_flatten(view)               # self-healing cadence
+        [txn] occ_commit_group(members)        # one atomic publish
 
 Design decisions, inherited from the loop family:
 
@@ -33,14 +38,24 @@ Design decisions, inherited from the loop family:
   batch-at-a-time (pinned in tests/test_ingest_view.py).
 - **At-least-once replay converges**: ``merge_cdc_delta`` replay is
   documented convergent, and the view fold's re-appended deltas shadow
-  their twins through newest-wins (the IVM replay pin).
+  their twins through newest-wins (the IVM replay pin); the spec fold
+  sees the shadow deltas as an empty state diff and skips.
+- **The group commit is fold- and arity-agnostic.** Per-table commits
+  let a reader between the fact's delta commit and the aggregate's fold
+  commit see fact-advanced/agg-stale — the torn window ``sources/txn.py``
+  retires for batch transactions. With ``txn`` each complete CDC batch is
+  ONE group transaction: the per-table writes land first (invisible to
+  manifest-resolved readers), then one ``occ_commit_group`` publishes
+  {fact, view, *spec tables} atomically, whatever the spec — a
+  ``read_group`` reader racing the stream observes only batch-consistent
+  states (pinned in tests/test_ingest_view.py).
 
-The registered query's end state has a FULL SQL twin — the view after
-three sequential CDC batches (price-doubling upserts, retention deletes,
-then a re-pricing batch that also RESURRECTS some deleted keys and
-inserts outside the base) must hash-match the join of the post-CDC fact
-state with the dim, recomputed from the raw tables. A streaming
-materialized-view pipeline, driver-checked bit-for-bit.
+Every registered query's end state has a FULL SQL twin — the view (or
+its aggregate) after three sequential CDC batches (price-doubling
+upserts, retention deletes, then a re-pricing batch that also
+RESURRECTS some deleted keys and inserts outside the base) must
+hash-match the post-CDC join recomputed from the raw tables, and a
+group-commit query shares its per-table twin's oracle.
 """
 
 from __future__ import annotations
@@ -56,13 +71,25 @@ from pgcp_spark.plans.materialize import materialize
 from pgcp_spark.plans.overlap import overlap
 from pgcp_spark.registry import register
 from pgcp_spark.sources import load_table
-from pgcp_spark.sources.lake import (
-    merge_cdc_delta,
-    read_current,
-    read_current_with_deltas,
-    write_snapshot,
+from pgcp_spark.sources.lake import merge_cdc_delta, write_snapshot
+from pgcp_spark.sources.txn import (
+    commit_group,
+    occ_commit_group,
+    read_group,
+    table_state,
 )
-from pgcp_spark.sources.view_maintenance import fold_join_view
+from pgcp_spark.sources.view_maintenance import (
+    AGG_SPEC,
+    DISTINCT_SPEC,
+    GROUP_COL,
+    MINMAX_SPEC,
+    ViewSpec,
+    fold_join_view,
+    member_dirs,
+    serve_view_tables,
+    stamp_applied_state,
+    write_view_and_tables,
+)
 
 VIEW_COLS = ["o_orderkey", "o_custkey", "o_totalprice", "c_name", "c_mktsegment"]
 
@@ -107,22 +134,18 @@ def apply_cdc_batches(
     on_flatten=None,
     after_batch=None,
 ) -> None:
-    """THE per-seq CDC apply loop, shared by every streaming variant in
-    this module (plain view, cascade, MIN/MAX cascade, transactional —
-    the four used to be near-identical copies, and their semantic
-    equivalence is a contract the shared-oracle hash checks rely on):
-    apply every COMPLETE CDC batch in the micro-batch IN SEQ ORDER
+    """THE per-seq CDC apply loop under ``fold_view_batch``: apply every
+    COMPLETE CDC batch in the micro-batch IN SEQ ORDER
     (module docstring: coalesced delivery must split — merge_cdc_delta
     is per-batch key-unique, and later batches overwrite earlier keys),
     landing merge-on-read on the fact and folding the join view; a CDC
     batch is its own change feed (upsert → update_postimage, delete →
     delete). The seq scan is bounded by the number of staged batches.
 
-    Per batch, in this order (matching all four original copies):
-    view fold → ``after_fold()`` (the downstream consumer's fold) →
+    Per batch, in this order: view fold → ``after_fold()`` (the downstream consumer's fold) →
     ``maybe_flatten`` → ``on_flatten()`` iff it fired (watermark
-    re-anchoring) → ``after_batch()`` (the transactional variant's
-    group publish — it must see post-flatten states).
+    re-anchoring) → ``after_batch()`` (the transactional group publish —
+    it must see post-flatten states).
 
     ``micro_batch`` must be DETERMINISTIC under re-evaluation (the
     merge_cdc_delta contract): every caller passes either a file-stream
@@ -184,22 +207,82 @@ def apply_cdc_batches(
 def fold_view_batch(
     spark: SparkSession,
     micro_batch: DataFrame,
-    fact_dir: str,
-    view_dir: str,
+    root: str,
     dim: DataFrame,
+    spec: ViewSpec | None = None,
+    txn: bool = False,
 ) -> None:
-    """The plain view-maintenance loop: the shared apply loop with no
-    downstream consumer."""
-    apply_cdc_batches(spark, micro_batch, fact_dir, view_dir, dim)
+    """One micro-batch of the run laid out under ``root``
+    (``member_dirs``): the shared apply loop, plus ``spec``'s fold after
+    each CDC batch's view fold, plus — when the self-healing flatten
+    fires — the re-stamp of every table ``spec`` owns (the flatten
+    preserves data but renames the view state, and the re-stamp keeps
+    the next fold on the prefix-pruned path). ``txn`` adds the group
+    publish LAST, so the manifest pins post-flatten states. The stream
+    is the group's single writer, so ``occ_commit_group``'s compute just
+    captures the live post states; the CAS still guards against an
+    operator accidentally racing a second owner (detect, never lose)."""
+    dirs = member_dirs(root, spec)
+    # RETENTION, decided once here: under txn a group-manifest reader
+    # pins the PREVIOUS publish's downstream snapshots, and one publish
+    # window can land TWO commits per owned table (the fold + the
+    # flatten's re-stamp) — keep must exceed commits-per-publish (the
+    # BM25 group fold's rule), so keep=3 (keep=1 GC'd the pinned
+    # snapshot under a racing reader). A per-table stream has no pinned
+    # reader: the per-table default.
+    keep = 3 if txn else 1
+    after_fold = on_flatten = after_batch = None
+    if spec is not None:
+
+        def after_fold() -> None:
+            spec.fold(spark, dirs, keep)
+
+        def on_flatten() -> None:
+            # the owned tables re-anchor independently to the same
+            # committed view state — overlapped (§2.6)
+            overlap(
+                *[
+                    lambda t=t: stamp_applied_state(
+                        spark, dirs[t], dirs["view"], keep=keep
+                    )
+                    for t in spec.tables
+                ]
+            )
+
+    if txn:
+
+        def after_batch() -> None:
+            occ_commit_group(
+                root, lambda _state: {n: table_state(root, n) for n in dirs}
+            )
+
+    apply_cdc_batches(
+        spark,
+        micro_batch,
+        dirs["fact"],
+        dirs["view"],
+        dim,
+        after_fold=after_fold,
+        on_flatten=on_flatten,
+        after_batch=after_batch,
+    )
 
 
 def run_ingest_view(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = 1
-) -> tuple[str, str]:
-    """Build the fact lake + initial view, stream the CDC batches through
-    the fold, return (fact_dir, view_dir). The caller owns both dirs.
+    spark: SparkSession,
+    sf_dir: str,
+    spec: ViewSpec | None = None,
+    txn: bool = False,
+    max_files_per_trigger: int | None = 1,
+) -> str:
+    """Build the fact lake, the initial view and ``spec``'s stamped
+    tables, stream the CDC batches through ``fold_view_batch``, and
+    return the run dir holding one lake table per member
+    (``member_dirs``; the caller owns it). With ``txn`` the run dir is a
+    transaction group: the initial states are group-committed before the
+    stream starts and every CDC batch publishes through the manifest.
     ``max_files_per_trigger=None`` coalesces all batches into one
-    micro-batch — the ordered sub-batch split must make the final view
+    micro-batch — the ordered sub-batch split must make the end state
     bit-identical (pinned)."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -208,8 +291,11 @@ def run_ingest_view(
         "c_custkey", "c_name", "c_mktsegment"
     )
     base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_ingest_view_fact_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_ingest_view_view_")
+    root = tempfile.mkdtemp(prefix="pgcp_ingest_view_")
+    dirs = member_dirs(root, spec)
+    # the initial snapshots of a group keep one commit of grace for the
+    # manifest reader pinned to them; a per-table run uses the default
+    keep = 2 if txn else 1
     staging = None
     try:
         view0 = base.join(
@@ -225,26 +311,49 @@ def run_ingest_view(
                 batches, F.col("seq"), range(3), "pgcp_ingest_view_stream_"
             )
 
-        overlap(  # fact lake, view lake, CDC staging: independent (§2.6)
-            lambda: write_snapshot(base, fact_dir),
-            lambda: write_snapshot(view0, view_dir, cluster_by=["o_custkey"]),
+        overlap(  # fact lake, view + spec tables, CDC staging: independent (§2.6)
+            lambda: write_snapshot(base, dirs["fact"], keep=keep),
+            lambda: write_view_and_tables(view0, dirs, spec, keep=keep),
             _stage,
         )
+        if txn:
+            # the group manifest needs every member's state — after the join
+            commit_group(root, {n: table_state(root, n) for n in dirs})
         loop.run_availablenow_stream(
             spark,
             staging,
             batches.schema,
-            lambda mb, _bid: fold_view_batch(spark, mb, fact_dir, view_dir, dim),
+            lambda mb, _bid: fold_view_batch(spark, mb, root, dim, spec, txn),
             max_files_per_trigger,
         )
     except BaseException:
-        shutil.rmtree(fact_dir, ignore_errors=True)
-        shutil.rmtree(view_dir, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
         raise
     finally:
         if staging is not None:
             shutil.rmtree(staging, ignore_errors=True)
-    return fact_dir, view_dir
+    return root
+
+
+def _serve_stream(
+    spark: SparkSession, sf_dir: str, spec: ViewSpec | None = None, txn: bool = False
+) -> DataFrame:
+    """Run the stream and serve what it maintained: per-table runs read
+    the live tables; group runs read the aggregate through the final
+    manifest (``read_group``)."""
+    root = run_ingest_view(spark, sf_dir, spec, txn)
+    try:
+        if txn:
+            pinned = read_group(spark, root, {"agg": [GROUP_COL]})
+            served = spec.serve(pinned["agg"])
+        else:
+            served = serve_view_tables(spark, member_dirs(root, spec), spec)
+        result = materialize(served)
+    except BaseException:
+        shutil.rmtree(root, ignore_errors=True)
+        raise
+    loop.reclaim_by_mode(root)
+    return result
 
 
 _STREAM_VIEW_ORACLE = """
@@ -279,129 +388,7 @@ def streaming_join_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     sequential CDC batches — including same-key overwrites, a
     delete-then-resurrect arc, and out-of-base inserts — and serve the
     view the STREAM maintained, merge-on-read."""
-    fact_dir, view_dir = run_ingest_view(spark, sf_dir)
-    try:
-        result = materialize(
-            read_current_with_deltas(spark, view_dir, key=["o_orderkey"]).orderBy(
-                "o_orderkey"
-            )
-        )
-    except BaseException:
-        shutil.rmtree(fact_dir, ignore_errors=True)
-        shutil.rmtree(view_dir, ignore_errors=True)
-        raise
-    loop.reclaim_by_mode(fact_dir, view_dir)
-    return result
-
-
-# --- streaming CASCADE: aggregate over the stream-maintained view (r11) ----
-
-
-def fold_agg_view_batch(
-    spark: SparkSession,
-    micro_batch: DataFrame,
-    fact_dir: str,
-    view_dir: str,
-    agg_dir: str,
-    dim: DataFrame,
-) -> None:
-    """``fold_view_batch`` plus the cascade: after each complete CDC
-    batch folds the view, the aggregate folds the view's changes SINCE
-    ITS WATERMARK (``state_changes`` — no flatten needed in between),
-    and when the self-healing flatten fires the watermark re-anchors
-    (``stamp_applied_state``) so the next fold stays on the prefix-
-    pruned path. At-least-once replay converges end to end: the view's
-    shadow deltas change the STATE id but not the data, so the cascade
-    fold sees an empty diff and skips."""
-    from pgcp_spark.sources.view_maintenance import (
-        fold_agg_join_view,
-        stamp_applied_state,
-    )
-
-    apply_cdc_batches(
-        spark,
-        micro_batch,
-        fact_dir,
-        view_dir,
-        dim,
-        # RETENTION: the group-manifest reader pins the PREVIOUS
-        # publish's agg snapshot, and one publish window can land TWO
-        # agg snapshot commits (the fold's upsert + the flatten's
-        # re-stamp) — keep must exceed commits-per-publish (the BM25
-        # group fold's rule), so keep=3, not the per-table default of 1
-        # (which GC'd the pinned snapshot under a racing reader)
-        after_fold=lambda: fold_agg_join_view(
-            spark, agg_dir, view_dir, ["o_orderkey"], "c_mktsegment",
-            "o_totalprice", keep=3,
-        ),
-        on_flatten=lambda: stamp_applied_state(
-            spark, agg_dir, view_dir, keep=3
-        ),
-    )
-
-
-def run_ingest_agg_view(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = 1
-) -> tuple[str, str, str]:
-    """Build fact + view + the stamped aggregate, stream the CDC batches
-    through the cascade fold, return (fact_dir, view_dir, agg_dir)."""
-    from pgcp_spark.sources.lake import pending_state
-    from pgcp_spark.sources.view_maintenance import build_agg_over
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_ingest_casc_fact_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_ingest_casc_view_")
-    agg_dir = tempfile.mkdtemp(prefix="pgcp_ingest_casc_agg_")
-    staging = None
-    try:
-        view0 = base.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select(*VIEW_COLS)
-        batches = _cdc_batches(orders)
-
-        def _view_then_agg() -> None:
-            # agg stamp reads the committed view state — chained
-            write_snapshot(view0, view_dir, cluster_by=["o_custkey"])
-            write_snapshot(
-                build_agg_over(view0, "c_mktsegment", "o_totalprice"),
-                agg_dir,
-                meta={"applied_view_state": pending_state(view_dir)},
-            )
-
-        def _stage() -> None:
-            nonlocal staging
-            staging = loop.stage_group_files(
-                batches, F.col("seq"), range(3), "pgcp_ingest_casc_stream_"
-            )
-
-        overlap(  # independent setup segments (§2.6)
-            lambda: write_snapshot(base, fact_dir),
-            _view_then_agg,
-            _stage,
-        )
-        loop.run_availablenow_stream(
-            spark,
-            staging,
-            batches.schema,
-            lambda mb, _bid: fold_agg_view_batch(
-                spark, mb, fact_dir, view_dir, agg_dir, dim
-            ),
-            max_files_per_trigger,
-        )
-    except BaseException:
-        for d in (fact_dir, view_dir, agg_dir):
-            shutil.rmtree(d, ignore_errors=True)
-        raise
-    finally:
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
-    return fact_dir, view_dir, agg_dir
+    return _serve_stream(spark, sf_dir)
 
 
 _STREAM_AGG_VIEW_ORACLE = """
@@ -448,123 +435,7 @@ def streaming_agg_join_view_maintenance(
     batches — same-key overwrites, delete-then-resurrect, out-of-base
     inserts — maintain fact, join view, AND the per-segment aggregate,
     and the served aggregate is the STREAM's fold, never a recompute."""
-    from pgcp_spark.sources.view_maintenance import read_agg
-
-    fact_dir, view_dir, agg_dir = run_ingest_agg_view(spark, sf_dir)
-    try:
-        result = materialize(
-            read_agg(spark, agg_dir, "c_mktsegment").orderBy("c_mktsegment")
-        )
-    except BaseException:
-        for d in (fact_dir, view_dir, agg_dir):
-            shutil.rmtree(d, ignore_errors=True)
-        raise
-    loop.reclaim_by_mode(fact_dir, view_dir, agg_dir)
-    return result
-
-
-# --- streaming MIN/MAX cascade (round 12): the non-signed twin -------------
-
-
-def fold_minmax_view_batch(
-    spark: SparkSession,
-    micro_batch: DataFrame,
-    fact_dir: str,
-    view_dir: str,
-    agg_dir: str,
-    dim: DataFrame,
-) -> None:
-    """``fold_agg_view_batch`` with the MIN/MAX fold as the downstream
-    consumer: after each complete CDC batch folds the view, the min/max
-    aggregate folds the view's changes since ITS watermark — inserts via
-    least/greatest, bound-tying removals rescanning only their groups
-    through the view (``fold_minmax_join_view``); the self-healing
-    flatten re-anchors the watermark exactly like the signed twin."""
-    from pgcp_spark.sources.view_maintenance import (
-        fold_minmax_join_view,
-        stamp_applied_state,
-    )
-
-    apply_cdc_batches(
-        spark,
-        micro_batch,
-        fact_dir,
-        view_dir,
-        dim,
-        # RETENTION: same keep-exceeds-commits-per-publish rule as the
-        # signed transactional variant above
-        after_fold=lambda: fold_minmax_join_view(
-            spark, agg_dir, view_dir, ["o_orderkey"], "c_mktsegment",
-            "o_totalprice", keep=3,
-        ),
-        on_flatten=lambda: stamp_applied_state(
-            spark, agg_dir, view_dir, keep=3
-        ),
-    )
-
-
-def run_ingest_minmax_view(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = 1
-) -> tuple[str, str, str]:
-    """Build fact + view + the stamped MIN/MAX aggregate, stream the CDC
-    batches through the fold, return (fact_dir, view_dir, agg_dir)."""
-    from pgcp_spark.sources.lake import pending_state
-    from pgcp_spark.sources.view_maintenance import build_minmax_over
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_ingest_mm_fact_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_ingest_mm_view_")
-    agg_dir = tempfile.mkdtemp(prefix="pgcp_ingest_mm_agg_")
-    staging = None
-    try:
-        view0 = base.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select(*VIEW_COLS)
-        batches = _cdc_batches(orders)
-
-        def _view_then_agg() -> None:
-            # agg stamp reads the committed view state — chained
-            write_snapshot(view0, view_dir, cluster_by=["o_custkey"])
-            write_snapshot(
-                build_minmax_over(view0, "c_mktsegment", "o_totalprice"),
-                agg_dir,
-                meta={"applied_view_state": pending_state(view_dir)},
-            )
-
-        def _stage() -> None:
-            nonlocal staging
-            staging = loop.stage_group_files(
-                batches, F.col("seq"), range(3), "pgcp_ingest_mm_stream_"
-            )
-
-        overlap(  # independent setup segments (§2.6)
-            lambda: write_snapshot(base, fact_dir),
-            _view_then_agg,
-            _stage,
-        )
-        loop.run_availablenow_stream(
-            spark,
-            staging,
-            batches.schema,
-            lambda mb, _bid: fold_minmax_view_batch(
-                spark, mb, fact_dir, view_dir, agg_dir, dim
-            ),
-            max_files_per_trigger,
-        )
-    except BaseException:
-        for d in (fact_dir, view_dir, agg_dir):
-            shutil.rmtree(d, ignore_errors=True)
-        raise
-    finally:
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
-    return fact_dir, view_dir, agg_dir
+    return _serve_stream(spark, sf_dir, AGG_SPEC)
 
 
 _STREAM_MINMAX_VIEW_ORACLE = """
@@ -609,154 +480,7 @@ def streaming_minmax_join_view_maintenance(
     delete-then-resurrect and re-pricing arcs are exactly the shapes
     that force selective rescans, and the served bounds are the
     STREAM's fold, never a recompute."""
-    from pgcp_spark.sources.view_maintenance import read_minmax_agg
-
-    fact_dir, view_dir, agg_dir = run_ingest_minmax_view(spark, sf_dir)
-    try:
-        result = materialize(
-            read_minmax_agg(spark, agg_dir, "c_mktsegment").orderBy(
-                "c_mktsegment"
-            )
-        )
-    except BaseException:
-        for d in (fact_dir, view_dir, agg_dir):
-            shutil.rmtree(d, ignore_errors=True)
-        raise
-    loop.reclaim_by_mode(fact_dir, view_dir, agg_dir)
-    return result
-
-
-# --- streaming cascade THROUGH the group commit (round 12) -----------------
-# The r11 loop above lands per-micro-batch commits per table: a reader
-# between the fact's delta commit and the agg's fold commit sees
-# fact-advanced/agg-stale — exactly the torn window ``sources/txn.py``
-# retires for batch transactions. This variant makes each complete CDC
-# batch ONE group transaction: the per-table writes land first (invisible
-# to manifest-resolved readers), then one ``occ_commit_group`` publishes
-# the {fact, view, agg} post states atomically — a ``read_group`` reader
-# racing the stream observes only batch-consistent trios (pinned in
-# tests/test_ingest_view.py), and the served result is the manifest's.
-
-
-def fold_agg_view_batch_txn(
-    spark: SparkSession,
-    micro_batch: DataFrame,
-    gdir: str,
-    dim: DataFrame,
-) -> None:
-    """``fold_agg_view_batch`` with the trio commit routed through the
-    group manifest, one transaction per complete CDC batch. The stream
-    is the group's single writer, so ``occ_commit_group``'s compute just
-    captures the three live post states; the CAS still guards against an
-    operator accidentally racing a second owner (detect, never lose)."""
-    import os
-
-    from pgcp_spark.sources.txn import occ_commit_group, table_state
-    from pgcp_spark.sources.view_maintenance import (
-        fold_agg_join_view,
-        stamp_applied_state,
-    )
-
-    fact_dir = os.path.join(gdir, "fact")
-    view_dir = os.path.join(gdir, "view")
-    agg_dir = os.path.join(gdir, "agg")
-    apply_cdc_batches(
-        spark,
-        micro_batch,
-        fact_dir,
-        view_dir,
-        dim,
-        # RETENTION: the group-manifest reader pins the PREVIOUS
-        # publish's agg snapshot, and one publish window can land TWO
-        # agg snapshot commits (the fold's upsert + the flatten's
-        # re-stamp) — keep must exceed commits-per-publish (the BM25
-        # group fold's rule), so keep=3, not the per-table default of 1
-        # (which GC'd the pinned snapshot under a racing reader)
-        after_fold=lambda: fold_agg_join_view(
-            spark, agg_dir, view_dir, ["o_orderkey"], "c_mktsegment",
-            "o_totalprice", keep=3,
-        ),
-        on_flatten=lambda: stamp_applied_state(
-            spark, agg_dir, view_dir, keep=3
-        ),
-        # the publish runs LAST so the manifest pins post-flatten states
-        after_batch=lambda: occ_commit_group(
-            gdir,
-            lambda _state: {
-                n: table_state(gdir, n) for n in ("fact", "view", "agg")
-            },
-        ),
-    )
-
-
-def run_ingest_agg_view_txn(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = 1
-) -> str:
-    """Build the {fact, view, agg} group (initial states group-committed),
-    stream the CDC batches through the transactional cascade fold, and
-    return the group dir (caller owns it)."""
-    import os
-
-    from pgcp_spark.sources.lake import pending_state
-    from pgcp_spark.sources.txn import commit_group, table_state
-    from pgcp_spark.sources.view_maintenance import build_agg_over
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    gdir = tempfile.mkdtemp(prefix="pgcp_ingest_txn_casc_")
-    staging = None
-    try:
-        view0 = base.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select(*VIEW_COLS)
-        batches = _cdc_batches(orders)
-
-        def _view_then_agg() -> None:
-            # agg stamp reads the committed view state — chained
-            write_snapshot(
-                view0, os.path.join(gdir, "view"), cluster_by=["o_custkey"], keep=2
-            )
-            write_snapshot(
-                build_agg_over(view0, "c_mktsegment", "o_totalprice"),
-                os.path.join(gdir, "agg"),
-                keep=2,
-                meta={"applied_view_state": pending_state(os.path.join(gdir, "view"))},
-            )
-
-        def _stage() -> None:
-            nonlocal staging
-            staging = loop.stage_group_files(
-                batches, F.col("seq"), range(3), "pgcp_ingest_txn_casc_stream_"
-            )
-
-        overlap(  # independent setup segments (§2.6)
-            lambda: write_snapshot(base, os.path.join(gdir, "fact"), keep=2),
-            _view_then_agg,
-            _stage,
-        )
-        # the group manifest needs all three member states — after the join
-        commit_group(
-            gdir, {n: table_state(gdir, n) for n in ("fact", "view", "agg")}
-        )
-        loop.run_availablenow_stream(
-            spark,
-            staging,
-            batches.schema,
-            lambda mb, _bid: fold_agg_view_batch_txn(spark, mb, gdir, dim),
-            max_files_per_trigger,
-        )
-    except BaseException:
-        shutil.rmtree(gdir, ignore_errors=True)
-        raise
-    finally:
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
-    return gdir
+    return _serve_stream(spark, sf_dir, MINMAX_SPEC)
 
 
 @register(
@@ -777,139 +501,7 @@ def streaming_cascade_group_commit(spark: SparkSession, sf_dir: str) -> DataFram
     same three sequential CDC batches as the per-table loop, but served
     through the manifest-pinned group read — the end state must be
     hash-identical to the non-transactional stream's."""
-    from pgcp_spark.sources.txn import read_group
-    from pgcp_spark.sources.view_maintenance import serve_agg
-
-    gdir = run_ingest_agg_view_txn(spark, sf_dir)
-    try:
-        pinned = read_group(spark, gdir, {"agg": ["c_mktsegment"]})
-        result = materialize(
-            serve_agg(pinned["agg"], "c_mktsegment").orderBy("c_mktsegment")
-        )
-    except BaseException:
-        shutil.rmtree(gdir, ignore_errors=True)
-        raise
-    loop.reclaim_by_mode(gdir)
-    return result
-
-
-def fold_minmax_view_batch_txn(
-    spark: SparkSession,
-    micro_batch: DataFrame,
-    gdir: str,
-    dim: DataFrame,
-) -> None:
-    """The MIN/MAX cascade through the group commit — PURE COMPOSITION
-    (round 13): ``fold_minmax_view_batch``'s after_fold/on_flatten hooks
-    with ``fold_agg_view_batch_txn``'s after_batch publish, through the
-    one shared ``apply_cdc_batches`` loop. Nothing minmax-specific
-    touches the transactional plumbing and nothing transactional touches
-    the fold — proving the group commit is fold-agnostic is exactly this
-    function being hook-wiring only."""
-    import os
-
-    from pgcp_spark.sources.txn import occ_commit_group, table_state
-    from pgcp_spark.sources.view_maintenance import (
-        fold_minmax_join_view,
-        stamp_applied_state,
-    )
-
-    fact_dir = os.path.join(gdir, "fact")
-    view_dir = os.path.join(gdir, "view")
-    agg_dir = os.path.join(gdir, "agg")
-    apply_cdc_batches(
-        spark,
-        micro_batch,
-        fact_dir,
-        view_dir,
-        dim,
-        # RETENTION: same keep-exceeds-commits-per-publish rule as the
-        # signed transactional variant above
-        after_fold=lambda: fold_minmax_join_view(
-            spark, agg_dir, view_dir, ["o_orderkey"], "c_mktsegment",
-            "o_totalprice", keep=3,
-        ),
-        on_flatten=lambda: stamp_applied_state(
-            spark, agg_dir, view_dir, keep=3
-        ),
-        # the publish runs LAST so the manifest pins post-flatten states
-        after_batch=lambda: occ_commit_group(
-            gdir,
-            lambda _state: {
-                n: table_state(gdir, n) for n in ("fact", "view", "agg")
-            },
-        ),
-    )
-
-
-def run_ingest_minmax_view_txn(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = 1
-) -> str:
-    """Build the {fact, view, minmax-agg} group (initial states
-    group-committed), stream the CDC batches through the transactional
-    MIN/MAX cascade, return the group dir (caller owns it)."""
-    import os
-
-    from pgcp_spark.sources.lake import pending_state
-    from pgcp_spark.sources.txn import commit_group, table_state
-    from pgcp_spark.sources.view_maintenance import build_minmax_over
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    gdir = tempfile.mkdtemp(prefix="pgcp_ingest_txn_mm_")
-    staging = None
-    try:
-        view0 = base.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select(*VIEW_COLS)
-        batches = _cdc_batches(orders)
-
-        def _view_then_agg() -> None:
-            # agg stamp reads the committed view state — chained
-            write_snapshot(
-                view0, os.path.join(gdir, "view"), cluster_by=["o_custkey"], keep=2
-            )
-            write_snapshot(
-                build_minmax_over(view0, "c_mktsegment", "o_totalprice"),
-                os.path.join(gdir, "agg"),
-                keep=2,
-                meta={"applied_view_state": pending_state(os.path.join(gdir, "view"))},
-            )
-
-        def _stage() -> None:
-            nonlocal staging
-            staging = loop.stage_group_files(
-                batches, F.col("seq"), range(3), "pgcp_ingest_txn_mm_stream_"
-            )
-
-        overlap(  # independent setup segments (§2.6)
-            lambda: write_snapshot(base, os.path.join(gdir, "fact"), keep=2),
-            _view_then_agg,
-            _stage,
-        )
-        # the group manifest needs all three member states — after the join
-        commit_group(
-            gdir, {n: table_state(gdir, n) for n in ("fact", "view", "agg")}
-        )
-        loop.run_availablenow_stream(
-            spark,
-            staging,
-            batches.schema,
-            lambda mb, _bid: fold_minmax_view_batch_txn(spark, mb, gdir, dim),
-            max_files_per_trigger,
-        )
-    except BaseException:
-        shutil.rmtree(gdir, ignore_errors=True)
-        raise
-    finally:
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
-    return gdir
+    return _serve_stream(spark, sf_dir, AGG_SPEC, txn=True)
 
 
 @register(
@@ -930,145 +522,7 @@ def streaming_minmax_cascade_group_commit(
     MIN/MAX fold composed with the group publish, served through the
     manifest-pinned group read — end state must be hash-identical to
     ``streaming_minmax_join_view_maintenance``."""
-    from pgcp_spark.sources.txn import read_group
-    from pgcp_spark.sources.view_maintenance import serve_minmax
-
-    gdir = run_ingest_minmax_view_txn(spark, sf_dir)
-    try:
-        pinned = read_group(spark, gdir, {"agg": ["c_mktsegment"]})
-        result = materialize(
-            serve_minmax(pinned["agg"], "c_mktsegment").orderBy("c_mktsegment")
-        )
-    except BaseException:
-        shutil.rmtree(gdir, ignore_errors=True)
-        raise
-    loop.reclaim_by_mode(gdir)
-    return result
-
-
-# --- streaming COUNT DISTINCT cascade (round 13) ---------------------------
-
-
-def fold_distinct_view_batch(
-    spark: SparkSession,
-    micro_batch: DataFrame,
-    fact_dir: str,
-    view_dir: str,
-    sup_dir: str,
-    agg_dir: str,
-    dim: DataFrame,
-) -> None:
-    """``fold_agg_view_batch`` with the exact-COUNT-DISTINCT fold as the
-    downstream consumer: after each complete CDC batch folds the view,
-    the support table folds the view's multiplicity deltas and the
-    distinct count folds the 0-to-present / present-to-0 transitions
-    (``fold_distinct_join_view``) — deletes exact from the support's own
-    evidence, no rescan, the view never re-read. The self-healing
-    flatten re-anchors BOTH stored tables' watermarks."""
-    from pgcp_spark.sources.view_maintenance import (
-        fold_distinct_join_view,
-        stamp_applied_state,
-    )
-
-    def _restamp() -> None:
-        # two independent tables re-anchoring to the same committed view
-        # state — overlapped (§2.6)
-        overlap(
-            lambda: stamp_applied_state(spark, sup_dir, view_dir),
-            lambda: stamp_applied_state(spark, agg_dir, view_dir),
-        )
-
-    apply_cdc_batches(
-        spark,
-        micro_batch,
-        fact_dir,
-        view_dir,
-        dim,
-        after_fold=lambda: fold_distinct_join_view(
-            spark, sup_dir, agg_dir, view_dir, ["o_orderkey"],
-            "c_mktsegment", "c_name",
-        ),
-        on_flatten=_restamp,
-    )
-
-
-def run_ingest_distinct_view(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = 1
-) -> tuple[str, str, str, str]:
-    """Build fact + view + the stamped support/distinct-agg pair, stream
-    the CDC batches through the fold, return (fact, view, support, agg)
-    dirs."""
-    from pgcp_spark.sources.lake import pending_state
-    from pgcp_spark.sources.view_maintenance import (
-        build_distinct_over,
-        build_distinct_support,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    fact_dir = tempfile.mkdtemp(prefix="pgcp_ingest_dst_fact_")
-    view_dir = tempfile.mkdtemp(prefix="pgcp_ingest_dst_view_")
-    sup_dir = tempfile.mkdtemp(prefix="pgcp_ingest_dst_sup_")
-    agg_dir = tempfile.mkdtemp(prefix="pgcp_ingest_dst_agg_")
-    staging = None
-    try:
-        view0 = base.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select(*VIEW_COLS)
-        batches = _cdc_batches(orders)
-
-        def _view_then_aggs() -> None:
-            # both stamps read the committed view state; support and agg
-            # are independent tables — view first, then the two overlapped
-            write_snapshot(view0, view_dir, cluster_by=["o_custkey"])
-            state0 = pending_state(view_dir)
-            overlap(
-                lambda: write_snapshot(
-                    build_distinct_support(view0, "c_mktsegment", "c_name"),
-                    sup_dir,
-                    cluster_by=["c_mktsegment"],
-                    meta={"applied_view_state": state0},
-                ),
-                lambda: write_snapshot(
-                    build_distinct_over(view0, "c_mktsegment", "c_name"),
-                    agg_dir,
-                    meta={"applied_view_state": state0},
-                ),
-            )
-
-        def _stage() -> None:
-            nonlocal staging
-            staging = loop.stage_group_files(
-                batches, F.col("seq"), range(3), "pgcp_ingest_dst_stream_"
-            )
-
-        overlap(  # independent setup segments (§2.6)
-            lambda: write_snapshot(base, fact_dir),
-            _view_then_aggs,
-            _stage,
-        )
-        loop.run_availablenow_stream(
-            spark,
-            staging,
-            batches.schema,
-            lambda mb, _bid: fold_distinct_view_batch(
-                spark, mb, fact_dir, view_dir, sup_dir, agg_dir, dim
-            ),
-            max_files_per_trigger,
-        )
-    except BaseException:
-        for d in (fact_dir, view_dir, sup_dir, agg_dir):
-            shutil.rmtree(d, ignore_errors=True)
-        raise
-    finally:
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
-    return fact_dir, view_dir, sup_dir, agg_dir
+    return _serve_stream(spark, sf_dir, MINMAX_SPEC, txn=True)
 
 
 _STREAM_DISTINCT_VIEW_ORACLE = """
@@ -1107,164 +561,7 @@ def streaming_distinct_join_view_maintenance(
     drives the same (segment, customer) pair through present-to-0 and
     back to 0-to-present across micro-batches, and the served counts
     are the STREAM's fold, never a recompute."""
-    from pgcp_spark.sources.view_maintenance import read_distinct_agg
-
-    dirs = run_ingest_distinct_view(spark, sf_dir)
-    try:
-        result = materialize(
-            read_distinct_agg(spark, dirs[3], "c_mktsegment").orderBy(
-                "c_mktsegment"
-            )
-        )
-    except BaseException:
-        for d in dirs:
-            shutil.rmtree(d, ignore_errors=True)
-        raise
-    loop.reclaim_by_mode(*dirs)
-    return result
-
-
-# --- distinct cascade THROUGH the group commit (round 13) ------------------
-# The first transactional fold whose downstream state is TWO tables: the
-# group is {fact, view, support, agg} — a FOUR-member manifest — and one
-# publish pins the quartet. Proves the group commit is arity-agnostic as
-# well as fold-agnostic: the support/agg pair's own two-commit crash
-# protocol stays intact per table, while the manifest makes the pair
-# (and the view and fact) mutually consistent for readers.
-
-
-def fold_distinct_view_batch_txn(
-    spark: SparkSession,
-    micro_batch: DataFrame,
-    gdir: str,
-    dim: DataFrame,
-) -> None:
-    """``fold_distinct_view_batch``'s hooks composed with the group
-    publish through the shared ``apply_cdc_batches`` loop — hook wiring
-    only, like the signed and MIN/MAX transactional variants. keep=3 on
-    every downstream commit: the support takes ONE commit and the agg
-    one-or-two (fold + flatten re-stamp) per publish window, and the
-    pinned previous-publish snapshots must survive all of them."""
-    import os
-
-    from pgcp_spark.sources.txn import occ_commit_group, table_state
-    from pgcp_spark.sources.view_maintenance import (
-        fold_distinct_join_view,
-        stamp_applied_state,
-    )
-
-    fact_dir = os.path.join(gdir, "fact")
-    view_dir = os.path.join(gdir, "view")
-    sup_dir = os.path.join(gdir, "support")
-    agg_dir = os.path.join(gdir, "agg")
-
-    def _restamp() -> None:
-        # two independent tables re-anchoring to the same committed view
-        # state — overlapped (§2.6)
-        overlap(
-            lambda: stamp_applied_state(spark, sup_dir, view_dir, keep=3),
-            lambda: stamp_applied_state(spark, agg_dir, view_dir, keep=3),
-        )
-
-    apply_cdc_batches(
-        spark,
-        micro_batch,
-        fact_dir,
-        view_dir,
-        dim,
-        after_fold=lambda: fold_distinct_join_view(
-            spark, sup_dir, agg_dir, view_dir, ["o_orderkey"],
-            "c_mktsegment", "c_name", keep=3,
-        ),
-        on_flatten=_restamp,
-        after_batch=lambda: occ_commit_group(
-            gdir,
-            lambda _state: {
-                n: table_state(gdir, n)
-                for n in ("fact", "view", "support", "agg")
-            },
-        ),
-    )
-
-
-def run_ingest_distinct_view_txn(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = 1
-) -> str:
-    """Build the {fact, view, support, agg} group (initial states
-    group-committed), stream the CDC batches through the transactional
-    distinct cascade, return the group dir (caller owns it)."""
-    import os
-
-    from pgcp_spark.sources.lake import pending_state
-    from pgcp_spark.sources.txn import commit_group, table_state
-    from pgcp_spark.sources.view_maintenance import (
-        build_distinct_over,
-        build_distinct_support,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    gdir = tempfile.mkdtemp(prefix="pgcp_ingest_txn_dst_")
-    staging = None
-    try:
-        view0 = base.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
-        ).select(*VIEW_COLS)
-
-        def _view_then_aggs() -> None:
-            # both stamps read the committed view state; support and agg
-            # are independent tables — view first, then the two overlapped
-            write_snapshot(
-                view0, os.path.join(gdir, "view"), cluster_by=["o_custkey"], keep=2
-            )
-            state0 = pending_state(os.path.join(gdir, "view"))
-            overlap(
-                lambda: write_snapshot(
-                    build_distinct_support(view0, "c_mktsegment", "c_name"),
-                    os.path.join(gdir, "support"),
-                    cluster_by=["c_mktsegment"],
-                    keep=2,
-                    meta={"applied_view_state": state0},
-                ),
-                lambda: write_snapshot(
-                    build_distinct_over(view0, "c_mktsegment", "c_name"),
-                    os.path.join(gdir, "agg"),
-                    keep=2,
-                    meta={"applied_view_state": state0},
-                ),
-            )
-
-        overlap(  # independent setup segments (§2.6)
-            lambda: write_snapshot(base, os.path.join(gdir, "fact"), keep=2),
-            _view_then_aggs,
-        )
-        commit_group(
-            gdir,
-            {n: table_state(gdir, n) for n in ("fact", "view", "support", "agg")},
-        )
-        batches = _cdc_batches(orders)
-        staging = loop.stage_group_files(
-            batches, F.col("seq"), range(3), "pgcp_ingest_txn_dst_stream_"
-        )
-        loop.run_availablenow_stream(
-            spark,
-            staging,
-            batches.schema,
-            lambda mb, _bid: fold_distinct_view_batch_txn(spark, mb, gdir, dim),
-            max_files_per_trigger,
-        )
-    except BaseException:
-        shutil.rmtree(gdir, ignore_errors=True)
-        raise
-    finally:
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
-    return gdir
+    return _serve_stream(spark, sf_dir, DISTINCT_SPEC)
 
 
 @register(
@@ -1287,42 +584,18 @@ def streaming_distinct_cascade_group_commit(
     the group publish, served through the manifest-pinned group read —
     end state must be hash-identical to
     ``streaming_distinct_join_view_maintenance``."""
-    from pgcp_spark.sources.txn import read_group
-    from pgcp_spark.sources.view_maintenance import serve_distinct
-
-    gdir = run_ingest_distinct_view_txn(spark, sf_dir)
-    try:
-        pinned = read_group(spark, gdir, {"agg": ["c_mktsegment"]})
-        result = materialize(
-            serve_distinct(pinned["agg"], "c_mktsegment").orderBy(
-                "c_mktsegment"
-            )
-        )
-    except BaseException:
-        shutil.rmtree(gdir, ignore_errors=True)
-        raise
-    loop.reclaim_by_mode(gdir)
-    return result
+    return _serve_stream(spark, sf_dir, DISTINCT_SPEC, txn=True)
 
 
-# read_current is imported for tests (post-stream fact state assertions)
 __all__ = [
     "apply_cdc_batches",
     "fold_view_batch",
-    "fold_agg_view_batch",
-    "fold_agg_view_batch_txn",
-    "fold_minmax_view_batch_txn",
-    "fold_distinct_view_batch",
-    "fold_distinct_view_batch_txn",
     "run_ingest_view",
-    "run_ingest_agg_view",
-    "run_ingest_agg_view_txn",
-    "run_ingest_minmax_view_txn",
-    "run_ingest_distinct_view",
-    "run_ingest_distinct_view_txn",
     "streaming_join_view_maintenance",
     "streaming_agg_join_view_maintenance",
+    "streaming_minmax_join_view_maintenance",
     "streaming_cascade_group_commit",
     "streaming_minmax_cascade_group_commit",
-    "read_current",
+    "streaming_distinct_join_view_maintenance",
+    "streaming_distinct_cascade_group_commit",
 ]

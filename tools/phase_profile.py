@@ -53,7 +53,40 @@ def _wrap(mod, fn_name, spark):
         finally:
             _unlabel(spark)
 
-    setattr(mod, fn_name, wrapped)
+    _rebind(fn_name, fn, wrapped)
+
+
+def _rebind(fn_name, fn, wrapped):
+    # a module that imported ``fn`` by name calls it through its own binding
+    for m in list(sys.modules.values()):
+        mod_name = getattr(m, "__name__", "")
+        if mod_name.startswith("pgcp_spark") and getattr(m, fn_name, None) is fn:
+            setattr(m, fn_name, wrapped)
+
+
+def _inherit_labels(spark):
+    """Make ``overlap``'s pool threads start from the caller's label
+    stack (the stack is thread-local), so a primitive's overlapped
+    writes stay attributed to it."""
+    import pgcp_spark.plans.overlap as ov
+
+    fn = ov.overlap
+
+    @functools.wraps(fn)
+    def wrapped(*thunks):
+        parent = list(getattr(_tls, "stack", None) or [])
+
+        def labeled(thunk):
+            def run():
+                _tls.stack = list(parent)
+                spark.sparkContext.setJobDescription(" > ".join(parent) or None)
+                return thunk()
+
+            return run
+
+        return fn(*[labeled(t) for t in thunks])
+
+    _rebind("overlap", fn, wrapped)
 
 
 def main() -> None:
@@ -82,6 +115,7 @@ def main() -> None:
     import pgcp_spark.streaming.ingest_view as iv
     from pgcp_spark.indexes import loop
 
+    _inherit_labels(spark)
     for mod, names in (
         (lake, ["write_snapshot", "append_delta", "delete_delta",
                 "merge_cdc_delta", "flatten_deltas", "upsert", "merge_cdc",
@@ -90,17 +124,19 @@ def main() -> None:
         (vm, ["fold_join_view", "fold_agg_join_view", "fold_minmax_join_view",
               "fold_distinct_join_view", "fold_topk_join_view",
               "apply_distinct_feed", "_collected_keys",
-              "stamp_applied_state"]),
+              "stamp_applied_state", "write_spec_tables"]),
         (ti, ["update_text_index", "remove_from_text_index", "_write_tables",
               "_write_stats_from_doclen", "fold_text_index_from_docs_state",
               "build_text_index_from", "bm25_from_index", "bm25_over_frames"]),
         (mat, ["materialize"]),
         (loop, ["stage_group_files", "maybe_flatten"]),
-        (iv, ["apply_cdc_batches"]),
+        (iv, ["fold_view_batch", "apply_cdc_batches"]),
     ):
         for fn_name in names:
-            if hasattr(mod, fn_name):
-                _wrap(mod, fn_name, spark)
+            # a renamed primitive must fail loudly, not drop its attribution
+            if not hasattr(mod, fn_name):
+                raise SystemExit(f"phase_profile: {mod.__name__}.{fn_name} not found")
+            _wrap(mod, fn_name, spark)
 
     if warm:
         q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

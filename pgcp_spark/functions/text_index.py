@@ -827,14 +827,15 @@ def text_bm25_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CDC-driven maintenance (round 12): the index fold consuming the
 # documents LAKE TABLE's state diff instead of explicit batches — proving
 # the `state_changes` primitive composes with the index loops exactly as
-# it does with the cascade aggregate. The watermark discipline is the
-# cascade's (`applied_docs_state` stamped into a commit's meta — here the
-# stats table, the index's LAST-committed table), but unlike the signed
-# aggregate fold this one tolerates AT-LEAST-ONCE replay of a diff: the
-# posting fold's shadow deltas and the remove's absent-id no-op are both
-# replay-convergent, so a crash between the constituent folds and the
-# stamp re-folds the same diff and converges — the watermark here buys
-# O(batch) incrementality (never re-reading old diffs), not correctness.
+# it does with the cascade aggregate. The watermark protocol is the
+# cascade's own (`lake.unapplied_changes`, with `applied_docs_state`
+# stamped into the stats table's commit meta — the index's LAST-committed
+# table), but unlike the signed aggregate fold this one tolerates
+# AT-LEAST-ONCE replay of a diff: the posting fold's shadow deltas and the
+# remove's absent-id no-op are both replay-convergent, so a crash between
+# the constituent folds and the stamp re-folds the same diff and
+# converges — the watermark here buys O(batch) incrementality (never
+# re-reading old diffs), not correctness.
 # ---------------------------------------------------------------------------
 
 
@@ -849,33 +850,15 @@ def fold_text_index_from_docs_state(
     False on an already-applied state or an empty diff; raises on a
     missing or GC'd watermark (the cascade fold's refuse contract —
     rebuild from the lake or re-stamp after a flatten)."""
-    from pgcp_spark.sources.lake import (
-        pending_state,
-        snapshot_meta,
-        state_changes,
-    )
+    from pgcp_spark.sources.lake import unapplied_changes
 
-    state = pending_state(docs_dir)
-    stats_dir = os.path.join(index_dir, "stats")
-    applied = snapshot_meta(stats_dir).get("applied_docs_state")
-    if applied == state:
+    got = unapplied_changes(
+        spark, docs_dir, os.path.join(index_dir, "stats"), ["doc_id"],
+        "applied_docs_state",
+    )
+    if got is None:
         return False
-    if applied is None:
-        raise RuntimeError(
-            f"{index_dir}: no applied_docs_state watermark (never stamped, "
-            "or cleared by a metaless stats commit) — rebuild the index "
-            "from the lake (build_text_index_from + a stamped stats "
-            "commit) rather than guessing a fold window."
-        )
-    try:
-        feed = state_changes(spark, docs_dir, applied, state, key=["doc_id"])
-    except FileNotFoundError as exc:
-        raise RuntimeError(
-            "the index's applied documents state is no longer readable (a "
-            "flatten/vacuum GC'd it) — re-stamp after each docs flatten, "
-            "or rebuild from the lake."
-        ) from exc
-    feed = materialize(feed)
+    state, feed = got
     meta = {"applied_docs_state": state}
     # ONE change-type presence probe over the checkpointed feed (r14)
     # replaces the two isEmpty jobs the r13 shape paid

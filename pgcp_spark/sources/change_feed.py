@@ -29,9 +29,22 @@ from pgcp_spark.sources import load_table
 from pgcp_spark.sources.lake import (
     delete,
     merge_cdc,
+    read_current,
     table_changes,
     upsert,
     write_snapshot,
+)
+from pgcp_spark.sources.view_maintenance import (
+    apply_agg_feed,
+    apply_distinct_feed,
+    apply_minmax_feed,
+    build_agg_over,
+    build_distinct_over,
+    build_distinct_support,
+    build_minmax_over,
+    read_distinct_agg,
+    serve_agg,
+    serve_minmax,
 )
 
 _ORACLE = """
@@ -149,11 +162,10 @@ def _run_incremental_agg(spark: SparkSession, sf_dir: str, mutate) -> DataFrame:
     """Shared harness for the incremental-aggregate queries: build the
     base fact snapshot + its aggregate table, apply ``mutate(fact_dir,
     orders)`` (any combination of lake writers), fold the resulting
-    change feed into the aggregate, return it. The fold is mutation-
+    change feed into the aggregate with the signed core
+    ``view_maintenance.apply_agg_feed``, return it. The fold is mutation-
     agnostic by construction — it consumes only ``_change_type`` signs —
     which is exactly the property the delete-bearing variant proves."""
-    from pgcp_spark.operators._decimal import dec
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -166,71 +178,14 @@ def _run_incremental_agg(spark: SparkSession, sf_dir: str, mutate) -> DataFrame:
         shutil.rmtree(agg_dir, ignore_errors=True)
 
     try:
-        zero = F.lit(0).cast("decimal(18,2)")
-        # internal ledger: NULL-price rows contribute 0 to sum_dec but are
-        # tracked in priced_cnt, so "SUM over only NULLs is NULL" (ANSI)
-        # survives the fold — the nulls lake caught the version that
-        # conflated sum-of-nothing with sum-of-zero
         snap_a = write_snapshot(base, fact_dir, keep=3)
-        write_snapshot(
-            base.filter(F.col("o_custkey").isNotNull())
-            .groupBy("o_custkey")
-            .agg(
-                F.coalesce(F.sum(dec("o_totalprice", "decimal(18,2)")), zero).alias(
-                    "sum_dec"
-                ),
-                F.count("o_totalprice").alias("priced_cnt"),
-                F.count(F.lit(1)).alias("order_cnt"),
-            ),
-            agg_dir,
-        )
+        write_snapshot(build_agg_over(base, "o_custkey", "o_totalprice"), agg_dir)
         mutate(fact_dir, orders)
         feed = table_changes(spark, fact_dir, snap_a, key=["o_orderkey"])
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-        ).otherwise(F.lit(-1))
-        deltas = (
-            feed.filter(F.col("o_custkey").isNotNull())
-            .groupBy("o_custkey")
-            .agg(
-                F.coalesce(
-                    F.sum(sign * F.coalesce(dec("o_totalprice", "decimal(18,2)"), zero)),
-                    zero,
-                ).alias("d_sum"),
-                F.sum(
-                    sign * F.col("o_totalprice").isNotNull().cast("int")
-                ).alias("d_priced"),
-                F.sum(sign).alias("d_cnt"),
-            )
-        )
-        from pgcp_spark.sources.lake import read_current
-
-        stored = read_current(spark, agg_dir)
-        touched = (
-            stored.join(deltas, "o_custkey", "right_outer")
-            .select(
-                "o_custkey",
-                (F.coalesce(F.col("sum_dec"), zero) + F.col("d_sum"))
-                .cast("decimal(18,2)")
-                .alias("sum_dec"),
-                (F.coalesce(F.col("priced_cnt"), F.lit(0)) + F.col("d_priced")).alias(
-                    "priced_cnt"
-                ),
-                (F.coalesce(F.col("order_cnt"), F.lit(0)) + F.col("d_cnt")).alias(
-                    "order_cnt"
-                ),
-            )
-        )
-        upsert(spark, agg_dir, touched, key=["o_custkey"])
+        apply_agg_feed(spark, agg_dir, feed, "o_custkey", "o_totalprice")
         result = materialize(
-            read_current(spark, agg_dir)
-            .filter(F.col("order_cnt") > 0)
-            .select(
-                "o_custkey",
-                F.when(F.col("priced_cnt") > 0, F.col("sum_dec").cast("double"))
-                .alias("sum_totalprice"),
-                "order_cnt",
-            )
+            serve_agg(read_current(spark, agg_dir), "o_custkey")
+            .toDF("o_custkey", "sum_totalprice", "order_cnt")
             .orderBy("o_custkey")
         )
     except BaseException:
@@ -238,6 +193,7 @@ def _run_incremental_agg(spark: SparkSession, sf_dir: str, mutate) -> DataFrame:
         raise
     reclaim_by_mode(fact_dir, agg_dir)
     return result
+
 
 _DELETE_ORACLE = """
 WITH o AS (SELECT o_orderkey, o_totalprice FROM orders)
@@ -333,10 +289,10 @@ def lake_incremental_agg_orders_cdc(spark: SparkSession, sf_dir: str) -> DataFra
     batch marking every 5th key an upsert (doubled total) and every 7th
     non-5th key a delete (WHEN MATCHED THEN DELETE; the %21 keys outside
     the base prove the unmatched-delete no-op). The fold itself is the
-    SHARED harness — identical sign logic — so a hash match proves the
-    subtract arm handles ``delete`` rows exactly as it handles
-    ``update_preimage`` (full-row removal vs value replacement), which
-    the delete-free original could never show."""
+    signed core every signed fold shares (``apply_agg_feed``), so a hash
+    match proves the subtract arm handles ``delete`` rows exactly as it
+    handles ``update_preimage`` (full-row removal vs value replacement),
+    which the delete-free original could never show."""
 
     def mutate(fact_dir: str, orders: DataFrame) -> None:
         ups = (
@@ -502,22 +458,14 @@ FROM post GROUP BY o_custkey ORDER BY o_custkey
     ),
 )
 def lake_incremental_minmax_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cascade's MIN/MAX split applied to the simplest consumer
-    shape — a per-customer min/max/count maintained straight from the
-    fact's snapshot-diff feed. The CDC batch (every 5th key doubled,
-    every non-5th 7th deleted) exercises both arms: doubled postimages
-    raise maxima through the fold; their preimages and the deletes
-    remove values that tie group bounds, and exactly those groups rescan
-    from the fact (pushed-IN + the CLUSTER BY o_custkey layout, so the
-    rescan reads only affected files)."""
-    from pgcp_spark.operators._decimal import dec
-    from pgcp_spark.sources.lake import read_current
-    from pgcp_spark.sources.view_maintenance import (
-        _pruned_by_keys,
-        build_minmax_over,
-        minmax_rescan_groups,
-    )
-
+    """The cascade's MIN/MAX core (``apply_minmax_feed``) applied to the
+    simplest consumer shape — a per-customer min/max/count maintained
+    straight from the fact's snapshot-diff feed. The CDC batch (every
+    5th key doubled, every non-5th 7th deleted) exercises both arms:
+    doubled postimages raise maxima through the fold; their preimages
+    and the deletes remove values that tie group bounds, and exactly
+    those groups rescan from the fact (pushed-IN + the CLUSTER BY
+    o_custkey layout, so the rescan reads only affected files)."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -548,74 +496,16 @@ def lake_incremental_minmax_orders(spark: SparkSession, sf_dir: str) -> DataFram
             spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"],
             keep=3, cluster_by=["o_custkey"],
         )
-
         feed = table_changes(spark, fact_dir, snap_a, key=["o_orderkey"])
-        post = F.col("_change_type").isin("insert", "update_postimage")
-        pre = F.col("_change_type").isin("delete", "update_preimage")
-        val = dec("o_totalprice", "decimal(18,2)")
-        deltas = (
-            feed.filter(F.col("o_custkey").isNotNull())
-            .groupBy("o_custkey")
-            .agg(
-                F.min(F.when(post, val)).alias("ins_min"),
-                F.max(F.when(post, val)).alias("ins_max"),
-                F.min(F.when(pre, val)).alias("rm_min"),
-                F.max(F.when(pre, val)).alias("rm_max"),
-                F.sum(F.when(post, 1).otherwise(-1)).alias("d_cnt"),
-            )
+        # the rescan source is the FACT itself here
+        apply_minmax_feed(
+            spark, agg_dir, feed, "o_custkey", "o_totalprice",
+            rescan_source=lambda: read_current(spark, fact_dir),
         )
-        stored = read_current(spark, agg_dir)
-        touched, rescan = minmax_rescan_groups(stored, deltas, "o_custkey")
-        folded = materialize(
-            touched.select(
-                "o_custkey",
-                rescan.alias("_rescan"),
-                F.least(F.col("min_dec"), F.col("ins_min")).alias("min_dec"),
-                F.greatest(F.col("max_dec"), F.col("ins_max")).alias("max_dec"),
-                (F.coalesce(F.col("order_cnt"), F.lit(0)) + F.col("d_cnt")).alias(
-                    "order_cnt"
-                ),
-            )
-        )
-        rescan_keys = folded.filter(F.col("_rescan")).select("o_custkey")
-        if rescan_keys.isEmpty():
-            out = folded.drop("_rescan")
-        else:
-            # the rescan source is the FACT itself here — pruned to the
-            # endangered groups (pushed-IN reaches the CLUSTER BY
-            # o_custkey footers; semi-join keeps correctness if the
-            # probe declines the literal list)
-            fact_now = _pruned_by_keys(
-                read_current(spark, fact_dir), "o_custkey", rescan_keys
-            ).join(rescan_keys, on="o_custkey", how="left_semi")
-            rescanned = build_minmax_over(
-                fact_now, "o_custkey", "o_totalprice"
-            ).select(
-                "o_custkey",
-                F.col("min_dec").alias("r_min"),
-                F.col("max_dec").alias("r_max"),
-            )
-            out = folded.join(rescanned, on="o_custkey", how="left").select(
-                "o_custkey",
-                F.when(F.col("_rescan"), F.col("r_min"))
-                .otherwise(F.col("min_dec"))
-                .alias("min_dec"),
-                F.when(F.col("_rescan"), F.col("r_max"))
-                .otherwise(F.col("max_dec"))
-                .alias("max_dec"),
-                "order_cnt",
-            )
-        upsert(spark, agg_dir, out, key=["o_custkey"])
         result = materialize(
-            read_current(spark, agg_dir)
-            .filter(F.col("order_cnt") > 0)
-            .select(
-                "o_custkey",
-                F.col("min_dec").cast("double").alias("min_total"),
-                F.col("max_dec").cast("double").alias("max_total"),
-                "order_cnt",
+            serve_minmax(read_current(spark, agg_dir), "o_custkey").orderBy(
+                "o_custkey"
             )
-            .orderBy("o_custkey")
         )
     except BaseException:
         _cleanup()
@@ -661,13 +551,6 @@ def lake_incremental_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFr
     gains multiplicity in the new group and loses it in the old — both
     transition kinds fire when a customer's LAST order in a priority
     moves) and deletes every non-5th 7th."""
-    from pgcp_spark.sources.view_maintenance import (
-        apply_distinct_feed,
-        build_distinct_over,
-        build_distinct_support,
-        read_distinct_agg,
-    )
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )

@@ -1511,7 +1511,8 @@ def state_changes(
     between the states) falls back to the full keyed diff — correct,
     and it costs what ``table_changes`` always costs; the cascade avoids
     it by re-stamping after each flatten
-    (``view_maintenance.stamp_applied_state``)."""
+    (``view_maintenance.stamp_applied_state``). The folds reach it
+    through ``unapplied_changes``."""
     f_snap, f_deltas = _parse_state(from_state)
     t_snap, t_deltas = _parse_state(to_state)
     if from_state == to_state:
@@ -1598,6 +1599,58 @@ def state_changes(
         old_p = old_p.dropDuplicates(key)
     new_p = _merge_deltas(old_p, raw_fresh, key)
     return _keyed_diff(old_p, new_p, cols, key)
+
+
+def unapplied_changes(
+    spark: SparkSession,
+    src_dir: str,
+    stamped_dir: str,
+    key: list[str],
+    meta_key: str,
+) -> tuple[str, DataFrame] | None:
+    """The exactly-once watermark protocol every downstream fold shares
+    (the cascade aggregates over a maintained view, the BM25 index over
+    the documents lake): a fold stamps the ``pending_state`` of
+    ``src_dir`` it consumed into ``stamped_dir``'s commit meta under
+    ``meta_key``. Returns ``(current state, materialized state_changes
+    feed since the stamp)`` — the feed may be empty — or None when the
+    stamp IS the current state (an at-least-once replay, skipped).
+
+    Refuses (RuntimeError) rather than guess a fold window: on a MISSING
+    watermark — meta is per-snapshot and does not carry forward, so any
+    metaless commit (a compaction, a manual ``write_snapshot``) clears
+    it, and folding the full feed from there would double-count every
+    applied change; and on a stamped state a flatten/vacuum GC'd — the
+    owner re-anchors right after each flatten of the source, which also
+    keeps the next diff on the prefix-pruned path. Recovery from either:
+    rebuild from the source with a stamped ``write_snapshot``, or
+    re-stamp if the stored state is KNOWN current."""
+    from pgcp_spark.plans.materialize import materialize
+
+    state = pending_state(src_dir)
+    applied = snapshot_meta(stamped_dir).get(meta_key)
+    if applied == state:
+        return None
+    if applied is None:
+        raise RuntimeError(
+            f"{stamped_dir}: no {meta_key} watermark (never stamped at "
+            "build time, or cleared by a metaless commit) — refusing to "
+            "fold the full feed, which would double-count already-applied "
+            "changes. Rebuild from the source with a stamped "
+            "write_snapshot, or re-stamp if the stored state is KNOWN "
+            "current."
+        )
+    try:
+        feed = state_changes(spark, src_dir, applied, state, key=key)
+    except FileNotFoundError as exc:
+        raise RuntimeError(
+            f"{stamped_dir}: the applied state of {src_dir} is no longer "
+            "readable (a flatten/vacuum GC'd it). Re-anchor the watermark "
+            "after each flatten (stamp_applied_state for a view aggregate), "
+            "or rebuild from the source. Refusing to guess — a blind "
+            "re-fold double-counts."
+        ) from exc
+    return state, materialize(feed)
 
 
 def _shapes_of(raw: list[tuple[int, DataFrame]], key: list[str]):

@@ -66,7 +66,9 @@ from pgcp_spark.sources.lake import (
     pending_state,
     read_current,
     read_current_with_deltas,
+    snapshot_meta,
     table_changes,
+    unapplied_changes,
     upsert,
     write_snapshot,
 )
@@ -557,13 +559,16 @@ def lake_incremental_join_view_orders(spark: SparkSession, sf_dir: str) -> DataF
 # for a downstream aggregate — ``lake.pending_changes`` classifies them as
 # insert / delete / update pre+post, and the signed fold (+1 post, -1 pre)
 # maintains ``A = groupBy(g)(fact ⋈ dim)`` for the price of the feed,
-# never rescanning the view. Exactly-once across crashes rides on the
-# lake's commit metadata: the fold stamps the view state id it consumed
-# (``pending_state``) into the aggregate's own atomic commit, so an
-# at-least-once replay of the same feed is detected and skipped — the
-# Delta txnAppId/txnVersion idiom reduced to this layer. Protocol: the
-# fold-then-flatten pair is the view's single maintenance owner (the
-# index-loop discipline); flatten consumes the feed, arming the next fold.
+# never rescanning the view. Exactly-once across crashes is
+# ``lake.unapplied_changes``: every fold below stamps the view state id it
+# consumed (``pending_state``) into its own atomic commit under
+# ``applied_view_state``, so an at-least-once replay of the same feed is
+# detected and skipped — the Delta txnAppId/txnVersion idiom reduced to
+# this layer. Each kind is that call plus a feed-agnostic core
+# (``apply_*_feed``), which the direct fact-feed twins in
+# ``change_feed.py`` drive too. Protocol: the fold-then-flatten pair is the
+# view's single maintenance owner (the index-loop discipline); flatten
+# consumes the feed, arming the next fold.
 
 
 def build_agg_over(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
@@ -617,72 +622,57 @@ def fold_agg_join_view(
     keep: int = 1,
 ) -> bool:
     """Fold the view's changes SINCE THE LAST FOLD into the stored
-    aggregate at ``agg_dir``. The aggregate's commit metadata carries the
-    view state id it has applied (``pending_state``); the fold reads
-    ``state_changes(applied → current)`` — so it composes across many
-    view folds WITHOUT requiring a flatten in between, and an
-    at-least-once replay of the same state is detected and skipped
-    (returns False; True after a fold commits). A MISSING watermark
-    (no ``applied_view_state`` in the aggregate's commit meta) REFUSES,
-    exactly like the unreadable-state path below: any metaless commit to
-    the aggregate table (a compaction, a manual ``write_snapshot`` — meta
-    is per-snapshot and does not carry forward) silently clears the
-    watermark, and folding the full pending feed from there would
-    double-count every already-applied delta — the signed fold is not
-    idempotent. Recovery is the same as for a GC'd state: rebuild from
-    the view (``build_agg_over`` + a stamped ``write_snapshot``), or
-    ``stamp_applied_state`` if the caller KNOWS the stored aggregate
-    reflects the view's current state. (The round-11 "legacy bootstrap"
-    fold-the-full-feed path is gone — it was indistinguishable from the
-    silent-corruption case.)
+    aggregate at ``agg_dir``: the ``applied_view_state`` watermark
+    protocol (``lake.unapplied_changes``) plus the signed core
+    ``apply_agg_feed``. The watermark makes the fold compose across many
+    view folds WITHOUT requiring a flatten in between; an at-least-once
+    replay of the same state is skipped (returns False; True after a fold
+    commits), and a missing or GC'd watermark REFUSES — the signed fold
+    is not idempotent. (The round-11 "legacy bootstrap" fold-the-full-feed
+    path is gone — it was indistinguishable from the silent-corruption
+    case.)
 
     After a FLATTEN of the view, call ``stamp_applied_state`` — the
     flatten preserves data, but the state id changes, and re-stamping
     keeps the next fold on the prefix-pruned (batch-sized) path instead
     of the full-diff fallback.
-
-    Scale: the feed is batch-sized on the prefix path; the signed delta
-    aggregate is one feed-sized shuffle on ``group_col``; the
-    stored-aggregate join touches only changed groups (right-outer, AQE
-    broadcasts the delta side); the upsert carries untouched groups over
-    without reading the view or the base tables.
     """
-    from pgcp_spark.operators._decimal import dec
-    from pgcp_spark.sources.lake import (
-        pending_state,
-        snapshot_meta,
-        state_changes,
-    )
-
-    state = pending_state(view_dir)
-    applied = snapshot_meta(agg_dir).get("applied_view_state")
-    if applied == state:
-        return False  # at-least-once replay of an already-folded state
-    if applied is None:
-        raise RuntimeError(
-            f"{agg_dir}: the aggregate carries no applied_view_state "
-            "watermark. Either it was never stamped at build time, or a "
-            "metaless commit (compaction / manual write_snapshot) cleared "
-            "it — and folding the full pending feed would silently "
-            "double-count already-applied deltas (the signed fold is not "
-            "idempotent). Recovery: rebuild from the view (build_agg_over "
-            "+ a stamped write_snapshot), or stamp_applied_state if the "
-            "stored aggregate is KNOWN to reflect the view's current state."
-        )
-    try:
-        feed = state_changes(spark, view_dir, applied, state, key=view_key)
-    except FileNotFoundError as exc:
-        raise RuntimeError(
-            "the aggregate's applied view state is no longer readable "
-            "(a flatten/vacuum GC'd it). The cascade owner must re-anchor "
-            "with stamp_applied_state immediately after each flatten; "
-            "recovery now = rebuild the aggregate from the view "
-            "(build_agg_over + a stamped write_snapshot). Refusing to "
-            "guess — a blind re-fold double-counts."
-        ) from exc
-    feed = materialize(feed)
-    if feed.isEmpty():
+    got = unapplied_changes(spark, view_dir, agg_dir, view_key, "applied_view_state")
+    if got is None or got[1].isEmpty():
         return False
+    state, feed = got
+    apply_agg_feed(
+        spark, agg_dir, feed, group_col, value_col,
+        meta={"applied_view_state": state}, keep=keep,
+    )
+    return True
+
+
+def apply_agg_feed(
+    spark: SparkSession,
+    agg_dir: str,
+    feed: DataFrame,
+    group_col: str,
+    value_col: str,
+    meta: dict | None = None,
+    keep: int = 1,
+) -> None:
+    """The signed fold's core, independent of where the change feed came
+    from — ``fold_agg_join_view`` drives it from a maintained view's
+    state diff, the direct twins (``change_feed._run_incremental_agg``)
+    from the fact's snapshot diff. insert/update_postimage add the row,
+    delete/update_preimage subtract it (``build_agg_over``'s schema). A
+    NULL value adds 0 to ``sum_dec`` but is tracked by ``priced_cnt``, so
+    "SUM over only NULLs is NULL" (ANSI) survives the fold — the nulls
+    lake caught the version that conflated sum-of-nothing with
+    sum-of-zero. ``meta`` lands on the commit.
+
+    Scale: the signed delta aggregate is one feed-sized shuffle on
+    ``group_col``; the stored-aggregate join touches only changed groups
+    (right-outer, AQE broadcasts the delta side); the upsert carries
+    untouched groups over without reading the feed's source."""
+    from pgcp_spark.operators._decimal import dec
+
     zero = F.lit(0).cast("decimal(18,2)")
     sign = F.when(
         F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
@@ -715,9 +705,8 @@ def fold_agg_join_view(
         touched,
         key=[group_col],
         keep=keep,
-        meta={"applied_view_state": state},
+        meta=meta,
     )
-    return True
 
 
 def stamp_applied_state(
@@ -729,9 +718,7 @@ def stamp_applied_state(
     group-cardinality-sized) aggregate table carrying the new meta; the
     next fold then diffs from a state that EXTENDS cheaply instead of
     crossing the flatten into the full-diff fallback."""
-    from pgcp_spark.sources.lake import pending_state, write_snapshot as _ws
-
-    _ws(
+    write_snapshot(
         read_current(spark, agg_dir),
         agg_dir,
         keep=keep,
@@ -842,52 +829,53 @@ def fold_minmax_join_view(
 ) -> bool:
     """Fold the view's changes since the last fold into the stored
     per-group MIN/MAX aggregate at ``agg_dir`` — the cascade fold for the
-    non-signed half of the dashboard. Watermark discipline is identical
-    to ``fold_agg_join_view`` (same ``applied_view_state`` commit meta,
-    same replay skip / missing-watermark refuse / GC'd-state refuse), so
-    the two folds compose over one maintained view.
-
-    Scale: the feed is batch-sized on the prefix path; one feed-sized
-    shuffle computes per-group insert bounds + removal bounds + the
-    signed count; the stored join touches only changed groups
-    (right-outer, AQE broadcasts the delta side). The rescan arm then
-    reads ONLY min/max-endangered groups from the maintained view — the
-    group list is pushed as an IN filter into the view scan when small
-    (``_pruned_by_keys``), so a view laid out CLUSTER BY the group column
-    reads only affected files; it is measured against full recompute in
-    ``tools/fold_ab.py minmax`` (SCALE.md r12). The base tables are never read.
-    """
-    from pgcp_spark.operators._decimal import dec
-    from pgcp_spark.sources.lake import (
-        pending_state,
-        snapshot_meta,
-        state_changes,
-    )
-
-    state = pending_state(view_dir)
-    applied = snapshot_meta(agg_dir).get("applied_view_state")
-    if applied == state:
-        return False  # at-least-once replay of an already-folded state
-    if applied is None:
-        raise RuntimeError(
-            f"{agg_dir}: the aggregate carries no applied_view_state "
-            "watermark (never stamped, or cleared by a metaless commit) — "
-            "refusing to fold; rebuild from the view (build_minmax_over + "
-            "a stamped write_snapshot) or stamp_applied_state if the "
-            "stored aggregate is KNOWN current."
-        )
-    try:
-        feed = state_changes(spark, view_dir, applied, state, key=view_key)
-    except FileNotFoundError as exc:
-        raise RuntimeError(
-            "the aggregate's applied view state is no longer readable "
-            "(a flatten/vacuum GC'd it); re-anchor with stamp_applied_state "
-            "after each flatten, or rebuild from the view. Refusing to "
-            "guess — a blind re-fold double-counts."
-        ) from exc
-    feed = materialize(feed)
-    if feed.isEmpty():
+    non-signed half of the dashboard: the ``applied_view_state``
+    watermark protocol (``lake.unapplied_changes``, as in
+    ``fold_agg_join_view``, so the two folds compose over one maintained
+    view) plus the core ``apply_minmax_feed``, whose rescan arm reads the
+    maintained view at exactly the watermarked state (the single-
+    maintenance-owner invariant). The base tables are never read; the
+    rescan is measured against full recompute in ``tools/fold_ab.py
+    minmax`` (SCALE.md r12)."""
+    got = unapplied_changes(spark, view_dir, agg_dir, view_key, "applied_view_state")
+    if got is None or got[1].isEmpty():
         return False
+    state, feed = got
+    apply_minmax_feed(
+        spark, agg_dir, feed, group_col, value_col,
+        rescan_source=lambda: read_current_with_deltas(spark, view_dir, key=view_key),
+        meta={"applied_view_state": state}, keep=keep,
+    )
+    return True
+
+
+def apply_minmax_feed(
+    spark: SparkSession,
+    agg_dir: str,
+    feed: DataFrame,
+    group_col: str,
+    value_col: str,
+    rescan_source: Callable[[], DataFrame],
+    meta: dict | None = None,
+    keep: int = 1,
+) -> None:
+    """The MIN/MAX fold's core, independent of where the change feed came
+    from (the ``apply_distinct_feed`` split): ``fold_minmax_join_view``
+    rescans from the maintained view, the direct twin
+    (``change_feed.lake_incremental_minmax_orders``) from the fact.
+    ``rescan_source()`` returns the source's current rows; it is called
+    only when some group needs a rescan, so an insert-only fold reads no
+    source at all. ``meta`` lands on the commit.
+
+    Scale: one feed-sized shuffle computes per-group insert bounds +
+    removal bounds + the signed count; the stored join touches only
+    changed groups (right-outer, AQE broadcasts the delta side). The
+    rescan arm then reads ONLY min/max-endangered groups — the group list
+    is pushed as an IN filter into the source scan when small, so a
+    source laid out CLUSTER BY the group column reads only affected
+    files."""
+    from pgcp_spark.operators._decimal import dec
+
     post = F.col("_change_type").isin("insert", "update_postimage")
     pre = F.col("_change_type").isin("delete", "update_preimage")
     val = dec(value_col, "decimal(18,2)")
@@ -924,16 +912,15 @@ def fold_minmax_join_view(
     if rescan_vals is not None and not rescan_vals:
         out = folded.drop("_rescan")
     else:
-        # the maintained view at exactly `state` (the single-maintenance-
-        # owner invariant): pruned to the endangered groups — pushed-IN
-        # reaches the parquet footers when the list is small; beyond the
-        # bound (rescan_vals None) the semi-join keeps correctness
-        view_mor = read_current_with_deltas(spark, view_dir, key=view_key)
+        # pruned to the endangered groups: pushed-IN reaches the parquet
+        # footers when the list is small; beyond the bound (rescan_vals
+        # None) the semi-join keeps correctness
+        source = rescan_source()
         if rescan_vals is not None:
-            view_now = view_mor.filter(F.col(group_col).isin(rescan_vals))
+            source = source.filter(F.col(group_col).isin(rescan_vals))
         else:
-            view_now = view_mor.join(rescan_keys, on=group_col, how="left_semi")
-        rescanned = build_minmax_over(view_now, group_col, value_col).select(
+            source = source.join(rescan_keys, on=group_col, how="left_semi")
+        rescanned = build_minmax_over(source, group_col, value_col).select(
             group_col,
             F.col("min_dec").alias("r_min"),
             F.col("max_dec").alias("r_max"),
@@ -957,9 +944,8 @@ def fold_minmax_join_view(
         out,
         key=[group_col],
         keep=keep,
-        meta={"applied_view_state": state},
+        meta=meta,
     )
-    return True
 
 
 MINMAX_SPEC = ViewSpec(
@@ -1133,14 +1119,18 @@ def lake_join_view_from_pending_feeds(spark: SparkSession, sf_dir: str) -> DataF
 # sketch (the HLL rollup in functions/sketches.py) is the right tool.
 #
 # Crash protocol (two stored tables, two commits per fold): the SUPPORT
-# commit carries the watermark first, the AGG rollup commits second. A
-# crash between them leaves support-at-state / agg-behind — detected on
-# the next fold and repaired by REBUILDING the agg from the support
-# (O(support), convergent: the support alone is complete evidence), the
-# same "converge, don't refuse" shape as the CDC-BM25 fold's crash
-# window. Both-behind replays skip; a missing watermark on either table
-# REFUSES exactly like the signed fold (the support fold is signed too,
-# and double-counting multiplicities corrupts transitions silently).
+# is authoritative — the agg is a pure function of it. A crash between
+# the two commits leaves their watermarks different (agg behind, or
+# ahead since the commits overlap — see ``apply_distinct_feed``); the next
+# fold detects that and REBUILDS the agg from the support at the
+# support's watermark (O(support), convergent: the support alone is
+# complete evidence), then folds whatever view diff remains — the same
+# "converge, don't refuse" shape as the CDC-BM25 fold's crash window. The
+# support's watermark is the fold's (``lake.unapplied_changes``): a replay
+# skips, and a missing or GC'd one REFUSES exactly like the signed fold
+# (the support fold is signed too, and double-counting multiplicities
+# corrupts transitions silently). An agg whose watermark a metaless commit
+# cleared differs from the support's, so it is rebuilt the same way.
 
 
 def build_distinct_support(
@@ -1213,45 +1203,21 @@ def fold_distinct_join_view(
     keep: int = 1,
 ) -> bool:
     """Fold the view's changes since the last fold into the stored
-    support table and distinct-count aggregate. Watermark discipline is
-    the signed fold's (same ``applied_view_state`` commit meta, same
-    replay skip / missing-watermark refuse / GC'd-state refuse), held on
-    BOTH stored tables with support leading — see the section comment
-    for the crash protocol.
-
-    Scale: the feed is batch-sized on the prefix path; one feed-sized
-    shuffle computes the per-(group, value) signed multiplicity deltas;
-    the support join touches only changed pairs (right-outer, AQE
-    broadcasts the delta side) with the batch's groups pushed IN to the
-    support scan (CLUSTER BY ``group_col`` lays support out for it); the
-    transition sum is one delta-sized shuffle; the agg upsert carries
-    untouched groups over. The view and base tables are NEVER read —
+    support table and distinct-count aggregate: the ``applied_view_state``
+    watermark protocol (``lake.unapplied_changes``) held on the support,
+    the two-table crash repair (section comment), and the core
+    ``apply_distinct_feed``. The view and base tables are NEVER read —
     deletes are exact from the support's own evidence (no rescan arm,
     unlike MIN/MAX)."""
-    from pgcp_spark.sources.lake import (
-        pending_state,
-        snapshot_meta,
-        state_changes,
+    got = unapplied_changes(
+        spark, view_dir, support_dir, view_key, "applied_view_state"
     )
-
-    state = pending_state(view_dir)
-    sup_applied = snapshot_meta(support_dir).get("applied_view_state")
-    agg_applied = snapshot_meta(agg_dir).get("applied_view_state")
-    if sup_applied is None or agg_applied is None:
-        raise RuntimeError(
-            f"{support_dir if sup_applied is None else agg_dir}: no "
-            "applied_view_state watermark (never stamped, or cleared by a "
-            "metaless commit) — refusing to fold; rebuild from the view "
-            "(build_distinct_support/build_distinct_over + stamped "
-            "write_snapshot). The support fold is signed and double-"
-            "counting multiplicities corrupts transitions silently."
-        )
-    if sup_applied == state and agg_applied == state:
-        return False  # at-least-once replay of an already-folded state
-    if sup_applied == state and agg_applied != state:
-        # crash between the support commit and the agg commit: the
-        # support alone is complete evidence — rebuild the aggregate
-        # from it (O(support), convergent) and re-stamp
+    # crash repair: the agg's stamp differs from the support's → rebuild
+    # the agg from the support AT the support's stamp. When that stamp is
+    # the current state (``got`` None) the repair is the whole fold; else
+    # fall through and fold the remaining view diff normally.
+    stamp = snapshot_meta(support_dir)
+    if snapshot_meta(agg_dir) != stamp:
         write_snapshot(
             distinct_agg_from_support(
                 read_current_with_deltas(
@@ -1261,44 +1227,13 @@ def fold_distinct_join_view(
             ),
             agg_dir,
             keep=keep,
-            meta={"applied_view_state": state},
+            meta=stamp,
         )
-        return True
-    if sup_applied != agg_applied:
-        # crash between the two commits FOLLOWED by more view commits
-        # before the retry (the at-least-once restart redelivers the
-        # batch, whose merge lands shadow deltas and advances the view's
-        # state id — so neither watermark matches `state` anymore). The
-        # support commits first by construction, so on any mismatch the
-        # support is authoritative: rebuild the agg from it AT THE
-        # SUPPORT'S watermark, then fall through and fold the remaining
-        # view diff normally. If the support's watermark is not a real
-        # historical view state (external corruption), the state_changes
-        # below raises and the refuse message applies.
-        write_snapshot(
-            distinct_agg_from_support(
-                read_current_with_deltas(
-                    spark, support_dir, key=[group_col, value_col]
-                ),
-                group_col,
-            ),
-            agg_dir,
-            keep=keep,
-            meta={"applied_view_state": sup_applied},
-        )
-    try:
-        feed = state_changes(spark, view_dir, sup_applied, state, key=view_key)
-    except FileNotFoundError as exc:
-        raise RuntimeError(
-            "the applied view state is no longer readable (a flatten/"
-            "vacuum GC'd it); re-anchor BOTH stored tables' "
-            "applied_view_state after each flatten (stamp_applied_state "
-            "on each dir), or rebuild from the view. Refusing to guess — "
-            "a blind re-fold double-counts."
-        ) from exc
-    feed = materialize(feed)
-    if feed.isEmpty():
+        if got is None:
+            return True
+    if got is None or got[1].isEmpty():
         return False
+    state, feed = got
     apply_distinct_feed(
         spark, support_dir, agg_dir, feed, group_col, value_col,
         meta={"applied_view_state": state}, keep=keep,
@@ -1321,8 +1256,14 @@ def apply_distinct_feed(
     view's ``state_changes``; the direct twin
     (``lake_incremental_distinct_orders``) from the fact's snapshot
     diff; a streaming loop from its per-batch CDC apply. ``meta`` lands
-    on BOTH commits (support first — see the crash protocol in the
-    section comment)."""
+    on BOTH commits (see the crash protocol in the section comment).
+
+    Scale: one feed-sized shuffle computes the per-(group, value) signed
+    multiplicity deltas; the support join touches only changed pairs
+    (right-outer, AQE broadcasts the delta side) with the batch's groups
+    pushed IN to the support scan (CLUSTER BY ``group_col`` lays support
+    out for it); the transition sum is one delta-sized shuffle; the agg
+    upsert carries untouched groups over."""
     sign = F.when(
         F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
@@ -1393,11 +1334,11 @@ def apply_distinct_feed(
     # their crash order mattered. The r13 shape serialized support-first
     # so a crash left agg-behind (repairable by rebuilding the agg from
     # the support); overlapped, a crash can also leave agg-AHEAD, and
-    # the fold's existing mismatch branch already covers it: on ANY
-    # sup_applied != agg_applied the support stays authoritative — the
-    # agg is rebuilt from it at the support's watermark and the residual
-    # diff re-folds, which converges whether the agg was behind or ahead
-    # (the rebuild overwrites either). Support keeps one commit of grace
+    # the fold's crash repair covers it: whenever the two stamps differ
+    # the support stays authoritative — the agg is rebuilt from it at the
+    # support's watermark and the residual diff re-folds, which converges
+    # whether the agg was behind or ahead (the rebuild overwrites
+    # either). Support keeps one commit of grace
     # (keep >= 2) regardless of the caller's keep: the agg rollup
     # derives from the PRE-upsert support, and under a non-checkpointing
     # materialization mode (plans.materialize.plan_only — the width
@@ -1587,9 +1528,9 @@ def fold_topk_join_view(
 ) -> bool:
     """Fold the view's changes since the last fold into the stored
     per-group top-k sets. Watermark discipline is the family's
-    (``applied_view_state`` commit meta; replay skip / missing-watermark
-    refuse / GC'd-state refuse — the merge-and-rerank fold is not
-    idempotent).
+    (``lake.unapplied_changes`` on ``applied_view_state``: replay skip /
+    missing-watermark refuse / GC'd-state refuse — the merge-and-rerank
+    fold is not idempotent).
 
     Scale: the feed is batch-sized on the prefix path; the rescan
     decision is two feed-sized semi/anti joins against the (k x groups)-
@@ -1602,34 +1543,11 @@ def fold_topk_join_view(
     from pyspark.sql import Window
 
     from pgcp_spark.operators._decimal import dec
-    from pgcp_spark.sources.lake import (
-        pending_state,
-        snapshot_meta,
-        state_changes,
-    )
 
-    state = pending_state(view_dir)
-    applied = snapshot_meta(agg_dir).get("applied_view_state")
-    if applied == state:
+    got = unapplied_changes(spark, view_dir, agg_dir, view_key, "applied_view_state")
+    if got is None or got[1].isEmpty():
         return False
-    if applied is None:
-        raise RuntimeError(
-            f"{agg_dir}: no applied_view_state watermark (never stamped, or "
-            "cleared by a metaless commit) — refusing to fold; rebuild from "
-            "the view (build_topk_over + a stamped write_snapshot) or "
-            "stamp_applied_state if the stored sets are KNOWN current."
-        )
-    try:
-        feed = state_changes(spark, view_dir, applied, state, key=view_key)
-    except FileNotFoundError as exc:
-        raise RuntimeError(
-            "the applied view state is no longer readable (a flatten/vacuum "
-            "GC'd it); re-anchor with stamp_applied_state after each "
-            "flatten, or rebuild from the view."
-        ) from exc
-    feed = materialize(feed)
-    if feed.isEmpty():
-        return False
+    state, feed = got
     post_rows = (
         feed.filter(
             F.col("_change_type").isin("insert", "update_postimage")

@@ -25,6 +25,10 @@ from pgcp_spark.sources.lake import (
     write_snapshot,
 )
 from pgcp_spark.sources.view_maintenance import (
+    AGG_SPEC,
+    DISTINCT_SPEC,
+    MINMAX_SPEC,
+    TOPK_SPEC,
     VIEW_DIM_PUSHDOWN_MAX,
     _pruned_by_keys,
     fold_join_view,
@@ -303,38 +307,55 @@ def test_cascade_crash_window_replay_is_skipped(spark, cascade_lake):
     assert _rows(read_current(spark, lk["agg_dir"])) == before
 
 
-def test_cascade_flatten_stamp_then_fold_is_noop(spark, cascade_lake):
-    """The owner protocol after a flatten: the old state id is GC-bait,
-    so a fold across it must REFUSE with the re-anchor recipe (never
-    guess — a blind re-fold double-counts), and the documented
-    flatten-then-stamp sequence makes the next fold a clean no-op with
-    the aggregate still equal to the recompute."""
-    from pgcp_spark.sources.lake import flatten_deltas, read_current
+@pytest.mark.parametrize(
+    "spec",
+    [AGG_SPEC, MINMAX_SPEC, DISTINCT_SPEC, TOPK_SPEC],
+    ids=["agg", "minmax", "distinct", "topk"],
+)
+def test_cascade_flatten_stamp_then_fold_is_noop(spark, ivm_lake_factory, spec):
+    """The owner protocol after a flatten, for every aggregate kind: the
+    old state id is GC-bait, so a fold across it must REFUSE with the
+    re-anchor recipe (never guess — a blind re-fold double-counts), and
+    the documented flatten-then-stamp sequence — every owned table
+    re-stamped, as ``fold_view_batch`` does — makes the next fold a clean
+    no-op with the aggregate still equal to the recompute."""
     from pgcp_spark.sources.view_maintenance import (
-        fold_agg_join_view,
+        member_dirs,
         stamp_applied_state,
+        write_spec_tables,
     )
 
-    lk = cascade_lake
-    flatten_deltas(
-        spark, lk["view_dir"], key=["o_orderkey"], cluster_by=["o_custkey"]
-    )
-    with pytest.raises(RuntimeError, match="stamp_applied_state"):
-        fold_agg_join_view(
-            spark, lk["agg_dir"], lk["view_dir"], ["o_orderkey"], "c_mktsegment",
-            "o_totalprice",
+    lk = ivm_lake_factory()
+    root = tempfile.mkdtemp(prefix="ivm_t_spec_")
+    dirs = {**member_dirs(root, spec, bases=()), "view": lk["view_dir"]}
+    try:
+        write_spec_tables(spec, read_current(spark, lk["view_dir"]), dirs)
+        _fold(spark, lk)  # land the view's MOR deltas — the cascade's feed
+        assert spec.fold(spark, dirs) is True
+        flatten_deltas(
+            spark, lk["view_dir"], key=["o_orderkey"], cluster_by=["o_custkey"]
         )
-    stamp_applied_state(spark, lk["agg_dir"], lk["view_dir"])
-    before = _rows(read_current(spark, lk["agg_dir"]))
-    folded = fold_agg_join_view(
-        spark, lk["agg_dir"], lk["view_dir"], ["o_orderkey"], "c_mktsegment",
-        "o_totalprice",
-    )
-    assert folded is False
-    assert _rows(read_current(spark, lk["agg_dir"])) == before
-    # and the aggregate STILL equals the recompute after the flatten
-    got = _rows(read_current(spark, lk["agg_dir"]).filter(F.col("order_cnt") > 0))
-    assert got == _rows(_agg_recompute(spark, lk))
+        with pytest.raises(RuntimeError, match="stamp_applied_state"):
+            spec.fold(spark, dirs)
+        for t in spec.tables:
+            stamp_applied_state(spark, dirs[t], lk["view_dir"])
+        before = {t: _rows(read_current(spark, dirs[t])) for t in spec.tables}
+        assert spec.fold(spark, dirs) is False
+        assert {t: _rows(read_current(spark, dirs[t])) for t in spec.tables} == before
+        # and the aggregate STILL equals the recompute after the flatten
+        recomputed = spec.build(_recompute(spark, lk))["agg"]
+        assert _rows(spec.serve(read_current(spark, dirs["agg"]))) == _rows(
+            spec.serve(recomputed)
+        )
+        if spec is AGG_SPEC:
+            got = _rows(
+                read_current(spark, dirs["agg"]).filter(F.col("order_cnt") > 0)
+            )
+            assert got == _rows(_agg_recompute(spark, lk))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        for d in (lk["fact_dir"], lk["dim_dir"], lk["view_dir"]):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_pending_changes_prunes_by_tombstone_own_shape(spark):
@@ -900,9 +921,9 @@ def test_distinct_crash_agg_ahead_repairs_from_support(spark, monkeypatch):
 
 
 def test_distinct_missing_watermark_refuses(spark):
-    """A metaless commit on either stored table clears the watermark —
+    """A metaless commit on the support clears the fold's watermark —
     the fold must refuse (the signed support fold double-counts on a
-    blind re-fold)."""
+    blind re-fold). A metaless agg is repaired instead (next test)."""
     from pgcp_spark.sources.lake import append_delta, read_current
 
     view_dir, sup_dir, agg_dir = _dst_lake(spark, _DST_ROWS)
@@ -917,6 +938,34 @@ def test_distinct_missing_watermark_refuses(spark):
         write_snapshot(read_current(spark, sup_dir), sup_dir)  # metaless
         with pytest.raises(RuntimeError, match="no\\s+applied_view_state"):
             _dst_fold(spark, sup_dir, agg_dir, view_dir)
+    finally:
+        for d in (view_dir, sup_dir, agg_dir):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_distinct_metaless_agg_rebuilds_from_support(spark):
+    """The agg is a pure function of the support, so a metaless commit
+    that clears only the AGG's watermark needs no refusal: its stamp
+    differs from the support's, the crash repair rebuilds it from the
+    support, and the fold continues to the recompute."""
+    from pgcp_spark.sources.lake import append_delta, read_current, snapshot_meta
+
+    view_dir, sup_dir, agg_dir = _dst_lake(spark, _DST_ROWS)
+    try:
+        append_delta(
+            spark.createDataFrame(
+                [(8, 30, "P5", "a")],
+                ["o_orderkey", "o_custkey", "o_orderpriority", "c_mktsegment"],
+            ),
+            view_dir,
+        )
+        write_snapshot(read_current(spark, agg_dir), agg_dir)  # metaless
+        assert _dst_fold(spark, sup_dir, agg_dir, view_dir) is True
+        assert snapshot_meta(agg_dir) == snapshot_meta(sup_dir)
+        got = _dst_serve(spark, agg_dir)
+        assert got == [("a", 3), ("b", 1)]
+        assert got == _dst_recompute(spark, view_dir)
+        assert _dst_fold(spark, sup_dir, agg_dir, view_dir) is False
     finally:
         for d in (view_dir, sup_dir, agg_dir):
             shutil.rmtree(d, ignore_errors=True)

@@ -120,9 +120,11 @@ def main() -> None:
         (lake, ["write_snapshot", "append_delta", "delete_delta",
                 "merge_cdc_delta", "flatten_deltas", "upsert", "merge_cdc",
                 "compact", "state_changes", "table_changes",
-                "pending_changes", "read_current_with_deltas"]),
+                "pending_changes", "read_current_with_deltas",
+                "unapplied_changes"]),
         (vm, ["fold_join_view", "fold_agg_join_view", "fold_minmax_join_view",
               "fold_distinct_join_view", "fold_topk_join_view",
+              "apply_agg_feed", "apply_minmax_feed",
               "apply_distinct_feed", "_collected_keys",
               "stamp_applied_state", "write_spec_tables"]),
         (ti, ["update_text_index", "remove_from_text_index", "_write_tables",

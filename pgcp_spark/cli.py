@@ -11,6 +11,7 @@ from __future__ import annotations
 import argparse
 import logging
 import sys
+from contextlib import ExitStack
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -166,6 +167,7 @@ def main(argv: list[str] | None = None) -> int:
         raise SystemExit(f"error: {e.args[0]}")
     spark = get_spark("pgcp_spark_cp")
     src_cfg, dest_cfg = cfg.database(args.source), cfg.database(args.dest)
+    clients = ExitStack()  # closes the psql clients' sessions after the copy
     if args.transfer in ("copy", "pipe"):
         from pgcp_spark.pg.copy_csv import (
             make_copy_reader,
@@ -175,7 +177,8 @@ def main(argv: list[str] | None = None) -> int:
         )
         from pgcp_spark.pg.psql_client import PsqlCliClient
 
-        src_client, dest_client = PsqlCliClient(src_cfg), PsqlCliClient(dest_cfg)
+        src_client = clients.enter_context(PsqlCliClient(src_cfg))
+        dest_client = clients.enter_context(PsqlCliClient(dest_cfg))
         if args.transfer == "pipe":
             reader = make_pipe_reader(spark, src_client, src_cfg)
             writer = make_pipe_writer(dest_cfg)
@@ -200,10 +203,11 @@ def main(argv: list[str] | None = None) -> int:
         num_partitions=args.num_partitions,
         where=args.where,
     )
-    if "*" in args.table or "?" in args.table or "[" in args.table:
-        tr.copy_tables(args.table, options)  # pgcp_runner.rb:27
-    else:
-        tr.copy_table(args.table, None, options)
+    with clients:
+        if "*" in args.table or "?" in args.table or "[" in args.table:
+            tr.copy_tables(args.table, options)  # pgcp_runner.rb:27
+        else:
+            tr.copy_table(args.table, None, options)
     return 0
 
 

@@ -17,6 +17,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pgcp_spark.pg.client import PgClient
+from pgcp_spark.pg.psql_client import FIELD_SEP
 from pgcp_spark.qualified_name import quote_literal
 
 
@@ -92,16 +93,23 @@ ORDER BY a.attnum
 def get_indexes(client: PgClient, schema_name: str, table_name: str) -> list[IndexDef]:
     """Index definitions incl. unique/primary flags, partial-index WHERE
     (pg_get_expr, postgres.rb:212) and expression columns (pg_get_indexdef
-    per attnum, postgres.rb:233). Composite PKs keep ALL columns — the
-    reference truncated to the first (postgres.rb:248, SURVEY.md Q5)."""
+    per attnum, postgres.rb:233), in one query. Composite PKs keep ALL
+    columns — the reference truncated to the first (postgres.rb:248,
+    SURVEY.md Q5)."""
+    # indnkeyatts, NOT the length of indkey: indkey also lists INCLUDE
+    # (non-key) columns, and promoting those to key columns on replay would
+    # silently weaken unique constraints. The key columns come joined with
+    # the psql client's field separator, so its fetch hands them back as
+    # trailing fields and another client as one string; rejoining and
+    # splitting below reads both.
     sql = f"""
 SELECT i.relname AS index_name,
        ix.indisunique,
        ix.indisprimary,
        pg_catalog.pg_get_expr(ix.indpred, ix.indrelid) AS where_pred,
-       ix.indkey::text,
-       ix.indexrelid::bigint,
-       ix.indnkeyatts
+       (SELECT string_agg(pg_catalog.pg_get_indexdef(ix.indexrelid, g, true),
+                          chr({ord(FIELD_SEP)}) ORDER BY g)
+        FROM generate_series(1, ix.indnkeyatts) AS g) AS key_columns
 FROM pg_catalog.pg_class t
 JOIN pg_catalog.pg_namespace n ON t.relnamespace = n.oid
 JOIN pg_catalog.pg_index ix ON t.oid = ix.indrelid
@@ -110,29 +118,16 @@ WHERE n.nspname = {quote_literal(schema_name)}
   AND t.relname = {quote_literal(table_name)}
 ORDER BY i.relname
 """
-    indexes = []
-    for name, unique, primary, where, _indkey, index_oid, n_key in client.fetch(sql):
-        # indnkeyatts, NOT len(indkey): indkey also lists INCLUDE (non-key)
-        # columns, and promoting those to key columns on replay would
-        # silently weaken unique constraints
-        n_cols = int(n_key)
-        # one round-trip per index (not per column): expand positions
-        # server-side with generate_series
-        col_sql = f"""
-SELECT g, pg_catalog.pg_get_indexdef({index_oid}, g, true)
-FROM generate_series(1, {n_cols}) AS g ORDER BY g
-"""
-        cols = [r[1] for r in client.fetch(col_sql)]
-        indexes.append(
-            IndexDef(
-                name=name,
-                columns=tuple(cols),
-                unique=_as_bool(unique),
-                primary=_as_bool(primary),
-                where=where,
-            )
+    return [
+        IndexDef(
+            name=name,
+            columns=tuple(FIELD_SEP.join(str(c) for c in cols).split(FIELD_SEP)),
+            unique=_as_bool(unique),
+            primary=_as_bool(primary),
+            where=where,
         )
-    return indexes
+        for name, unique, primary, where, *cols in client.fetch(sql)
+    ]
 
 
 def table_exists(client: PgClient, schema_name: str, table_name: str) -> bool:

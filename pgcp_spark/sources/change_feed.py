@@ -45,6 +45,7 @@ from pgcp_spark.sources.view_maintenance import (
     read_distinct_agg,
     serve_agg,
     serve_minmax,
+    standard_cdc_batch,
 )
 
 _ORACLE = """
@@ -295,17 +296,7 @@ def lake_incremental_agg_orders_cdc(spark: SparkSession, sf_dir: str) -> DataFra
     which the delete-free original could never show."""
 
     def mutate(fact_dir: str, orders: DataFrame) -> None:
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
-        merge_cdc(
-            spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"], keep=2
-        )
+        merge_cdc(spark, fact_dir, standard_cdc_batch(orders), key=["o_orderkey"], keep=2)
 
     return _run_incremental_agg(spark, sf_dir, mutate)
 
@@ -345,21 +336,11 @@ def lake_cdc_merge_on_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    ups = (
-        orders.filter(F.col("o_orderkey") % 5 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-        .withColumn("_op", F.lit("upsert"))
-    )
-    dels = orders.filter(
-        (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-    ).withColumn("_op", F.lit("delete"))
     tdir = tempfile.mkdtemp(prefix="pgcp_cdc_mor_")
     try:
         write_snapshot(base, tdir)
         before = current_snapshot(tdir)
-        merge_cdc_delta(
-            spark, tdir, ups.unionByName(dels), key=["o_orderkey"]
-        )
+        merge_cdc_delta(spark, tdir, standard_cdc_batch(orders), key=["o_orderkey"])
         if current_snapshot(tdir) != before:
             raise RuntimeError("CDC apply must land as deltas, not a rewrite")
         result = materialize(
@@ -401,18 +382,10 @@ def lake_cdc_pending_changes_orders(spark: SparkSession, sf_dir: str) -> DataFra
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    ups = (
-        orders.filter(F.col("o_orderkey") % 5 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-        .withColumn("_op", F.lit("upsert"))
-    )
-    dels = orders.filter(
-        (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-    ).withColumn("_op", F.lit("delete"))
     tdir = tempfile.mkdtemp(prefix="pgcp_cdc_pending_")
     try:
         write_snapshot(base, tdir)
-        merge_cdc_delta(spark, tdir, ups.unionByName(dels), key=["o_orderkey"])
+        merge_cdc_delta(spark, tdir, standard_cdc_batch(orders), key=["o_orderkey"])
         result = materialize(
             pending_changes(spark, tdir, key=["o_orderkey"]).orderBy(
                 "o_orderkey", "_change_type"
@@ -484,16 +457,8 @@ def lake_incremental_minmax_orders(spark: SparkSession, sf_dir: str) -> DataFram
         write_snapshot(
             build_minmax_over(base, "o_custkey", "o_totalprice"), agg_dir
         )
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
         merge_cdc(
-            spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"],
+            spark, fact_dir, standard_cdc_batch(orders), key=["o_orderkey"],
             keep=3, cluster_by=["o_custkey"],
         )
         feed = table_changes(spark, fact_dir, snap_a, key=["o_orderkey"])
@@ -573,16 +538,9 @@ def lake_incremental_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFr
         write_snapshot(
             build_distinct_over(base, "o_orderpriority", "o_custkey"), agg_dir
         )
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn("o_orderpriority", F.lit("X-RECLASS"))
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
         merge_cdc(
-            spark, fact_dir, ups.unionByName(dels), key=["o_orderkey"], keep=3
+            spark, fact_dir, standard_cdc_batch(orders, "o_orderpriority"),
+            key=["o_orderkey"], keep=3,
         )
         feed = table_changes(spark, fact_dir, snap_a, key=["o_orderkey"])
         apply_distinct_feed(

@@ -295,7 +295,7 @@ def _register_group_query() -> None:
     from pgcp_spark.registry import register
     from pgcp_spark.sources import load_table
     from pgcp_spark.sources.lake import merge_cdc_delta, read_current, write_snapshot
-    from pgcp_spark.sources.view_maintenance import fold_join_view
+    from pgcp_spark.sources.view_maintenance import fold_join_view, standard_cdc_batch
 
     import shutil
     import tempfile
@@ -352,16 +352,8 @@ def _register_group_query() -> None:
             )
 
             # --- ONE transaction: fact CDC + view fold, one publish ---
-            ups = (
-                orders.filter(F.col("o_orderkey") % 5 == 0)
-                .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-                .withColumn("_op", F.lit("upsert"))
-            )
-            dels = orders.filter(
-                (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-            ).withColumn("_op", F.lit("delete"))
             merge_cdc_delta(
-                spark, gdir + "/fact", ups.unionByName(dels), key=["o_orderkey"]
+                spark, gdir + "/fact", standard_cdc_batch(orders), key=["o_orderkey"]
             )
             fold_join_view(
                 spark,

@@ -388,6 +388,24 @@ def serve_view_tables(
     return spec.serve(read_current(spark, dirs["agg"]))
 
 
+def standard_cdc_batch(orders: DataFrame, value: str = "o_totalprice") -> DataFrame:
+    """The repo's standard CDC batch over ``orders``, with an ``_op``
+    column: every 5th key an upsert, and every 7th key that is not a 5th a
+    delete. Over the usual ``o_orderkey % 3 != 0`` base, a 5th key outside
+    it lands as an insert and a %21 key's delete is an unmatched no-op.
+    An upsert doubles ``o_totalprice``, or, when ``value`` is
+    ``o_orderpriority``, reclassifies it to 'X-RECLASS'."""
+    key = F.col("o_orderkey")
+    new_value = (
+        F.lit("X-RECLASS") if value == "o_orderpriority" else F.col("o_totalprice") * 2
+    )
+    ups = orders.filter(key % 5 == 0).withColumn(value, new_value)
+    dels = orders.filter((key % 7 == 0) & (key % 5 != 0))
+    return ups.withColumn("_op", F.lit("upsert")).unionByName(
+        dels.withColumn("_op", F.lit("delete"))
+    )
+
+
 def _join_view_cycle(
     spark: SparkSession,
     sf_dir: str,
@@ -445,20 +463,7 @@ def _join_view_cycle(
         dim_updates = dim.filter(F.col("c_custkey") % 10 == 0).withColumn(
             "c_mktsegment", F.concat(F.col("c_mktsegment"), F.lit("_R"))
         )
-        ups = (
-            orders.filter(F.col("o_orderkey") % 5 == 0)
-            .withColumn(
-                value,
-                F.lit("X-RECLASS")
-                if value == "o_orderpriority"
-                else F.col("o_totalprice") * 2,
-            )
-            .withColumn("_op", F.lit("upsert"))
-        )
-        dels = orders.filter(
-            (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 5 != 0)
-        ).withColumn("_op", F.lit("delete"))
-        cdc = ups.unionByName(dels)
+        cdc = standard_cdc_batch(orders, value)
         # the dim and fact mutations write disjoint tables — overlapped (§2.6)
         if mor:
             overlap(

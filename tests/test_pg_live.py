@@ -10,6 +10,10 @@ staged copy, atomic hotswap, index replay, --where pushdown, glob fan-out,
 and failure cleanup — with assertions, which the reference's own live spec
 (/root/reference/spec/transport_spec.rb:3-32) never had.
 
+The tests at the end pin the psql client's pooled-session contract:
+errors, isolation between calls, concurrency, no process per call, and
+clean shutdown.
+
 Skips cleanly when no postgres toolchain is present.
 """
 
@@ -18,8 +22,11 @@ from __future__ import annotations
 import os
 import shutil
 import subprocess
+import sys
 import tempfile
+import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -200,7 +207,7 @@ def test_live_hotswap_transaction_rolls_back_atomically(client):
     # a failing statement inside execute_transaction must leave NO trace —
     # psql ON_ERROR_STOP exits before COMMIT so the server rolls back
     client.execute("DROP TABLE IF EXISTS src.tx_probe")
-    with pytest.raises(RuntimeError):
+    with pytest.raises(RuntimeError, match="division by zero"):
         client.execute_transaction(
             [
                 "CREATE TABLE src.tx_probe (x INT)",
@@ -209,6 +216,8 @@ def test_live_hotswap_transaction_rolls_back_atomically(client):
             ]
         )
     assert not cat.table_exists(client, "src", "tx_probe")
+    # the failed session is gone; the client carries on with a fresh one
+    assert client.fetch("SELECT 1") == [(1,)]
 
 
 @pytest.mark.parametrize("transfer", ["copy", "pipe"])
@@ -385,3 +394,95 @@ def test_live_small_table_keeps_single_stream_and_quoting_safe(client):
     assert len(selects) > 1
     counts = [int(client.fetch(f"SELECT COUNT(*) FROM ({s}) q")[0][0]) for s in selects]
     assert sum(counts) == 600, counts
+
+
+def test_live_multi_statement_execute_fails_atomically(client):
+    """A multi-statement ``execute`` keeps ``psql -c``'s one implicit
+    transaction: failing halfway leaves no trace."""
+    client.execute("DROP TABLE IF EXISTS src.ms_probe")
+    with pytest.raises(RuntimeError, match="division by zero"):
+        client.execute(
+            "CREATE TABLE src.ms_probe (x INT); INSERT INTO src.ms_probe VALUES (1); SELECT 1/0"
+        )
+    assert not cat.table_exists(client, "src", "ms_probe")
+
+
+def test_live_session_state_does_not_leak_between_calls(client, pg_server):
+    """A pooled session goes back in a fresh connection's state: a SET
+    is reset on the same backend, and a bare BEGIN does not swallow the
+    next call's DDL into a transaction nobody commits."""
+    pid = client.fetch("SELECT pg_backend_pid()")[0][0]
+    client.execute("SET search_path TO src")
+    assert client.fetch("SELECT current_setting('search_path'), pg_backend_pid()") == [
+        ('"$user", public', pid)
+    ]
+
+    client.execute("DROP TABLE IF EXISTS src.begin_probe")
+    client.execute("BEGIN")
+    client.execute("CREATE TABLE src.begin_probe (x INT)")
+    with PsqlCliClient(pg_server) as other:  # sees committed state only
+        assert cat.table_exists(other, "src", "begin_probe")
+
+
+def test_live_concurrent_fetches_get_their_own_rows(client):
+    """More threads than cores share one client's pool, with frequent
+    thread switches: each thread gets its own session and its own rows."""
+    start = threading.Barrier(8, timeout=60)
+
+    def fetch(i):
+        start.wait()
+        return client.fetch(f"SELECT {i} * 1000 + g FROM pg_sleep(0.1), generate_series(1, 200) g")
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            got = list(pool.map(fetch, range(8), timeout=60))
+    finally:
+        sys.setswitchinterval(switch)
+    assert got == [[(i * 1000 + g,) for g in range(1, 201)] for i in range(8)]
+
+
+def test_live_warm_copy_table_starts_no_psql_process(transport, client, monkeypatch):
+    """Once the pool is warm, a table copy runs every statement and
+    ``\\copy`` stream on open sessions. With one process per call, the
+    copy below started 16 ``psql`` processes."""
+    transport.copy_table("src.people", options=CopyOptions(force_schema="dst"))
+    started = []
+
+    class CountingPopen(subprocess.Popen):
+        def __init__(self, args, *rest, **kw):
+            if args[0] == "psql":
+                started.append(args)
+            super().__init__(args, *rest, **kw)
+
+    monkeypatch.setattr(subprocess, "Popen", CountingPopen)
+    transport.copy_table("src.people", options=CopyOptions(force_schema="dst"))
+    assert started == []
+    assert client.fetch("SELECT COUNT(*) FROM dst.people")[0][0] == 1000
+
+
+def _psql_children() -> list[int]:
+    """Pids of the ``psql`` processes whose parent is this process."""
+    found = []
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue  # exited meanwhile
+        comm = stat[stat.index("(") + 1 : stat.rindex(")")]
+        ppid = int(stat[stat.rindex(")") + 2 :].split()[1])
+        if comm == "psql" and ppid == os.getpid():
+            found.append(int(pid))
+    return found
+
+
+def test_live_close_leaves_no_psql_child(client):
+    """Runs last in this module: it ends the shared client's sessions."""
+    client.fetch("SELECT 1")
+    assert _psql_children()
+    client.close()
+    assert _psql_children() == []
+    assert client.fetch("SELECT 1") == [(1,)]  # a later call starts afresh
+    client.close()

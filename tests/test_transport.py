@@ -43,22 +43,9 @@ class FakeClient:
             return [(c.name, c.type, not c.nullable) for c in self.columns]
         if "pg_index" in s and "indisunique" in s:
             return [
-                (
-                    ix.name,
-                    ix.unique,
-                    ix.primary,
-                    ix.where,
-                    " ".join("1" * len(ix.columns)),
-                    i,
-                    len(ix.columns),
-                )
-                for i, ix in enumerate(self.indexes)
+                (ix.name, ix.unique, ix.primary, ix.where, "\x1f".join(ix.columns))
+                for ix in self.indexes
             ]
-        if "pg_get_indexdef" in s:
-            m = re.search(r"pg_get_indexdef\((\d+), g", s)
-            n = int(re.search(r"generate_series\(1, (\d+)\)", s).group(1))
-            ix = self.indexes[int(m.group(1))]
-            return [(pos, ix.columns[pos - 1]) for pos in range(1, n + 1)]
         if "MIN(" in s:
             return [self.pk_bounds]
         raise AssertionError(f"unexpected fetch: {s}")

@@ -47,25 +47,25 @@ def list_tables(client: PgClient, schema_name: str) -> list[str]:
     """Base tables of one schema, sorted (postgres.rb:20-36; views are
     excluded by table_type='BASE TABLE', postgres.rb:25)."""
     sql = f"""
-SELECT table_name
+SELECT {_text("table_name")}
 FROM information_schema.tables
 WHERE table_schema = {quote_literal(schema_name)}
   AND table_type = 'BASE TABLE'
 ORDER BY 1
 """
-    return [r[0] for r in client.fetch(sql)]
+    return [_untext(r[0]) for r in client.fetch(sql)]
 
 
 def schema_names(client: PgClient) -> list[str]:
     """Non-system schemas (postgres.rb:108-120)."""
-    sql = """
-SELECT schema_name
+    sql = f"""
+SELECT {_text("schema_name")}
 FROM information_schema.schemata
 WHERE schema_name NOT LIKE 'pg\\_%'
   AND schema_name <> 'information_schema'
 ORDER BY 1
 """
-    return [r[0] for r in client.fetch(sql)]
+    return [_untext(r[0]) for r in client.fetch(sql)]
 
 
 def column_definitions(client: PgClient, schema_name: str, table_name: str) -> list[ColumnDef]:
@@ -73,8 +73,8 @@ def column_definitions(client: PgClient, schema_name: str, table_name: str) -> l
     format_type preserves exact PG types — numeric(p,s), varchar(n),
     arrays, enums — which Spark's JDBC schema would degrade."""
     sql = f"""
-SELECT a.attname,
-       pg_catalog.format_type(a.atttypid, a.atttypmod),
+SELECT {_text("a.attname")},
+       {_text("pg_catalog.format_type(a.atttypid, a.atttypmod)")},
        a.attnotnull
 FROM pg_catalog.pg_attribute a
 JOIN pg_catalog.pg_class c ON a.attrelid = c.oid
@@ -86,7 +86,8 @@ WHERE n.nspname = {quote_literal(schema_name)}
 ORDER BY a.attnum
 """
     return [
-        ColumnDef(name=r[0], type=r[1], nullable=not _as_bool(r[2])) for r in client.fetch(sql)
+        ColumnDef(name=_untext(r[0]), type=_untext(r[1]), nullable=not _as_bool(r[2]))
+        for r in client.fetch(sql)
     ]
 
 
@@ -103,11 +104,11 @@ def get_indexes(client: PgClient, schema_name: str, table_name: str) -> list[Ind
     # trailing fields and another client as one string; rejoining and
     # splitting below reads both.
     sql = f"""
-SELECT i.relname AS index_name,
+SELECT {_text("i.relname")} AS index_name,
        ix.indisunique,
        ix.indisprimary,
-       pg_catalog.pg_get_expr(ix.indpred, ix.indrelid) AS where_pred,
-       (SELECT string_agg(pg_catalog.pg_get_indexdef(ix.indexrelid, g, true),
+       {_text("pg_catalog.pg_get_expr(ix.indpred, ix.indrelid)")} AS where_pred,
+       (SELECT string_agg({_text("pg_catalog.pg_get_indexdef(ix.indexrelid, g, true)")},
                           chr({ord(FIELD_SEP)}) ORDER BY g)
         FROM generate_series(1, ix.indnkeyatts) AS g) AS key_columns
 FROM pg_catalog.pg_class t
@@ -120,11 +121,13 @@ ORDER BY i.relname
 """
     return [
         IndexDef(
-            name=name,
-            columns=tuple(FIELD_SEP.join(str(c) for c in cols).split(FIELD_SEP)),
+            name=_untext(name),
+            columns=tuple(
+                _untext(c) for c in FIELD_SEP.join(cols).split(FIELD_SEP)
+            ),
             unique=_as_bool(unique),
             primary=_as_bool(primary),
-            where=where,
+            where=_untext(where),
         )
         for name, unique, primary, where, *cols in client.fetch(sql)
     ]
@@ -151,6 +154,19 @@ def primary_key_columns(client: PgClient, schema_name: str, table_name: str) -> 
         if ix.primary:
             return ix.columns
     return ()
+
+
+def _text(expr: str) -> str:
+    """SQL for ``expr`` behind a ``_`` prefix. A catalog name can be
+    ``t``, ``f`` or all digits, which a client that types untyped text
+    (the psql client's ``fetch``) would read as a bool or a number;
+    prefixed, every client hands it back as text, and ``_untext`` strips
+    the prefix. NULL stays NULL."""
+    return f"('_' || {expr})"
+
+
+def _untext(v: str | None) -> str | None:
+    return None if v is None else v[1:]
 
 
 def _as_bool(v) -> bool:

@@ -34,9 +34,10 @@ ends the idle ones; a later call starts afresh.
 Intended for CATALOG/DDL/metadata statements (the only place transport uses
 ``fetch``); bulk rows move via COPY, never through ``fetch``. Because psql
 output is untyped text, ``fetch`` applies coercion rules (int/float/bool/
-NULL below) that are exact for pg_catalog/information_schema queries and
-MIN/MAX bounds, but would mis-type a user TEXT value that happens to equal
-``t``/``f`` or look numeric — don't use it as a general row reader.
+NULL below) that are exact for catalog flags and counts and MIN/MAX
+bounds, but would mis-type a TEXT value that happens to equal ``t``/``f``
+or look numeric — a table or column name too, so ``pg/catalog`` reads
+names behind a prefix — don't use it as a general row reader.
 """
 
 from __future__ import annotations

@@ -55,9 +55,11 @@ import shutil
 import time
 import uuid
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from pgcp_spark.sources.zorder import with_zorder_key
 
@@ -617,9 +619,10 @@ def write_snapshot(
 # collapse to identical effective content.
 #
 # Scale contract: deltas between compactions are batch-sized, so the
-# touched-keys and newest-version frames broadcast; a reader pays one
-# broadcast anti-join + one delta-sized join over the base scan it was
-# already doing. Queries keep their pushdown: a filter above
+# touched keys and tombstones broadcast; a reader pays one broadcast
+# anti-join per touched shape over the base scan it was already doing,
+# plus (at two or more data deltas) one delta-sized window for newest-
+# wins. Queries keep their pushdown: a filter above
 # ``read_current_with_deltas`` pushes through the union into both the base
 # and delta parquet scans (the key/version computation deliberately stays
 # unfiltered — replacement must see every delta row for a key).
@@ -856,7 +859,9 @@ def _merge_deltas(
     stack a second time. ``raw`` is [(log seq, frame)] in commit order;
     ``base`` rows resolve at seq -1 — older than every delta, which is
     exactly the contract when ``base`` is itself a resolved earlier state
-    (every old write predates every fresh delta)."""
+    (every old write predates every fresh delta). Under AQE every
+    exchange is its own job, so no step aggregates and joins back: the
+    joins below, and one window at two or more data deltas, are all."""
     data = [(i, p) for i, p in raw if TOMBSTONE not in p.columns]
     tombs = [(i, p) for i, p in raw if TOMBSTONE in p.columns]
 
@@ -890,22 +895,29 @@ def _merge_deltas(
     base = _aligned(base)
     data = [(i, _aligned(p).withColumn("_delta_seq", F.lit(i))) for i, p in data]
 
-    # The touched-keys and newest-version frames are batch-sized UNDER
-    # THE COMPACTION CADENCE, but nothing bounds how many folds a caller
-    # defers — so no FORCED broadcast here: a forced hint on an
-    # unboundedly-accumulating side is a driver OOM waiting for the one
-    # operator that skips maintenance. AQE promotes both joins to
-    # broadcast dynamically whenever the delta side is actually small
-    # (the common case), and degrades to a shuffle join instead of
-    # falling over when it is not.
+    # The touched keys and tombstones are batch-sized UNDER THE
+    # COMPACTION CADENCE, but nothing bounds how many folds a caller
+    # defers, so no FORCED broadcast (a driver OOM for the one operator
+    # that skips maintenance): AQE broadcasts a side that is actually
+    # small and falls back to a shuffle join when it is not. The anti-
+    # join ignores duplicate keys, so they are not deduplicated.
     if data:
-        dall = data[0][1]
-        for _, p in data[1:]:
-            dall = dall.unionByName(p)
-        touched = dall.select(*key).distinct()
-        newest = dall.groupBy(*key).agg(F.max("_delta_seq").alias("_delta_seq"))
-        winners = dall.join(newest, [*key, "_delta_seq"])
-        kept = base.join(touched, on=key, how="left_anti")
+        dall = reduce(DataFrame.unionByName, [p for _, p in data])
+        # newest wins: one delta's rows are all winners; across deltas one
+        # window keeps each key's rows at its newest seq. A NULL key is no
+        # key: it replaces nothing and is not served. (isNotNull, not
+        # dropna, keeps the anti-joins' broadcasts identical, so reused.)
+        winners = dall
+        for k in key:
+            winners = winners.filter(F.col(k).isNotNull())
+        if len(data) > 1:
+            newest = F.max("_delta_seq").over(Window.partitionBy(*key))
+            winners = (
+                winners.withColumn("_newest", newest)
+                .filter(F.col("_delta_seq") == F.col("_newest"))
+                .drop("_newest")
+            )
+        kept = base.join(dall.select(*key), on=key, how="left_anti")
     else:
         winners, kept = None, base
     if not tombs:
@@ -913,30 +925,24 @@ def _merge_deltas(
             return kept.select(*cols)
         return kept.select(*cols).unionByName(winners.select(*cols))
 
-    # Tombstone application: a row survives iff its last-write seq (base
-    # rows wrote at seq -1; delta winners at their log seq) is NEWER than
-    # every tombstone matching its (sub-)key. Tombstones are grouped by
-    # their key-column set — one left join + filter per distinct sub-key
+    # Tombstone application: a row survives iff no tombstone matching its
+    # (sub-)key is as new as its last write (base rows wrote at seq -1;
+    # delta winners at their log seq). Tombstones are grouped by their
+    # key-column set — one conditional anti-join per distinct sub-key
     # shape (in practice one), each tombstone side O(deleted keys).
     resolved = kept.select(*cols, F.lit(-1).alias("_delta_seq"))
     if winners is not None:
         resolved = resolved.unionByName(
             winners.select(*cols, F.col("_delta_seq"))
         )
-    by_shape: dict[tuple[str, ...], list] = {}
-    for i, p in tombs:
-        shape = tuple(c for c in p.columns if c != TOMBSTONE)
-        by_shape.setdefault(shape, []).append(
-            p.select(*shape).withColumn("_t_seq", F.lit(i))
+    for shape, tall in _shapes_of(tombs, key):
+        tk = [f"_tk{j}" for j in range(len(shape))]  # no name clashes
+        hit = [F.col(c) == F.col(t) for c, t in zip(shape, tk)]
+        resolved = resolved.join(
+            tall.toDF(*tk, "_t_seq"),
+            [*hit, F.col("_t_seq") >= F.col("_delta_seq")],
+            "left_anti",
         )
-    for shape, frames in by_shape.items():
-        tall = frames[0]
-        for f in frames[1:]:
-            tall = tall.unionByName(f)
-        newest_t = tall.groupBy(*shape).agg(F.max("_t_seq").alias("_t_seq"))
-        resolved = resolved.join(newest_t, on=list(shape), how="left").filter(
-            F.col("_t_seq").isNull() | (F.col("_delta_seq") > F.col("_t_seq"))
-        ).drop("_t_seq")
     return resolved.select(*cols)
 
 
@@ -1591,11 +1597,11 @@ def state_changes(
     # not intersection — a prefix tombstone and a full-key data delta
     # each independently put rows in play); the table is key-unique
     # (the keyed-diff contract), so the cross-shape dedup is exact
-    parts = [old.join(t, on=s, how="left_semi") for s, t in shapes]
-    old_p = parts[0]
-    for p in parts[1:]:
-        old_p = old_p.unionByName(p)
-    if len(parts) > 1:
+    old_p = reduce(
+        DataFrame.unionByName,
+        [old.join(t, on=s, how="left_semi") for s, t in shapes],
+    )
+    if len(shapes) > 1:
         old_p = old_p.dropDuplicates(key)
     new_p = _merge_deltas(old_p, raw_fresh, key)
     return _keyed_diff(old_p, new_p, cols, key)
@@ -1654,23 +1660,21 @@ def unapplied_changes(
 
 
 def _shapes_of(raw: list[tuple[int, DataFrame]], key: list[str]):
-    """[(pruning-column set, distinct touched values)] across delta
-    frames. A data delta prunes on the reader ``key`` (all key columns
-    are guaranteed present — the delta-key contract); a tombstone prunes
-    on its own column set, which may be a key prefix OR disjoint
-    attribute columns (equality deletes). Used by ``state_changes`` to
-    bound the extends-path diff at batch size."""
+    """[(column set, touched values + the ``_t_seq`` of their delta)]
+    across delta frames, one entry per column set. A data delta touches
+    the reader ``key`` (all key columns are guaranteed present — the
+    delta-key contract); a tombstone its own column set, which may be a
+    key prefix OR disjoint attribute columns (equality deletes).
+    ``state_changes`` semi-joins on these to bound the extends-path diff
+    at batch size, and ``_merge_deltas`` anti-joins its tombstones on
+    them. Both joins ignore duplicates, so the values keep theirs."""
     by_shape: dict[tuple[str, ...], list[DataFrame]] = {}
-    for _, p in raw:
+    for i, p in raw:
         if TOMBSTONE in p.columns:
             shape = tuple(c for c in p.columns if c != TOMBSTONE)
         else:
             shape = tuple(c for c in key if c in p.columns)
-        by_shape.setdefault(shape, []).append(p.select(*shape))
-    out = []
-    for shape, frames in by_shape.items():
-        tall = frames[0]
-        for f in frames[1:]:
-            tall = tall.unionByName(f)
-        out.append((list(shape), tall.distinct()))
-    return out
+        by_shape.setdefault(shape, []).append(
+            p.select(*shape, F.lit(i).alias("_t_seq"))
+        )
+    return [(list(s), reduce(DataFrame.unionByName, fs)) for s, fs in by_shape.items()]

@@ -673,9 +673,11 @@ def apply_agg_feed(
     sum-of-zero. ``meta`` lands on the commit.
 
     Scale: the signed delta aggregate is one feed-sized shuffle on
-    ``group_col``; the stored-aggregate join touches only changed groups
-    (right-outer, AQE broadcasts the delta side); the upsert carries
-    untouched groups over without reading the feed's source."""
+    ``group_col``; one full-outer join against the stored aggregate
+    (group-cardinality-sized) adds the deltas to touched groups and
+    carries untouched ones over at +0, and the result is the new
+    snapshot — the feed is planned once, not again by an upsert's
+    anti-join and union."""
     from pgcp_spark.operators._decimal import dec
 
     zero = F.lit(0).cast("decimal(18,2)")
@@ -694,24 +696,17 @@ def apply_agg_feed(
         )
     )
     stored = read_current(spark, agg_dir)
-    touched = stored.join(deltas, group_col, "right_outer").select(
+    merged = stored.join(deltas, group_col, "full_outer").select(
         group_col,
-        (F.coalesce(F.col("sum_dec"), zero) + F.col("d_sum"))
+        (F.coalesce(F.col("sum_dec"), zero) + F.coalesce(F.col("d_sum"), zero))
         .cast("decimal(18,2)")
         .alias("sum_dec"),
-        (F.coalesce(F.col("priced_cnt"), F.lit(0)) + F.col("d_priced")).alias(
-            "priced_cnt"
-        ),
-        (F.coalesce(F.col("order_cnt"), F.lit(0)) + F.col("d_cnt")).alias("order_cnt"),
+        (F.coalesce(F.col("priced_cnt"), F.lit(0))
+         + F.coalesce(F.col("d_priced"), F.lit(0))).alias("priced_cnt"),
+        (F.coalesce(F.col("order_cnt"), F.lit(0))
+         + F.coalesce(F.col("d_cnt"), F.lit(0))).alias("order_cnt"),
     )
-    upsert(
-        spark,
-        agg_dir,
-        touched,
-        key=[group_col],
-        keep=keep,
-        meta=meta,
-    )
+    write_snapshot(merged, agg_dir, keep=keep, meta=meta)
 
 
 def stamp_applied_state(

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pgcp_spark.sources import lake
@@ -556,3 +559,123 @@ def test_delta_dirs_carry_sidecar_and_mor_read_matches(spark, tmp_path):
         for r in lake.read_current_with_deltas(spark, table, key=["id"]).collect()
     )
     assert got == [(2, "b2", 4.0)]
+
+
+# --- merge-on-read resolve semantics, pinned against a plain replay --------
+# Key (k1, k2); sub-key tombstones delete on k1 alone. A row's key is "real"
+# only when every key column is non-NULL: a NULL never equals anything, so
+# a NULL-key data-delta row replaces nothing and is not served, and a
+# tombstone kills only rows whose shape columns equal its (non-NULL) values.
+
+_MOR_SCHEMA = "k1 int, k2 int, v string"
+_kv = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
+_mor_delta = st.one_of(
+    st.tuples(
+        st.just("data"),
+        st.lists(st.tuples(_kv, _kv, st.sampled_from(["x", "y", None])),
+                 max_size=5),
+    ),
+    st.tuples(st.just("full"), st.lists(st.tuples(_kv, _kv), max_size=3)),
+    st.tuples(st.just("sub"), st.lists(st.tuples(_kv), max_size=2)),
+)
+
+
+def _real(*vals) -> bool:
+    return all(v is not None for v in vals)
+
+
+def _unique_by_key(rows):
+    """One row per real key (the delta-key contract); NULL-key rows all
+    stay — they carry no key to be unique on."""
+    seen, out = set(), []
+    for r in rows:
+        if _real(r[0], r[1]):
+            if (r[0], r[1]) in seen:
+                continue
+            seen.add((r[0], r[1]))
+        out.append(r)
+    return out
+
+
+def _replay(base, deltas):
+    """Sequential plain-Python replay: a data delta replaces every live
+    row at its real keys and adds its real-key rows; a tombstone kills
+    every live row whose shape columns equal its non-NULL values."""
+    state = list(base)
+    for kind, rows in deltas:
+        if kind == "data":
+            keys = {(r[0], r[1]) for r in rows if _real(r[0], r[1])}
+            state = [r for r in state if (r[0], r[1]) not in keys]
+            state += [r for r in rows if _real(r[0], r[1])]
+        else:
+            width = 2 if kind == "full" else 1
+            dead = {t for t in rows if _real(*t)}
+            state = [r for r in state if tuple(r[:width]) not in dead]
+    return sorted(state, key=repr)
+
+
+def _apply_feed(old, feed):
+    state = list(old)
+    for r in feed:
+        row, kind = tuple(r[:3]), r[3]
+        if kind in ("delete", "update_preimage"):
+            state.remove(row)  # ValueError: the feed removed a row old lacks
+        else:
+            state.append(row)
+    return sorted(state, key=repr)
+
+
+@settings(max_examples=4, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(
+    base=st.lists(st.tuples(_kv, _kv, st.sampled_from(["a", "b"])), max_size=6),
+    deltas=st.lists(_mor_delta, min_size=1, max_size=3),
+    split=st.integers(min_value=0, max_value=2),
+)
+@example(  # a NULL-key data-delta row is dropped, not served
+    base=[(1, 1, "a"), (2, 2, "b")],
+    deltas=[("data", [(2, 2, "x"), (None, 3, "y")])],
+    split=0,
+)
+@example(  # a re-ingest after a sub-key delete resurrects only that key
+    base=[(1, 1, "a"), (1, 2, "b"), (None, 1, "a")],
+    deltas=[("sub", [(1,)]), ("data", [(1, 2, "x"), (1, None, "y")]),
+            ("full", [(2, 2), (None, 2)]), ("data", [(1, 2, "y")])],
+    split=1,
+)
+def test_mor_resolve_matches_plain_replay(spark, base, deltas, split):
+    """``read_current_with_deltas`` (every delta over the base) and
+    ``state_changes``' extends path (the fresh deltas resolved over the
+    already-resolved prefix state) both agree with a sequential replay,
+    over repeated keys across deltas, full-key and sub-key tombstones,
+    and NULL key values in the base, the data deltas and the tombstones."""
+    import tempfile
+
+    base = _unique_by_key(base)
+    deltas = [(k, _unique_by_key(r) if k == "data" else r) for k, r in deltas]
+    split = min(split, len(deltas) - 1)
+    table = tempfile.mkdtemp(prefix="mor_prop_")
+    try:
+        snap = lake.write_snapshot(spark.createDataFrame(base, _MOR_SCHEMA), table)
+        names = []
+        for kind, rows in deltas:
+            if kind == "data":
+                names.append(lake.append_delta(
+                    spark.createDataFrame(rows, _MOR_SCHEMA), table))
+            else:
+                cols = ["k1", "k2"] if kind == "full" else ["k1"]
+                keys = spark.createDataFrame(
+                    rows, ", ".join(f"{c} int" for c in cols))
+                names.append(lake.delete_delta(keys, table, key=cols))
+        key = ["k1", "k2"]
+        got = lake.read_current_with_deltas(spark, table, key).collect()
+        assert sorted(map(tuple, got), key=repr) == _replay(base, deltas)
+
+        old = _replay(base, deltas[:split])
+        feed = lake.state_changes(
+            spark, table, f"{snap}|{','.join(names[:split])}",
+            lake.pending_state(table), key,
+        ).select("k1", "k2", "v", "_change_type").collect()
+        assert _apply_feed(old, feed) == _replay(base, deltas)
+    finally:
+        shutil.rmtree(table, ignore_errors=True)

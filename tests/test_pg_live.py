@@ -249,6 +249,50 @@ def test_live_cli_cp_copy_transfer(spark, pg_server, client, tmp_path, transfer)
     assert client.fetch("SELECT COUNT(*) FROM dst_cli.pets")[0][0] == 50
 
 
+@pytest.mark.parametrize("transfer", ["copy", "pipe"])
+def test_live_copy_columns_named_like_psql_literals(pg_server, client, tmp_path, transfer):
+    """Columns named ``t``, ``f`` and ``7`` — what the psql client's
+    ``fetch`` would type as True, False and 7 — copy through the CLI with
+    every row and every index intact, the partial index on ``WHERE f``
+    included: the catalog reads names as text."""
+    from pgcp_spark.cli import main
+
+    client.execute("DROP TABLE IF EXISTS src.flags")
+    client.execute('CREATE TABLE src.flags (id INT PRIMARY KEY, t TEXT, f BOOLEAN, "7" INT)')
+    client.execute("CREATE INDEX flags_t ON src.flags (t)")
+    client.execute('CREATE UNIQUE INDEX flags_f_7 ON src.flags (t, "7") WHERE f')
+    client.execute(
+        "INSERT INTO src.flags SELECT i, 't' || (i % 4), i % 3 = 0, i FROM generate_series(1, 40) g(i)"
+    )
+    cfg = tmp_path / "pgcp.yml"
+    cfg.write_text(
+        "databases:\n"
+        "  db:\n"
+        f"    host: {pg_server.host}\n"
+        f"    port: {pg_server.port}\n"
+        "    dbname: postgres\n"
+        "    user: postgres\n"
+    )
+    client.execute("DROP SCHEMA IF EXISTS dst_flags CASCADE")
+    rc = main(["cp", "-s", "db", "-d", "db", "-t", "src.flags", "-f", "dst_flags",
+               "-c", str(cfg), "--transfer", transfer])
+    assert rc == 0
+
+    md5 = "SELECT md5(string_agg(CAST(ROW(id, t, f, \"7\") AS TEXT), '|' ORDER BY id)) FROM {}.flags"
+    assert client.fetch(md5.format("dst_flags")) == client.fetch(md5.format("src"))
+    assert [c.name for c in cat.column_definitions(client, "dst_flags", "flags")] == [
+        "id", "t", "f", "7"
+    ]
+    shape = lambda ixs: sorted((ix.columns, ix.unique, ix.primary, ix.where) for ix in ixs)  # noqa: E731
+    src_idx = cat.get_indexes(client, "src", "flags")
+    assert shape(src_idx) == [
+        (("id",), True, True, None),
+        (("t",), False, False, None),
+        (("t", '"7"'), True, False, "f"),
+    ]
+    assert shape(cat.get_indexes(client, "dst_flags", "flags")) == shape(src_idx)
+
+
 def test_live_pipe_writer_streams_partitions_into_copy(spark, pg_server, client):
     """O2/O3 cluster-scale path: per-partition psql COPY FROM STDIN pipes
     (no staging files), full fidelity vs the source."""

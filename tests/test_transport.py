@@ -17,6 +17,12 @@ from pgcp_spark.qualified_name import QualifiedName
 from pgcp_spark.transport import CopyOptions, Transport
 
 
+def _q(name):
+    """A catalog name as the catalog queries return it: behind a ``_``
+    prefix (``catalog._text``)."""
+    return None if name is None else "_" + name
+
+
 class FakeClient:
     """Minimal PgClient: records every statement, answers catalog queries
     from a canned dict."""
@@ -38,12 +44,13 @@ class FakeClient:
             return [(1 if exists else 0,)]
         if "information_schema.tables" in s:
             schema = re.search(r"table_schema = '([^']+)'", s).group(1)
-            return [(t,) for t in sorted(self.tables.get(schema, []))]
+            return [(_q(t),) for t in sorted(self.tables.get(schema, []))]
         if "pg_attribute" in s:
-            return [(c.name, c.type, not c.nullable) for c in self.columns]
+            return [(_q(c.name), _q(c.type), not c.nullable) for c in self.columns]
         if "pg_index" in s and "indisunique" in s:
             return [
-                (ix.name, ix.unique, ix.primary, ix.where, "\x1f".join(ix.columns))
+                (_q(ix.name), ix.unique, ix.primary, _q(ix.where),
+                 "\x1f".join(_q(c) for c in ix.columns))
                 for ix in self.indexes
             ]
         if "MIN(" in s:

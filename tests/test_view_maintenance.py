@@ -1254,3 +1254,82 @@ def test_minmax_fallback_beyond_probe_bound_matches_bounded_path(
     finally:
         for d in (view_a, agg_a, view_b, agg_b):
             shutil.rmtree(d, ignore_errors=True)
+
+
+# --- Spark job counts of one lake fold (the lake_ivm cycle, shrunk) -------
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted by ``statusTracker()`` under a job
+    group of its own, after the listener bus is drained (the tracker
+    only knows jobs whose events it has seen)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lake_fold_job_counts_stay_batch_sized(spark):
+    """One CDC batch per fold over a 3,000-row lake, as in the ``lake_ivm``
+    benchmark: ``merge_cdc_delta`` lands a data and a tombstone delta, and
+    ``fold_agg_join_view`` folds them into the stored aggregate. Under AQE
+    every exchange of the merge-on-read resolve and of the signed fold is
+    a job of its own, so the counts pin the plan shapes: the fold runs at
+    most 12 jobs with one batch pending and with two (where the old state
+    is itself resolved through the deltas), and the merge-on-read scan at
+    two batches at most 5. The folded aggregate equals its rebuild."""
+    from pgcp_spark.sources.lake import merge_cdc_delta, pending_state
+    from pgcp_spark.sources.view_maintenance import (
+        build_agg_over, fold_agg_join_view, read_agg, serve_agg,
+    )
+
+    key, group, value = ["o_orderkey"], "o_orderstatus", "o_totalprice"
+    table = tempfile.mkdtemp(prefix="ivm_jobs_t_")
+    agg = tempfile.mkdtemp(prefix="ivm_jobs_agg_")
+    try:
+        base = spark.range(1, 3001).select(
+            F.col("id").alias("o_orderkey"),
+            F.element_at(F.array(*map(F.lit, "FOP")), (F.col("id") % 3 + 1).cast("int"))
+            .alias(group),
+            (F.col("id") * 1.25).alias(value),
+        )
+        write_snapshot(base, table)
+        write_snapshot(
+            build_agg_over(read_current(spark, table), group, value), agg,
+            meta={"applied_view_state": pending_state(table)},
+        )
+
+        def batch(lo: int):
+            ups = spark.range(lo, 3001, 97).select(
+                F.col("id").alias("o_orderkey"), F.lit("P").alias(group),
+                (F.col("id") * 2.5).alias(value), F.lit("upsert").alias("_op"),
+            )
+            dels = spark.range(lo + 13, 3001, 89).select(
+                F.col("id").alias("o_orderkey"), F.lit(None).cast("string").alias(group),
+                F.lit(None).cast("double").alias(value), F.lit("delete").alias("_op"),
+            )
+            return ups.unionByName(dels)
+
+        fold = lambda: fold_agg_join_view(spark, agg, table, key, group, value)  # noqa: E731
+        merge_cdc_delta(spark, table, batch(1), key)
+        assert _spark_jobs(spark, fold) <= 12
+        merge_cdc_delta(spark, table, batch(5), key)
+        assert _spark_jobs(spark, fold) <= 12
+        scan = lambda: read_current_with_deltas(spark, table, key).write.format(  # noqa: E731
+            "noop").mode("overwrite").save()
+        assert _spark_jobs(spark, scan) <= 5
+
+        rebuilt = serve_agg(
+            build_agg_over(read_current_with_deltas(spark, table, key), group, value), group
+        )
+        assert _rows(read_agg(spark, agg, group)) == _rows(rebuilt)
+    finally:
+        shutil.rmtree(table, ignore_errors=True)
+        shutil.rmtree(agg, ignore_errors=True)

@@ -186,20 +186,16 @@ def build_ann_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
 
 
 def build_ann_index_from(
-    spark: SparkSession, corpus: DataFrame, index_dir: str, keep: int = 1
+    spark: SparkSession, corpus: DataFrame, index_dir: str
 ) -> None:
     """Fit the coarse quantizer on ``corpus`` (vec_id, embedding) and
     persist the index: centroids + CLUSTER BY list_id assigned vectors
     with hoisted norms. Same single-writer contract as the dedup index;
     the corpus-frame seam (mirroring the dedup index's
     ``build_index_from``) is what lets tools/ann_drift.py rebuild on an
-    arbitrary base+folded split to measure the re-fit payoff.
-
-    ``keep``: snapshots retained per table. The fresh build defaults to 1
-    (nothing earlier exists to grant grace to); the REFIT path passes 2 —
-    it runs while probes are being served, and a reader that resolved the
-    pre-refit pointer must keep its files until it finishes, the same
-    reader-grace contract ``compact_ann_index`` documents."""
+    arbitrary base+folded split to measure the re-fit payoff. A REFIT
+    runs it while probes are being served; a reader that resolved the
+    pre-refit pointers keeps their files for the lake's reader grace."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
     counts = corpus.agg(
@@ -211,12 +207,11 @@ def build_ann_index_from(
         empty_v = spark.createDataFrame(
             [], "vec_id long, embedding array<float>, nrm double, list_id int"
         )
-        write_snapshot(empty_c, os.path.join(index_dir, "centroids"), keep=keep)
-        write_snapshot(empty_v, os.path.join(index_dir, "vectors"), keep=keep)
+        write_snapshot(empty_c, os.path.join(index_dir, "centroids"))
+        write_snapshot(empty_v, os.path.join(index_dir, "vectors"))
         write_snapshot(
             spark.createDataFrame([], "metric string, value double"),
             os.path.join(index_dir, "stats"),
-            keep=keep,
         )
         return
     if counts["nd"] < 2:
@@ -248,12 +243,10 @@ def build_ann_index_from(
     write_snapshot(
         spark.createDataFrame(cent_rows, "list_id int, centroid array<double>"),
         os.path.join(index_dir, "centroids"),
-        keep=keep,
     )
     write_snapshot(
         with_norm(assigned).select("vec_id", "embedding", "nrm", "list_id"),
         os.path.join(index_dir, "vectors"),
-        keep=keep,
         cluster_by=_VECTORS_CLUSTER,
         # parallelism floor from day one: without it AQE byte-sizes the
         # range exchange to a handful of files and every probe join runs
@@ -273,7 +266,6 @@ def build_ann_index_from(
             "metric string, value double",
         ),
         os.path.join(index_dir, "stats"),
-        keep=keep,
     )
 
 
@@ -288,7 +280,7 @@ def stored_vectors(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
-def _flatten_vectors(spark: SparkSession, index_dir: str, keep: int = 2) -> None:
+def _flatten_vectors(spark: SparkSession, index_dir: str) -> None:
     """Merge pending fold deltas into the vectors base with the clustered
     layout re-established — the maintenance-cadence step every mutating
     path (refit / remove / compact) runs first, because each rewrites the
@@ -298,7 +290,6 @@ def _flatten_vectors(spark: SparkSession, index_dir: str, keep: int = 2) -> None
         spark,
         os.path.join(index_dir, "vectors"),
         key=["vec_id"],
-        keep=keep,
         cluster_by=_VECTORS_CLUSTER,
         cluster_files=spark.sparkContext.defaultParallelism,
     )
@@ -354,9 +345,7 @@ def maybe_refit_ann_index(
     stored = read_current(spark, os.path.join(index_dir, "vectors")).select(
         "vec_id", "embedding"
     )
-    # keep=2: the refit replaces live snapshots mid-serve — one snapshot
-    # of reader grace, matching compact_ann_index (round-7 advice #3)
-    build_ann_index_from(spark, stored, index_dir, keep=2)
+    build_ann_index_from(spark, stored, index_dir)
     report["refit"] = True
     report["after_frac"] = stored_max_list_frac(spark, index_dir)
     return report
@@ -471,7 +460,7 @@ def assignment_quality(batch: DataFrame, centroids: np.ndarray) -> float:
     return float("nan") if row.q is None else float(row.q)
 
 
-def update_ann_index(spark: SparkSession, batch: DataFrame, index_dir: str, keep: int = 2) -> None:
+def update_ann_index(spark: SparkSession, batch: DataFrame, index_dir: str) -> None:
     """Fold a batch into the stored index: assign to the nearest STORED
     centroid (nprobe=1, no re-fit) and land it as an APPENDED DELTA
     PARTITION keyed vec_id — a re-ingested vector's newest delta row
@@ -481,10 +470,7 @@ def update_ann_index(spark: SparkSession, batch: DataFrame, index_dir: str, keep
     pruning's footer skipping works inside it too; deltas merge into the
     base at the compaction/refit cadence. Centroids untouched
     (rebuild-cadence recompute; drift costs recall, never score
-    correctness). ``keep`` is unused on the append path (retained for
-    signature stability; grace is the flatten's concern) — a non-default
-    value warns rather than silently no-oping (round-9 advisory)."""
-    loop.warn_dead_keep(keep)
+    correctness)."""
     centroids = _load_centroids(spark, index_dir)
     if centroids.size == 0:
         return
@@ -499,7 +485,7 @@ def update_ann_index(spark: SparkSession, batch: DataFrame, index_dir: str, keep
 
 
 def remove_from_ann_index(
-    spark: SparkSession, ids: DataFrame, index_dir: str, keep: int = 2
+    spark: SparkSession, ids: DataFrame, index_dir: str
 ) -> None:
     """Retention/GDPR delete propagation: drop ``ids`` (single column
     ``vec_id``) from the stored vectors. Without this, a deleted
@@ -521,12 +507,9 @@ def remove_from_ann_index(
     streaming loop's batch-boundary proof rests on), and removal can
     only SHRINK lists — ``maybe_refit_ann_index`` picks up any resulting
     imbalance on its normal cadence. Removing absent ids is a no-op, so
-    replay converges. ``keep`` is unused on the tombstone path (reader
-    grace is the flatten's concern; retained for signature stability —
-    non-default values warn, round-9 advisory)."""
+    replay converges."""
     from pgcp_spark.sources.lake import delete_delta
 
-    loop.warn_dead_keep(keep)
     ids = materialize(ids.select("vec_id").distinct())
     delete_delta(ids, os.path.join(index_dir, "vectors"), key=["vec_id"])
 
@@ -548,8 +531,8 @@ def compact_ann_index(
     # pending fold deltas merge into the base first (the deferred half of
     # the O(batch) fold cost, paid here on the cadence)
     _flatten_vectors(spark, index_dir)
-    # reader grace (keep=2) comes from the shared harness; the vectors
-    # table alone re-ranges on its cluster key with the parallelism floor.
+    # the vectors table alone re-ranges on its cluster key with the
+    # parallelism floor
     loop.compact_tables(
         spark,
         index_dir,

@@ -154,7 +154,6 @@ def update_index(
     spark: SparkSession,
     batch: DataFrame,
     index_dir: str,
-    keep: int = 2,
     batch_postings: DataFrame | None = None,
 ) -> None:
     """Index maintenance: fold a just-deduped batch INTO the index so the
@@ -178,12 +177,7 @@ def update_index(
         converges to the from-scratch hot list with zero corpus access
         (it flattens pending deltas first). Between cadence runs the
         trade is unchanged: a newly-hot shingle costs extra candidate
-        pairs but never wrong results (verification is exact).
-
-    ``keep`` is unused on the append path (kept for signature stability;
-    reader grace is the flatten's concern) — a non-default value warns
-    rather than silently no-oping (round-9 advisory)."""
-    loop.warn_dead_keep(keep)
+        pairs but never wrong results (verification is exact)."""
     append_delta(
         minhash_signatures(batch), os.path.join(index_dir, "signatures")
     )
@@ -212,16 +206,16 @@ def stored_table(spark: SparkSession, index_dir: str, table: str) -> DataFrame:
     )
 
 
-def _flatten_all(spark: SparkSession, index_dir: str, keep: int = 2) -> None:
+def _flatten_all(spark: SparkSession, index_dir: str) -> None:
     """Merge pending fold deltas into the bases — the step every mutating
     maintenance path (promote / remove / compact) runs first, because
     each rewrites tables from full reads and rows hiding in un-merged
     deltas would survive (or go stale) otherwise."""
     for t, key in _DELTA_KEYS.items():
-        flatten_deltas(spark, os.path.join(index_dir, t), key=key, keep=keep)
+        flatten_deltas(spark, os.path.join(index_dir, t), key=key)
 
 
-def promote_hot_shingles(spark: SparkSession, index_dir: str, keep: int = 2) -> int:
+def promote_hot_shingles(spark: SparkSession, index_dir: str) -> int:
     """Incremental hot-list maintenance — the rebuild-cadence step of
     ``update_index``'s documented trade, as code instead of a corpus
     re-shingle.
@@ -246,7 +240,7 @@ def promote_hot_shingles(spark: SparkSession, index_dir: str, keep: int = 2) -> 
     un-caps a bucket. Returns the number of shingles promoted; commits
     nothing when the answer is zero.
     """
-    _flatten_all(spark, index_dir, keep=keep)
+    _flatten_all(spark, index_dir)
     postings_dir = os.path.join(index_dir, "postings")
     postings = read_current(spark, postings_dir)
     newly_hot = (
@@ -261,20 +255,19 @@ def promote_hot_shingles(spark: SparkSession, index_dir: str, keep: int = 2) -> 
     newly_hot = materialize(newly_hot)  # feeds the hot union AND the anti-join
     hot_dir = os.path.join(index_dir, "hot_shingles")
     write_snapshot(
-        read_current(spark, hot_dir).unionByName(newly_hot), hot_dir, keep=keep
+        read_current(spark, hot_dir).unionByName(newly_hot), hot_dir
     )
     remaining = postings.join(newly_hot, "shingle", "left_anti")
-    write_snapshot(remaining, postings_dir, keep=keep)
+    write_snapshot(remaining, postings_dir)
     write_snapshot(
         read_current(spark, postings_dir).groupBy("doc_id").agg(F.count("*").alias("sz")),
         os.path.join(index_dir, "sizes"),
-        keep=keep,
     )
     return n
 
 
 def remove_from_index(
-    spark: SparkSession, ids: DataFrame, index_dir: str, keep: int = 2
+    spark: SparkSession, ids: DataFrame, index_dir: str
 ) -> None:
     """Retention/GDPR delete propagation: drop ``ids`` (single column
     ``doc_id``) from signatures, postings, and sizes — one keyed
@@ -301,12 +294,9 @@ def remove_from_index(
     — extra conservatism, never wrong results (``promote_hot_shingles``
     holds the inverse, monotone-hotter argument). The next rebuild-
     cadence pass re-derives the list either way. Removing absent ids is
-    a no-op, so replay converges. ``keep`` is unused on the tombstone
-    path (reader grace is the flatten's concern; retained for signature
-    stability — non-default values warn, round-9 advisory)."""
+    a no-op, so replay converges."""
     from pgcp_spark.sources.lake import delete_delta
 
-    loop.warn_dead_keep(keep)
     ids = materialize(ids.select("doc_id").distinct())
     for t in ("signatures", "postings", "sizes"):
         delete_delta(ids, os.path.join(index_dir, t), key=["doc_id"])
@@ -399,10 +389,9 @@ def compact_index(
     files that tax every subsequent batch join with per-file task/footer
     overhead. Compaction rewrites each table toward ``target_file_bytes``
     through the same atomic pointer swap as any commit — same rows,
-    fewer files; concurrent readers never see a partial state, and
-    ``keep=2`` leaves one snapshot of READER GRACE (a query that
-    resolved the pre-compaction pointer keeps its files until the next
-    maintenance commit — ``keep=1`` would GC them mid-read). No
+    fewer files; concurrent readers never see a partial state, and a
+    query that resolved the pre-compaction pointer keeps its files for
+    the lake's reader grace. No
     clustering here: the postings join consumes the whole table (no
     selective scan to preserve a layout for), unlike the ANN index's
     list_id-pruned vectors. Pending fold deltas merge into the bases

@@ -113,7 +113,7 @@ def build_sketch_table(
     if upto_day is not None:
         events = events.filter(F.to_date("ts") <= F.lit(upto_day))
     return lake.write_snapshot(
-        daily_user_sketches(events, lgk), table_dir, keep=2, cluster_by=["day"]
+        daily_user_sketches(events, lgk), table_dir, cluster_by=["day"]
     )
 
 
@@ -165,7 +165,7 @@ def fold_sketch_batch(spark: SparkSession, batch: DataFrame, table_dir: str) -> 
     cadence."""
     partials = daily_user_sketches(batch)
     if lake.current_snapshot(table_dir) is None:
-        return lake.write_snapshot(partials, table_dir, keep=2, cluster_by=["day"])
+        return lake.write_snapshot(partials, table_dir, cluster_by=["day"])
     return lake.append_delta(partials, table_dir, cluster_by=["day"])
 
 
@@ -252,13 +252,12 @@ def retire_sketch_days(spark: SparkSession, table_dir: str, before_day) -> str:
     the day×event_type aggregate. A day-list tombstone would save a
     rewrite that costs less than the day-list scan needed to build it."""
     lake.flatten_deltas(
-        spark, table_dir, key=["event_type", "day"], keep=2, cluster_by=["day"]
+        spark, table_dir, key=["event_type", "day"], cluster_by=["day"]
     )
     return lake.delete(
         spark,
         table_dir,
         predicate=F.col("day") < F.lit(before_day),
-        keep=2,
         cluster_by=["day"],
     )
 

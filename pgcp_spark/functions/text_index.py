@@ -148,7 +148,6 @@ def _write_tables(
     spark: SparkSession,
     index_dir: str,
     postings: DataFrame,
-    keep: int = 1,
     stats_meta: dict | None = None,
 ) -> None:
     """Commit postings (CLUSTER BY tok), doclen, and stats from one
@@ -168,22 +167,20 @@ def _write_tables(
         lambda: write_snapshot(
             postings.select("tok", "doc_id", "n", "dl"),
             os.path.join(index_dir, "postings"),
-            keep=keep,
             cluster_by=["tok"],
             cluster_files=_postings_files(spark, n_rows),
         ),
         lambda: write_snapshot(
             postings.select("doc_id", "dl").distinct(),
             os.path.join(index_dir, "doclen"),
-            keep=keep,
             cluster_by=["doc_id"],
         ),
     )
-    _write_stats_from_doclen(spark, index_dir, keep=keep, meta=stats_meta)
+    _write_stats_from_doclen(spark, index_dir, meta=stats_meta)
 
 
 def _write_stats_from_doclen(
-    spark: SparkSession, index_dir: str, keep: int = 1, meta: dict | None = None
+    spark: SparkSession, index_dir: str, meta: dict | None = None
 ) -> None:
     """Commit stats/ as a pure function of the COMMITTED doclen (one
     doc-count-sized aggregate). Every stats write in this module goes
@@ -203,7 +200,6 @@ def _write_stats_from_doclen(
             "metric string, value long",
         ),
         os.path.join(index_dir, "stats"),
-        keep=keep,
         meta=meta,
     )
 
@@ -250,7 +246,6 @@ def update_text_index(
     spark: SparkSession,
     batch_docs: DataFrame,
     index_dir: str,
-    keep: int = 2,
     meta: dict | None = None,
     write_stats: bool = True,
 ) -> None:
@@ -319,19 +314,17 @@ def update_text_index(
         lambda: write_snapshot(
             kept_dl.unionByName(batch_pt.select("doc_id", "dl").distinct()),
             doclen_dir,
-            keep=keep,
             cluster_by=["doc_id"],
         ),
     )
     if write_stats:
-        _write_stats_from_doclen(spark, index_dir, keep=keep, meta=meta)
+        _write_stats_from_doclen(spark, index_dir, meta=meta)
 
 
 def remove_from_text_index(
     spark: SparkSession,
     ids: DataFrame,
     index_dir: str,
-    keep: int = 2,
     meta: dict | None = None,
 ) -> None:
     """Retention/GDPR delete PROPAGATION: drop every trace of ``ids``
@@ -378,11 +371,11 @@ def remove_from_text_index(
             ids, os.path.join(index_dir, "postings"), key=["doc_id"]
         ),
         lambda: delete(
-            spark, doclen_dir, keys=ids, key=["doc_id"], keep=keep,
+            spark, doclen_dir, keys=ids, key=["doc_id"],
             cluster_by=["doc_id"],
         ),
     )
-    _write_stats_from_doclen(spark, index_dir, keep=keep, meta=meta)
+    _write_stats_from_doclen(spark, index_dir, meta=meta)
 
 
 def _apply_cdc_to_text_index(
@@ -390,7 +383,6 @@ def _apply_cdc_to_text_index(
     ups: DataFrame,
     del_ids: DataFrame,
     index_dir: str,
-    keep: int = 2,
     meta: dict | None = None,
 ) -> None:
     """One MIXED CDC batch (re-texted/inserted docs AND deleted ids)
@@ -441,10 +433,10 @@ def _apply_cdc_to_text_index(
         ),
         lambda: delete_delta(del_ids, postings_dir, key=["doc_id"]),
         lambda: write_snapshot(
-            new_dl, doclen_dir, keep=keep, cluster_by=["doc_id"]
+            new_dl, doclen_dir, cluster_by=["doc_id"]
         ),
     )
-    _write_stats_from_doclen(spark, index_dir, keep=keep, meta=meta)
+    _write_stats_from_doclen(spark, index_dir, meta=meta)
 
 
 def compact_text_index(
@@ -454,13 +446,12 @@ def compact_text_index(
     the postings base first (``flatten_deltas`` — the deferred half of
     the O(batch) fold cost, paid here on the cadence), then postings
     re-range on tok (a plain file merge would smear tok ranges across
-    files and erode the query-time skipping), doclen on doc_id; reader
-    grace keep=2 for snapshots and one cycle for retired deltas."""
+    files and erode the query-time skipping), doclen on doc_id. Readers
+    mid-query keep their files for the lake's reader grace."""
     flatten_deltas(
         spark,
         os.path.join(index_dir, "postings"),
         key=["doc_id"],
-        keep=2,
         cluster_by=["tok"],
         cluster_files=spark.sparkContext.defaultParallelism,
     )
@@ -840,7 +831,7 @@ def text_bm25_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def fold_text_index_from_docs_state(
-    spark: SparkSession, docs_dir: str, index_dir: str, keep: int = 2
+    spark: SparkSession, docs_dir: str, index_dir: str
 ) -> bool:
     """Fold the documents lake's changes SINCE THE LAST FOLD into the
     stored BM25 index: inserts/postimages re-ingest through
@@ -874,7 +865,7 @@ def fold_text_index_from_docs_state(
     if not (have_ups or have_dels):
         # state moved without row changes (shadow deltas): stamp so the
         # next fold diffs from here instead of re-walking this window
-        _write_stats_from_doclen(spark, index_dir, keep=keep, meta=meta)
+        _write_stats_from_doclen(spark, index_dir, meta=meta)
         return False
     if have_ups and have_dels:
         # mixed diff: the FUSED apply — one doclen commit, overlapped
@@ -882,12 +873,12 @@ def fold_text_index_from_docs_state(
         # argued at _apply_cdc_to_text_index (identical to the r13
         # single-stats-commit contract)
         _apply_cdc_to_text_index(
-            spark, ups, dels, index_dir, keep=keep, meta=meta
+            spark, ups, dels, index_dir, meta=meta
         )
     elif have_ups:
-        update_text_index(spark, ups, index_dir, keep=keep, meta=meta)
+        update_text_index(spark, ups, index_dir, meta=meta)
     else:
-        remove_from_text_index(spark, dels, index_dir, keep=keep, meta=meta)
+        remove_from_text_index(spark, dels, index_dir, meta=meta)
     return True
 
 
@@ -940,7 +931,7 @@ def text_bm25_from_docs_change_feed(spark: SparkSession, sf_dir: str) -> DataFra
     index_dir = tempfile.mkdtemp(prefix="pgcp_bm25_cdc_idx_")
     try:
         write_snapshot(
-            docs.filter(F.col("doc_id") % 3 != 0), docs_dir, keep=2
+            docs.filter(F.col("doc_id") % 3 != 0), docs_dir
         )
         lake_docs = read_current(spark, docs_dir)
         # the watermark stamps AT build time (stats_meta) — the former
@@ -1045,7 +1036,7 @@ def text_bm25_group_commit_with_corpus(
     docs_dir = os.path.join(gdir, "docs")
     members = ("docs", "postings", "doclen", "stats")
     try:
-        write_snapshot(docs.filter(F.col("doc_id") % 3 != 0), docs_dir, keep=2)
+        write_snapshot(docs.filter(F.col("doc_id") % 3 != 0), docs_dir)
         lake_docs = read_current(spark, docs_dir)
         # watermark stamps at build time (stats_meta — see the CDC twin)
         build_text_index_from(
@@ -1069,14 +1060,7 @@ def text_bm25_group_commit_with_corpus(
             .withColumn("_op", F.lit("delete"))
         )
         merge_cdc_delta(spark, docs_dir, ups.unionByName(dels), key=["doc_id"])
-        # RETENTION LADDER: a fold lands up to TWO commits per
-        # copy-on-write member (doclen, stats — the update fold's and
-        # the removal fold's), and a reader holding the PREVIOUS group
-        # manifest must still resolve its pins until the next publish —
-        # so keep must exceed commits-per-publish: keep=3, not the
-        # per-table default of 2 (which GC'd the pinned pre-fold
-        # snapshot under a racing reader; pinned in tests)
-        fold_text_index_from_docs_state(spark, docs_dir, gdir, keep=3)
+        fold_text_index_from_docs_state(spark, docs_dir, gdir)
         # the publish: one metadata-only manifest replace pins the
         # corpus AND the index it drove, atomically
         occ_commit_group(

@@ -33,11 +33,11 @@ cycle. This module is that plumbing, extracted once:
     shares: schema'd file reader, optional maxFilesPerTrigger,
     availableNow trigger, checkpoint inside the staging dir (reclaimed
     with it), awaitTermination.
-  * ``compact_tables`` — per-subtable OPTIMIZE with ``keep=2`` reader
-    grace (a reader that resolved the pre-compaction pointer keeps its
-    files until the next maintenance commit), honoring per-table layout
-    kwargs (the ANN vectors table re-ranges on its cluster key; plain
-    tables just merge files).
+  * ``compact_tables`` — per-subtable OPTIMIZE through the lake's atomic
+    pointer swap (a reader that resolved the pre-compaction pointer
+    keeps its files for the lake's reader grace), honoring per-table
+    layout kwargs (the ANN vectors table re-ranges on its cluster key;
+    plain tables just merge files).
   * ``reclaim_by_mode`` — the result-directory rule: eager
     materialization modes (localCheckpoint / checkpoint) detach the
     result frame from its files, so run-scoped dirs are reclaimed
@@ -107,7 +107,6 @@ def maybe_flatten(
     table_dir: str,
     key: list[str],
     max_deltas: int | None = None,
-    keep: int = 2,
     cluster_by: list[str] | None = None,
     cluster_files: int | None = None,
 ) -> str | None:
@@ -131,32 +130,9 @@ def maybe_flatten(
         spark,
         table_dir,
         key=key,
-        keep=keep,
         cluster_by=cluster_by,
         cluster_files=cluster_files,
     )
-
-
-def warn_dead_keep(keep: int, default: int = 2) -> None:
-    """Round-9 advisory: the delta-append fold/delete paths no longer
-    consume ``keep`` (reader grace moved to the flatten), but the
-    parameter stays for signature stability — a caller passing a
-    non-default value expecting grace control gets a WARNING instead of
-    a silent no-op."""
-    if keep != default:
-        import warnings
-
-        # FutureWarning, not DeprecationWarning: the default warning
-        # filters hide DeprecationWarning outside __main__/test runners,
-        # which would make this exactly the silent no-op it exists to
-        # prevent — library callers must actually see it
-        warnings.warn(
-            "keep is unused on the delta-append path (reader grace is the"
-            " flatten's concern); pass it to the flatten/compact cadence op"
-            " instead",
-            FutureWarning,
-            stacklevel=3,
-        )
 
 
 def content_version_dir(
@@ -289,18 +265,17 @@ def compact_tables(
     per_table: dict[str, dict] | None = None,
 ) -> None:
     """OPTIMIZE each subtable toward ``target_file_bytes`` through the
-    lake's atomic pointer swap — same rows, fewer files, ``keep=2`` for
-    one snapshot of reader grace (maintenance runs while queries are
-    being served). ``per_table`` adds layout kwargs for tables whose
-    clustering must be REBUILT rather than file-merged (e.g. the ANN
-    vectors table's ``cluster_by`` + ``min_files`` parallelism floor)."""
+    lake's atomic pointer swap — same rows, fewer files; queries served
+    meanwhile keep their files for the lake's reader grace. ``per_table``
+    adds layout kwargs for tables whose clustering must be REBUILT rather
+    than file-merged (e.g. the ANN vectors table's ``cluster_by`` +
+    ``min_files`` parallelism floor)."""
     per_table = per_table or {}
     for t in subtables:
         compact(
             spark,
             os.path.join(index_dir, t),
             target_file_bytes=target_file_bytes,
-            keep=2,
             **per_table.get(t, {}),
         )
 

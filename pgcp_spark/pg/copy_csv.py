@@ -29,7 +29,9 @@ shared directory; the seam (reader/writer callables) stays identical.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+import weakref
 from concurrent.futures import ThreadPoolExecutor
 from glob import glob
 
@@ -94,15 +96,18 @@ def make_copy_reader(spark, client: PsqlCliClient):
         schema = ", ".join(f"`{c.name}` {spark_type_for(c.type)}" for c in columns)
         out_dir = tempfile.mkdtemp(prefix="pgcp_copy_out_")
 
-        selects = _partitioned_selects(client, src, columns, options)
-
         def export(i_sql):
             i, sql = i_sql
             path = os.path.join(out_dir, f"part-{i:05d}.csv")
             client.execute(f"\\copy ({sql}) to '{path}' {_COPY_OUT_OPTS}")
 
-        with ThreadPoolExecutor(max_workers=_PARALLELISM) as pool:
-            list(pool.map(export, enumerate(selects)))
+        try:
+            selects = _partitioned_selects(client, src, columns, options)
+            with ThreadPoolExecutor(max_workers=_PARALLELISM) as pool:
+                list(pool.map(export, enumerate(selects)))
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
 
         df = spark.read.csv(
             out_dir,
@@ -117,6 +122,10 @@ def make_copy_reader(spark, client: PsqlCliClient):
         for c in columns:
             if c.type.lower() == "boolean":
                 df = df.withColumn(c.name, F.col(c.name) == "t")
+        # the CSV files live as long as the frame that scans them: the
+        # staged write consumes it, and the dir goes when the caller drops
+        # the frame, on success and on failure (at exit at the latest)
+        weakref.finalize(df, shutil.rmtree, out_dir, True)
         return df
 
     return reader
@@ -128,21 +137,24 @@ def make_copy_writer(client: PsqlCliClient):
     def writer(df, staging: QualifiedName, options) -> None:
         out_dir = tempfile.mkdtemp(prefix="pgcp_copy_in_")
         part_dir = os.path.join(out_dir, "parts")
-        (
-            df.write.mode("overwrite")
-            .option("nullValue", _CSV_NULL)
-            .option("emptyValue", "\"\"")
-            .option("escape", '"')  # RFC 4180 doubled quotes for PG COPY
-            .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .csv(part_dir)
-        )
-        parts = sorted(glob(os.path.join(part_dir, "part-*")))
+        try:
+            (
+                df.write.mode("overwrite")
+                .option("nullValue", _CSV_NULL)
+                .option("emptyValue", "\"\"")
+                .option("escape", '"')  # RFC 4180 doubled quotes for PG COPY
+                .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+                .csv(part_dir)
+            )
+            parts = sorted(glob(os.path.join(part_dir, "part-*")))
 
-        def load(path: str) -> None:
-            client.execute(f"\\copy {staging.quoted} from '{path}' {_COPY_OPTS}")
+            def load(path: str) -> None:
+                client.execute(f"\\copy {staging.quoted} from '{path}' {_COPY_OPTS}")
 
-        with ThreadPoolExecutor(max_workers=_PARALLELISM) as pool:
-            list(pool.map(load, parts))
+            with ThreadPoolExecutor(max_workers=_PARALLELISM) as pool:
+                list(pool.map(load, parts))
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
 
     return writer
 

@@ -90,7 +90,8 @@ def lake_change_feed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tdir = tempfile.mkdtemp(prefix="pgcp_change_feed_")
     try:
-        snap_a = write_snapshot(base, tdir, keep=2)
+        snap_a = write_snapshot(base, tdir)
+        # keep=2: table_changes below reads snap_a by name
         upsert(spark, tdir, updates, key=["o_orderkey"], keep=2)
         result = materialize(
             table_changes(spark, tdir, snap_a, key=["o_orderkey"]).orderBy(
@@ -154,6 +155,7 @@ def lake_incremental_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         updates = orders.filter(F.col("o_orderkey") % 5 == 0).withColumn(
             "o_totalprice", F.col("o_totalprice") * 2
         )
+        # keep=2: the harness's table_changes reads snap_a by name
         upsert(spark, fact_dir, updates, key=["o_orderkey"], keep=2)
 
     return _run_incremental_agg(spark, sf_dir, mutate)
@@ -179,7 +181,7 @@ def _run_incremental_agg(spark: SparkSession, sf_dir: str, mutate) -> DataFrame:
         shutil.rmtree(agg_dir, ignore_errors=True)
 
     try:
-        snap_a = write_snapshot(base, fact_dir, keep=3)
+        snap_a = write_snapshot(base, fact_dir)
         write_snapshot(build_agg_over(base, "o_custkey", "o_totalprice"), agg_dir)
         mutate(fact_dir, orders)
         feed = table_changes(spark, fact_dir, snap_a, key=["o_orderkey"])
@@ -242,7 +244,9 @@ def lake_delete_change_feed_orders(spark: SparkSession, sf_dir: str) -> DataFram
     )
     tdir = tempfile.mkdtemp(prefix="pgcp_delete_feed_")
     try:
-        snap_a = write_snapshot(base, tdir, keep=3)
+        snap_a = write_snapshot(base, tdir)
+        # keep=3 across the two mutations: table_changes below reads
+        # snap_a by name
         upsert(spark, tdir, updates, key=["o_orderkey"], keep=3)
         delete(
             spark,
@@ -296,6 +300,7 @@ def lake_incremental_agg_orders_cdc(spark: SparkSession, sf_dir: str) -> DataFra
     which the delete-free original could never show."""
 
     def mutate(fact_dir: str, orders: DataFrame) -> None:
+        # keep=2: the harness's table_changes reads snap_a by name
         merge_cdc(spark, fact_dir, standard_cdc_batch(orders), key=["o_orderkey"], keep=2)
 
     return _run_incremental_agg(spark, sf_dir, mutate)
@@ -451,15 +456,14 @@ def lake_incremental_minmax_orders(spark: SparkSession, sf_dir: str) -> DataFram
         shutil.rmtree(agg_dir, ignore_errors=True)
 
     try:
-        snap_a = write_snapshot(
-            base, fact_dir, keep=3, cluster_by=["o_custkey"]
-        )
+        snap_a = write_snapshot(base, fact_dir, cluster_by=["o_custkey"])
         write_snapshot(
             build_minmax_over(base, "o_custkey", "o_totalprice"), agg_dir
         )
+        # keep=2: table_changes below reads snap_a by name
         merge_cdc(
             spark, fact_dir, standard_cdc_batch(orders), key=["o_orderkey"],
-            keep=3, cluster_by=["o_custkey"],
+            keep=2, cluster_by=["o_custkey"],
         )
         feed = table_changes(spark, fact_dir, snap_a, key=["o_orderkey"])
         # the rescan source is the FACT itself here
@@ -529,7 +533,7 @@ def lake_incremental_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFr
             shutil.rmtree(d, ignore_errors=True)
 
     try:
-        snap_a = write_snapshot(base, fact_dir, keep=3)
+        snap_a = write_snapshot(base, fact_dir)
         write_snapshot(
             build_distinct_support(base, "o_orderpriority", "o_custkey"),
             sup_dir,
@@ -538,9 +542,10 @@ def lake_incremental_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFr
         write_snapshot(
             build_distinct_over(base, "o_orderpriority", "o_custkey"), agg_dir
         )
+        # keep=2: table_changes below reads snap_a by name
         merge_cdc(
             spark, fact_dir, standard_cdc_batch(orders, "o_orderpriority"),
-            key=["o_orderkey"], keep=3,
+            key=["o_orderkey"], keep=2,
         )
         feed = table_changes(spark, fact_dir, snap_a, key=["o_orderkey"])
         apply_distinct_feed(

@@ -18,10 +18,17 @@ the reference gets from its transaction. This is the same commit protocol
 table formats like Iceberg/Delta use (a mutable pointer over immutable data
 files), reduced to its minimum.
 
-Time travel: ``_LOG`` records the committed snapshot names in commit order
-(advisory — the pointer stays authoritative); ``write_snapshot(keep=N)``
-retains the last N committed snapshots so ``read_snapshot`` can serve
-historical reads, and GCs everything older plus crash orphans.
+Time travel and garbage collection: ``_LOG`` records the committed
+snapshot names in commit order (advisory — the pointer stays
+authoritative). ONE rule reaps them (``_expire``): a committed snapshot
+goes only when it is older than the newest ``keep`` AND was retired —
+replaced by its successor's commit, whose time ``_COMMITS`` records —
+at least ``GRACE_S`` ago. A delta folded by ``flatten_deltas`` is
+retired at the flatten's commit and follows the same rule. So ``keep``
+is time-travel depth only; a reader is safe because nothing it could
+have resolved vanishes within the grace, the lake's stand-in for
+PostgreSQL keeping a dropped table alive under its readers
+(postgres.rb:93-106). ``vacuum`` is the explicit end of grace.
 
 MERGE-shaped upsert: parquet files are immutable, so ``upsert`` is
 copy-on-write — new/updated rows win by key, unmatched current rows carry
@@ -99,6 +106,15 @@ LOCK_STALE_S = 60.0  # a metadata commit takes milliseconds; a lock this
 # on eventually-consistent or clock-skewed network filesystems. On those
 # (and on object stores) replace the whole dance with the store's
 # conditional put/delete; the protocol seam is identical.
+# Reader grace: a retired snapshot or delta dir survives this long after
+# its retirement, whatever ``keep`` says (``_expire``). A reader resolved
+# its snapshot before the retirement, so the grace must cover at most the
+# reader's own run time. The slowest whole registered query at sf0.1
+# (tools/time_registry.py, 4 cores, quiet box) is
+# streaming_ingest_dedup_decisions at 10.4 s, an upper bound on any
+# single read inside it; this VM's same-query runs swing up to 12x
+# (ROADMAP), so 12 x 10.4 s = 125 s, rounded up.
+GRACE_S = 150.0
 _UNCHECKED = object()  # expect_parent sentinel: None means "expect empty"
 
 
@@ -436,6 +452,67 @@ def _append_log_line(path: str, line: str) -> None:
         f.write(f"{lead}{line}\n")
 
 
+def _retired(table_dir: str) -> list[tuple[str, float]]:
+    """(delta, retire epoch) pairs of the deltas flattens folded that
+    ``_expire`` has not reaped yet. A line without a time (written before
+    retire times were recorded) reads as retired long ago."""
+    out = []
+    for line in _read_names(_delta_retired_path(table_dir)):
+        name, _, ts = line.partition("\t")
+        try:
+            out.append((name, float(ts)))
+        except ValueError:
+            out.append((name, 0.0))
+    return out
+
+
+def _write_retired(table_dir: str, retired: list[tuple[str, float]]) -> None:
+    _atomic_write(
+        _delta_retired_path(table_dir),
+        "".join(f"{name}\t{ts:.6f}\n" for name, ts in retired),
+    )
+
+
+def _expire(table_dir: str, keep: int, retire: list[str] = ()) -> list[str]:
+    """The lake's one GC rule, run under the caller's commit lock by every
+    commit (``write_snapshot``) and every flatten (which first records its
+    folded deltas as ``retire``d now). A committed snapshot is reaped
+    only when it is older than the newest ``keep`` AND was retired at
+    least ``GRACE_S`` ago; it was retired when its successor committed,
+    at the successor's ``_COMMITS`` time. A retired delta is reaped
+    ``GRACE_S`` after its flatten. A successor with no ``_COMMITS`` line
+    (a table written before the sidecar existed, or a torn append)
+    counts as committed long ago: that snapshot is reaped by count, as
+    before this rule. Unreaped snapshots stay in ``_LOG``, so a later GC
+    or ``vacuum`` still sees them as committed, not as orphans.
+    Uncommitted dirs are never touched here (a concurrent writer's stage
+    is ``vacuum``'s age-guarded job). Returns the dirs to remove once the
+    lock is released."""
+    now = time.time()
+    cutoff = now - GRACE_S
+    committed = history(table_dir)
+    committed_at = dict(commit_times(table_dir))
+    doomed = [
+        snap
+        for snap, successor in zip(committed[: -max(1, keep)], committed[1:])
+        if committed_at.get(successor, 0.0) <= cutoff
+    ]
+    retired = _retired(table_dir) + [(d, now) for d in retire]
+    doomed += [d for d, ts in retired if ts <= cutoff]
+    _atomic_write(
+        _log_path(table_dir),
+        "\n".join(s for s in committed if s not in doomed) + "\n",
+    )
+    if retired:
+        _write_retired(table_dir, [(d, ts) for d, ts in retired if ts > cutoff])
+    return doomed
+
+
+def _remove(table_dir: str, names: list[str]) -> None:
+    for name in names:  # two overlapping reapers double-delete harmlessly
+        shutil.rmtree(os.path.join(table_dir, name), ignore_errors=True)
+
+
 def write_snapshot(
     df: DataFrame,
     table_dir: str,
@@ -451,9 +528,12 @@ def write_snapshot(
 
     Returns the committed snapshot name. The parquet write happens into the
     (reader-invisible) snapshot dir; the only mutation readers can observe
-    is the single atomic pointer replace. ``keep`` newest committed
-    snapshots are retained for time travel; older ones and crash-orphaned
-    uncommitted dirs are GC'd.
+    is the single atomic pointer replace. The commit then runs the lake's
+    one GC rule (``_expire``): the newest ``keep`` committed snapshots
+    stay for time travel, and an older one goes once it has been retired
+    for ``GRACE_S`` — so a reader of the snapshot this commit replaces
+    keeps its files for the grace whatever ``keep`` is. Crash-orphaned
+    uncommitted dirs are ``vacuum``'s job.
 
     ``cluster_by``: range-partition + sort the data on these columns before
     writing (the CLUSTER BY / Z-ORDER-lite layout op). Each parquet file
@@ -541,37 +621,16 @@ def write_snapshot(
                 f"{current_snapshot(table_dir)!r}"
             )
         _atomic_write(_pointer_path(table_dir), snap)  # the atomic commit
-        committed = history(table_dir)  # reconciles snap via the pointer
-        _atomic_write(_log_path(table_dir), "\n".join(committed) + "\n")
         # commit-time sidecar for AS-OF-timestamp time travel: appended
         # under the commit lock, so commit order == timestamp order
         # (torn-tail-healing append — _append_log_line docstring)
         _append_log_line(_commits_path(table_dir), f"{snap}\t{time.time():.6f}")
 
-        kept = set(committed[-max(1, keep):])
-        # commit-time GC DECISION under the lock (it reads the committed
-        # log), the rmtree I/O AFTER release: deleting a whole snapshot
-        # dir can legitimately take longer than LOCK_STALE_S on a big
-        # table, and a lock held past the staleness threshold invites a
-        # waiter to break it mid-critical-section. Only committed-and-
-        # beyond-keep snapshots reap; an uncommitted uuid dir may be a
-        # CONCURRENT writer's stage — that is vacuum's age-guarded job.
-        # Two overlapping reapers double-delete harmlessly
-        # (ignore_errors); a reader pinned beyond ``keep`` was never
-        # protected — keep IS the reader grace (occ_upsert docstring).
-        to_reap = [
-            entry
-            for entry in os.listdir(table_dir)
-            if entry.startswith(SNAPSHOT_PREFIX)
-            and entry not in kept
-            and entry in committed
-        ]
-        if len(committed) > keep:
-            _atomic_write(
-                _log_path(table_dir), "\n".join(committed[-max(1, keep):]) + "\n"
-            )
-    for entry in to_reap:  # outside the lock: pure I/O, no metadata reads
-        shutil.rmtree(os.path.join(table_dir, entry), ignore_errors=True)
+        # the GC DECISION under the lock (it reads the committed log), the
+        # rmtree I/O after release: deleting a big snapshot dir can take
+        # longer than LOCK_STALE_S
+        doomed = _expire(table_dir, keep)
+    _remove(table_dir, doomed)
     return snap
 
 
@@ -607,9 +666,9 @@ def write_snapshot(
 #           resurrects the key, and one before it stays dead.
 #   merge:  ``flatten_deltas`` folds base ∪ deltas into a fresh snapshot on
 #           the maintenance cadence (compaction), then retires the folded
-#           delta dirs with ONE cycle of reader grace (the keep=2
-#           discipline): retired names move to ``_DELTAS_RETIRED`` and the
-#           dirs are reaped by the NEXT flatten (or ``vacuum``).
+#           delta dirs: their names move to ``_DELTAS_RETIRED`` with the
+#           retire time, and the lake's one GC rule (``_expire``) reaps
+#           them ``GRACE_S`` later, at a later commit (or ``vacuum`` now).
 #
 # Crash safety: the parquet write lands before the log append (an unlogged
 # delta dir is invisible — a crash orphan reaped by ``vacuum``'s age
@@ -650,8 +709,8 @@ def delta_names(table_dir: str) -> list[str]:
 
 
 def retired_delta_names(table_dir: str) -> list[str]:
-    """Deltas folded by the last flatten, lingering for reader grace."""
-    return _read_names(_delta_retired_path(table_dir))
+    """Deltas folded by a flatten, lingering for reader grace."""
+    return [name for name, _ in _retired(table_dir)]
 
 
 def _wrote_nothing(delta_path: str) -> bool:
@@ -959,12 +1018,10 @@ def flatten_deltas(
     """Fold active deltas into a fresh base snapshot (the maintenance-
     cadence merge). Layout kwargs re-establish clustering exactly like
     ``compact``. Returns the new snapshot name, or None if there was
-    nothing to fold. The folded delta dirs get ONE maintenance cycle of
-    reader grace: their names move to ``_DELTAS_RETIRED`` and the dirs
-    are physically reaped by the NEXT flatten (or by ``vacuum``)."""
-    for stale in retired_delta_names(table_dir):  # last cycle's grace ends
-        shutil.rmtree(os.path.join(table_dir, stale), ignore_errors=True)
-    _atomic_write(_delta_retired_path(table_dir), "")
+    nothing to fold. The folded delta dirs are retired at this flatten's
+    commit: their names move to ``_DELTAS_RETIRED`` and the lake's one GC
+    rule (``_expire``) reaps them once they have been retired for
+    ``GRACE_S`` (``vacuum`` reaps them at once)."""
     names = delta_names(table_dir)
     if not names:
         return None
@@ -989,7 +1046,8 @@ def flatten_deltas(
             _delta_log_path(table_dir),
             ("\n".join(remaining) + "\n") if remaining else "",
         )
-        _atomic_write(_delta_retired_path(table_dir), "\n".join(names) + "\n")
+        doomed = _expire(table_dir, keep, retire=names)
+    _remove(table_dir, doomed)
     return snap
 
 
@@ -1047,7 +1105,7 @@ def occ_upsert(
     updates: DataFrame,
     key: list[str],
     retries: int = 5,
-    keep: int = 2,
+    keep: int = 1,
     cluster_by: list[str] | None = None,
     cluster_files: int | None = None,
 ) -> str:
@@ -1062,16 +1120,11 @@ def occ_upsert(
     source recomputed between attempts would merge different rows than
     it probed (the ``merge_cdc_delta`` discipline).
 
-    ``keep`` is LOAD-BEARING under concurrency — it is the reader grace:
-    a competing writer's in-flight merge plan still SCANS the shared
-    parent's files while this writer commits, so retention must cover
-    every concurrent reader of the parent or the loser dies with
-    FAILED_READ_FILE inside its stage instead of a clean
-    ``CommitConflict`` (found by the fleet suite racing two writers at
-    keep=1 — the winner's commit-time GC deleted the parent mid-plan).
-    Rule: ``keep`` ≥ the number of concurrent writers; the default 2
-    covers the two-writer case, same discipline as the refit/compaction
-    keep=2 grace.
+    A competing writer's in-flight merge plan still SCANS the shared
+    parent's files while the winner commits; the lake's reader grace
+    (``GRACE_S``, ``_expire``) keeps them, so the loser gets a clean
+    ``CommitConflict`` instead of FAILED_READ_FILE inside its stage,
+    whatever ``keep`` is. ``keep`` is time-travel depth only.
 
     Use this (or the commutative ``append_delta``) when a table has
     concurrent writers; the plain ``upsert`` remains the cheaper call on
@@ -1134,11 +1187,11 @@ def delete(
     Layout contract is ``upsert``'s: the rewrite is full copy-on-write, so
     passing ``cluster_by``/``zorder_by`` re-establishes a clustered layout
     for one extra exchange, and omitting them on a clustered table quietly
-    degrades later selective scans. ``keep`` ≥ 2 retains the pre-delete
-    snapshot for time travel — note a GDPR pipeline must then run
-    ``vacuum(table_dir, keep=1)`` (or delete with ``keep=1``) before the
-    data is truly gone; the change feed still reports the delete either
-    way.
+    degrades later selective scans. The pre-delete snapshot stays on disk
+    for the reader grace (``GRACE_S``) and as long as ``keep`` retains it
+    for time travel, so a GDPR pipeline runs ``vacuum(table_dir,
+    keep=1)`` for "truly gone now"; the change feed reports the delete
+    either way.
 
     Scale: predicate deletes are one filtered scan (the predicate also
     pushes into the parquet scan, so untouched files stream through);
@@ -1221,15 +1274,16 @@ def vacuum(
     and return the names removed. Pure metadata/filesystem op — no Spark
     job, no data rewrite, and the CURRENT pointer is never touched.
 
-    This is the second half of the GDPR contract ``delete`` documents:
-    with ``keep`` ≥ 2 a delete retains the pre-delete snapshot for time
-    travel, so the data is logically deleted but still on disk until the
-    next commit's GC. ``vacuum(table_dir, keep=1)`` makes "truly gone"
-    an explicit, immediate step instead of a side effect of whenever the
-    next write happens — the same role Delta's VACUUM plays after a
-    DELETE. Readers mid-flight on a vacuumed snapshot lose their files
-    (that is the point); run it after the retention window, exactly like
-    any lakehouse VACUUM.
+    This is the explicit end of the reader grace and the second half of
+    the GDPR contract ``delete`` documents: a deleted row's pre-delete
+    snapshot stays on disk for the grace (``GRACE_S``) and for as long
+    as ``keep`` retains it, and the commit-time GC (``_expire``) reaps it
+    only at a later commit. ``vacuum(table_dir, keep=1)`` makes "truly
+    gone" an explicit, immediate step — the same role Delta's VACUUM
+    plays after a DELETE: it reaps committed snapshots beyond ``keep``
+    at ANY age. Readers mid-flight on a vacuumed snapshot lose their
+    files (that is the point); run it after the retention window,
+    exactly like any lakehouse VACUUM.
 
     ``orphan_min_age_s`` guards the one race the single-writer contract
     (indexes/loop.py) doesn't cover: an UNCOMMITTED snapshot dir might be
@@ -1244,8 +1298,8 @@ def vacuum(
 
     Delta dirs (merge-on-read layer): ACTIVE deltas are live data and
     never touched; RETIRED deltas (folded by a flatten, lingering for
-    reader grace) are reaped — vacuum is the explicit end of grace,
-    same as for retained snapshots; unlogged delta dirs are crash
+    reader grace) are reaped at any age, as retained snapshots are;
+    unlogged delta dirs are crash
     orphans under the same age guard as uncommitted snapshots.
 
     ``protect``: snapshot/delta names that must SURVIVE regardless of
@@ -1261,10 +1315,9 @@ def vacuum(
     kept = set(committed[-max(1, keep):]) | (protect & set(committed))
     committed_set = set(committed)
     active_deltas = set(delta_names(table_dir))
-    retired_deltas = set(retired_delta_names(table_dir))
-    import time as _time
-
-    now = _time.time()
+    retired = _retired(table_dir)
+    retired_deltas = {name for name, _ in retired}
+    now = time.time()
     removed = []
     for entry in os.listdir(table_dir):
         is_snap = entry.startswith(SNAPSHOT_PREFIX)
@@ -1287,12 +1340,8 @@ def vacuum(
                 continue  # young = possibly a concurrent stage — skip
         shutil.rmtree(os.path.join(table_dir, entry), ignore_errors=True)
         removed.append(entry)
-    if retired_deltas:  # their grace ends with this vacuum
-        _atomic_write(
-            _delta_retired_path(table_dir),
-            "\n".join(d for d in retired_deltas if d in protect)
-            + ("\n" if retired_deltas & protect else ""),
-        )
+    if retired:  # their grace ends with this vacuum
+        _write_retired(table_dir, [(d, ts) for d, ts in retired if d in protect])
     _atomic_write(
         _log_path(table_dir),
         "\n".join(s for s in committed if s in kept) + "\n",

@@ -127,7 +127,6 @@ def write_with_expectations(
     table_dir: str,
     rules: list[Expectation],
     quarantine_dir: str | None = None,
-    keep: int = 1,
 ) -> dict[str, int]:
     """Guarded lake write: apply the rules, abort on any fail-action
     violation (nothing commits — the gate is before the pointer, so
@@ -154,8 +153,8 @@ def write_with_expectations(
             f"{ {n: metrics[n] for n in failed} }"
         )
     if quarantine_dir is not None:
-        write_snapshot(quarantined, quarantine_dir, keep=keep)
-    write_snapshot(passing, table_dir, keep=keep)
+        write_snapshot(quarantined, quarantine_dir)
+    write_snapshot(passing, table_dir)
     return metrics
 
 

@@ -30,9 +30,10 @@ Crash anywhere before the manifest replace leaves group readers on the
 old consistent state; the half-applied per-table writes are invisible to
 them and converge on replay (MOR newest-wins for data/tombstone deltas,
 the cascade fold's commit watermark for the aggregate — the repo's
-standing at-least-once discipline). Retention: member tables must keep
-``keep >= 2`` snapshots so the PREVIOUS manifest's pins survive one
-group commit (the same reader-grace rule as ``occ_upsert``).
+standing at-least-once discipline). Retention: a snapshot or delta the
+previous manifest pins is retired by a member's later commit, and the
+lake's reader grace (``lake.GRACE_S``) keeps it for a reader holding
+that manifest; ``vacuum_group`` ends the grace without reaping a pin.
 
 Single-table readers of a member table see its per-table commits as they
 land (fresher than the manifest, possibly mixed across tables) — the
@@ -341,10 +342,10 @@ def _register_group_query() -> None:
             )
             overlap(  # three independent member tables (§2.6); the group
                 # manifest commit below needs all three states — after join
-                lambda: write_snapshot(base_fact, gdir + "/fact", keep=2),
-                lambda: write_snapshot(dim, gdir + "/dim", keep=2),
+                lambda: write_snapshot(base_fact, gdir + "/fact"),
+                lambda: write_snapshot(dim, gdir + "/dim"),
                 lambda: write_snapshot(
-                    view0, gdir + "/view", cluster_by=["o_custkey"], keep=2
+                    view0, gdir + "/view", cluster_by=["o_custkey"]
                 ),
             )
             snap0 = commit_group(
@@ -419,7 +420,7 @@ def _register_group_query() -> None:
         )
         gdir = tempfile.mkdtemp(prefix="pgcp_txn_asof_")
         try:
-            write_snapshot(dim, gdir + "/dim", keep=2)
+            write_snapshot(dim, gdir + "/dim")
             snap = commit_group(gdir, {"dim": table_state(gdir, "dim")})
             for mod, seg in ((2, "SEG2"), (3, "SEG3")):
                 # the log's time-ordering invariant is float-timestamp

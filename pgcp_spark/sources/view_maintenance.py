@@ -314,7 +314,7 @@ class ViewSpec:
 
     tables: tuple[str, ...]
     _build: Callable[["ViewSpec", DataFrame], tuple[DataFrame, ...]]
-    _fold: Callable[[SparkSession, "ViewSpec", dict[str, str], int], bool]
+    _fold: Callable[[SparkSession, "ViewSpec", dict[str, str]], bool]
     _serve: Callable[["ViewSpec", DataFrame], DataFrame]
     clustered: tuple[str, ...] = ()  # tables laid out CLUSTER BY GROUP_COL
     value_col: str = "o_totalprice"
@@ -324,10 +324,10 @@ class ViewSpec:
         initial build and every test's recompute oracle."""
         return dict(zip(self.tables, self._build(self, view)))
 
-    def fold(self, spark: SparkSession, dirs: dict[str, str], keep: int = 1) -> bool:
+    def fold(self, spark: SparkSession, dirs: dict[str, str]) -> bool:
         """Fold ``dirs["view"]``'s changes since the watermark into the
         owned tables at ``dirs[name]``."""
-        return self._fold(spark, self, dirs, keep)
+        return self._fold(spark, self, dirs)
 
     def serve(self, stored: DataFrame) -> DataFrame:
         """The ordered serving projection over a stored ``agg`` frame."""
@@ -344,7 +344,7 @@ def member_dirs(
 
 
 def write_spec_tables(
-    spec: ViewSpec, view: DataFrame, dirs: dict[str, str], keep: int = 1
+    spec: ViewSpec, view: DataFrame, dirs: dict[str, str]
 ) -> None:
     """Build ``spec``'s tables over ``view`` (the frame just written to
     ``dirs["view"]``) and write each stamped with the view's committed
@@ -357,7 +357,6 @@ def write_spec_tables(
                 df,
                 dirs[t],
                 cluster_by=[GROUP_COL] if t in spec.clustered else None,
-                keep=keep,
                 meta=stamp,
             )
             for t, df in spec.build(view).items()
@@ -366,13 +365,13 @@ def write_spec_tables(
 
 
 def write_view_and_tables(
-    view: DataFrame, dirs: dict[str, str], spec: ViewSpec | None, keep: int = 1
+    view: DataFrame, dirs: dict[str, str], spec: ViewSpec | None
 ) -> None:
     """The view's base snapshot, then ``spec``'s stamped tables over it —
     chained, because the stamp reads the view's committed state."""
-    write_snapshot(view, dirs["view"], cluster_by=["o_custkey"], keep=keep)
+    write_snapshot(view, dirs["view"], cluster_by=["o_custkey"])
     if spec is not None:
-        write_spec_tables(spec, view, dirs, keep=keep)
+        write_spec_tables(spec, view, dirs)
 
 
 def serve_view_tables(
@@ -429,7 +428,8 @@ def _join_view_cycle(
     - ``mor``: both base mutations land MERGE-ON-READ (``append_delta`` /
       ``merge_cdc_delta``) and the fold consumes ``pending_changes``,
       with ``dim_current`` resolved merge-on-read too; otherwise copy-on-
-      write (keep=2) with the snapshot-diff feed (``table_changes``).
+      write with the snapshot-diff feed (``table_changes``), whose
+      by-name read of the pre-mutation snapshots ``keep=2`` retains.
     - ``flatten``: flatten the view's deltas after the folds.
 
     NULL-custkey facts and childless dim keys drop out of the INNER join
@@ -453,8 +453,8 @@ def _join_view_cycle(
         ).select("o_orderkey", "o_custkey", value, *dim_cols[1:])
         # fact, dim and the view chain land three INDEPENDENT table sets
         fact_snap, dim_snap, _ = overlap(
-            lambda: write_snapshot(base_fact, dirs["fact"], keep=2),
-            lambda: write_snapshot(dim, dirs["dim"], keep=2),
+            lambda: write_snapshot(base_fact, dirs["fact"]),
+            lambda: write_snapshot(dim, dirs["dim"]),
             lambda: write_view_and_tables(view0, dirs, spec),
         )
         view_base = current_snapshot(dirs["view"])
@@ -476,6 +476,8 @@ def _join_view_cycle(
                 spark, dirs["dim"], key=["c_custkey"]
             )
         else:
+            # keep=2: table_changes below reads fact_snap and dim_snap by
+            # name after these commits replace them
             overlap(
                 lambda: upsert(
                     spark, dirs["dim"], dim_updates, key=["c_custkey"], keep=2
@@ -624,7 +626,6 @@ def fold_agg_join_view(
     view_key: list[str],
     group_col: str,
     value_col: str,
-    keep: int = 1,
 ) -> bool:
     """Fold the view's changes SINCE THE LAST FOLD into the stored
     aggregate at ``agg_dir``: the ``applied_view_state`` watermark
@@ -648,7 +649,7 @@ def fold_agg_join_view(
     state, feed = got
     apply_agg_feed(
         spark, agg_dir, feed, group_col, value_col,
-        meta={"applied_view_state": state}, keep=keep,
+        meta={"applied_view_state": state},
     )
     return True
 
@@ -660,7 +661,6 @@ def apply_agg_feed(
     group_col: str,
     value_col: str,
     meta: dict | None = None,
-    keep: int = 1,
 ) -> None:
     """The signed fold's core, independent of where the change feed came
     from — ``fold_agg_join_view`` drives it from a maintained view's
@@ -706,11 +706,11 @@ def apply_agg_feed(
         (F.coalesce(F.col("order_cnt"), F.lit(0))
          + F.coalesce(F.col("d_cnt"), F.lit(0))).alias("order_cnt"),
     )
-    write_snapshot(merged, agg_dir, keep=keep, meta=meta)
+    write_snapshot(merged, agg_dir, meta=meta)
 
 
 def stamp_applied_state(
-    spark: SparkSession, agg_dir: str, view_dir: str, keep: int = 1
+    spark: SparkSession, agg_dir: str, view_dir: str
 ) -> None:
     """Re-anchor the aggregate's watermark to the view's CURRENT state id
     without changing a row — called after a view flatten (which preserves
@@ -721,7 +721,6 @@ def stamp_applied_state(
     write_snapshot(
         read_current(spark, agg_dir),
         agg_dir,
-        keep=keep,
         meta={"applied_view_state": pending_state(view_dir)},
     )
 
@@ -729,8 +728,8 @@ def stamp_applied_state(
 AGG_SPEC = ViewSpec(
     tables=("agg",),
     _build=lambda s, view: (build_agg_over(view, GROUP_COL, s.value_col),),
-    _fold=lambda spark, s, d, keep: fold_agg_join_view(
-        spark, d["agg"], d["view"], VIEW_KEY, GROUP_COL, s.value_col, keep=keep
+    _fold=lambda spark, s, d: fold_agg_join_view(
+        spark, d["agg"], d["view"], VIEW_KEY, GROUP_COL, s.value_col
     ),
     _serve=lambda s, stored: serve_agg(stored, GROUP_COL).orderBy(GROUP_COL),
 )
@@ -825,7 +824,6 @@ def fold_minmax_join_view(
     view_key: list[str],
     group_col: str,
     value_col: str,
-    keep: int = 1,
 ) -> bool:
     """Fold the view's changes since the last fold into the stored
     per-group MIN/MAX aggregate at ``agg_dir`` — the cascade fold for the
@@ -844,7 +842,7 @@ def fold_minmax_join_view(
     apply_minmax_feed(
         spark, agg_dir, feed, group_col, value_col,
         rescan_source=lambda: read_current_with_deltas(spark, view_dir, key=view_key),
-        meta={"applied_view_state": state}, keep=keep,
+        meta={"applied_view_state": state},
     )
     return True
 
@@ -857,7 +855,6 @@ def apply_minmax_feed(
     value_col: str,
     rescan_source: Callable[[], DataFrame],
     meta: dict | None = None,
-    keep: int = 1,
 ) -> None:
     """The MIN/MAX fold's core, independent of where the change feed came
     from (the ``apply_distinct_feed`` split): ``fold_minmax_join_view``
@@ -943,7 +940,6 @@ def apply_minmax_feed(
         agg_dir,
         out,
         key=[group_col],
-        keep=keep,
         meta=meta,
     )
 
@@ -951,8 +947,8 @@ def apply_minmax_feed(
 MINMAX_SPEC = ViewSpec(
     tables=("agg",),
     _build=lambda s, view: (build_minmax_over(view, GROUP_COL, s.value_col),),
-    _fold=lambda spark, s, d, keep: fold_minmax_join_view(
-        spark, d["agg"], d["view"], VIEW_KEY, GROUP_COL, s.value_col, keep=keep
+    _fold=lambda spark, s, d: fold_minmax_join_view(
+        spark, d["agg"], d["view"], VIEW_KEY, GROUP_COL, s.value_col
     ),
     _serve=lambda s, stored: serve_minmax(stored, GROUP_COL).orderBy(GROUP_COL),
 )
@@ -1200,7 +1196,6 @@ def fold_distinct_join_view(
     view_key: list[str],
     group_col: str,
     value_col: str,
-    keep: int = 1,
 ) -> bool:
     """Fold the view's changes since the last fold into the stored
     support table and distinct-count aggregate: the ``applied_view_state``
@@ -1226,7 +1221,6 @@ def fold_distinct_join_view(
                 group_col,
             ),
             agg_dir,
-            keep=keep,
             meta=stamp,
         )
         if got is None:
@@ -1236,7 +1230,7 @@ def fold_distinct_join_view(
     state, feed = got
     apply_distinct_feed(
         spark, support_dir, agg_dir, feed, group_col, value_col,
-        meta={"applied_view_state": state}, keep=keep,
+        meta={"applied_view_state": state},
     )
     return True
 
@@ -1249,7 +1243,6 @@ def apply_distinct_feed(
     group_col: str,
     value_col: str,
     meta: dict | None = None,
-    keep: int = 1,
 ) -> None:
     """The COUNT DISTINCT fold's core, independent of where the change
     feed came from — the cascade fold above drives it from a maintained
@@ -1289,14 +1282,12 @@ def apply_distinct_feed(
                     spark, support_dir, key=[group_col, value_col]
                 ).limit(0),
                 key=[group_col, value_col],
-                keep=keep,
                 meta=meta,
             ),
             lambda: upsert(
                 spark, agg_dir,
                 read_current(spark, agg_dir).limit(0),
                 key=[group_col],
-                keep=keep,
                 meta=meta,
             ),
         )
@@ -1338,12 +1329,11 @@ def apply_distinct_feed(
     # the support stays authoritative — the agg is rebuilt from it at the
     # support's watermark and the residual diff re-folds, which converges
     # whether the agg was behind or ahead (the rebuild overwrites
-    # either). Support keeps one commit of grace
-    # (keep >= 2) regardless of the caller's keep: the agg rollup
-    # derives from the PRE-upsert support, and under a non-checkpointing
-    # materialization mode (plans.materialize.plan_only — the width
-    # audit; mode 'none') or a task retry spanning this commit, its
-    # lineage re-reads the old snapshot this commit would otherwise GC
+    # either). The agg rollup derives from the PRE-upsert support: under
+    # a non-checkpointing materialization mode (plans.materialize.
+    # plan_only — the width audit; mode 'none') or a task retry spanning
+    # this commit, its lineage re-reads the old snapshot, which the
+    # lake's reader grace keeps
     stored_agg = read_current(spark, agg_dir)
     folded = stored_agg.join(d_distinct, group_col, "right_outer").select(
         group_col,
@@ -1358,7 +1348,6 @@ def apply_distinct_feed(
             touched.drop("old_cnt"),
             key=[group_col, value_col],
             cluster_by=[group_col],
-            keep=max(keep, 2),
             meta=meta,
         ),
         lambda: upsert(
@@ -1366,7 +1355,6 @@ def apply_distinct_feed(
             agg_dir,
             folded,
             key=[group_col],
-            keep=keep,
             meta=meta,
         ),
     )
@@ -1378,9 +1366,9 @@ DISTINCT_SPEC = ViewSpec(
         build_distinct_support(view, GROUP_COL, s.value_col),
         build_distinct_over(view, GROUP_COL, s.value_col),
     ),
-    _fold=lambda spark, s, d, keep: fold_distinct_join_view(
+    _fold=lambda spark, s, d: fold_distinct_join_view(
         spark, d["support"], d["agg"], d["view"], VIEW_KEY,
-        GROUP_COL, s.value_col, keep=keep,
+        GROUP_COL, s.value_col,
     ),
     _serve=lambda s, stored: serve_distinct(stored, GROUP_COL).orderBy(GROUP_COL),
     clustered=("support",),
@@ -1524,7 +1512,6 @@ def fold_topk_join_view(
     key_col: str,
     value_col: str,
     k: int,
-    keep: int = 1,
 ) -> bool:
     """Fold the view's changes since the last fold into the stored
     per-group top-k sets. Watermark discipline is the family's
@@ -1648,13 +1635,12 @@ def fold_topk_join_view(
     # untouched group over. The agg table is (k x groups)-sized, so the
     # rewrite is the same cost class as the keyed upsert (itself a full
     # COW merge) while expressing row REMOVAL, which a keyed upsert
-    # cannot. One commit of grace (keep >= 2): the replacement derives
-    # from the pre-commit store (the plan-only/task-retry rule the
-    # distinct fold's support commit established).
+    # cannot. The replacement derives from the pre-commit store, which
+    # the lake's reader grace keeps for a re-reading lineage (the
+    # plan-only/task-retry case of the distinct fold's support commit).
     write_snapshot(
         kept.unionByName(out),
         agg_dir,
-        keep=max(keep, 2),
         cluster_by=[group_col],
         meta={"applied_view_state": state},
     )
@@ -1668,9 +1654,9 @@ TOPK_SPEC = ViewSpec(
     _build=lambda s, view: (
         build_topk_over(view, GROUP_COL, VIEW_KEY[0], s.value_col, TOPK_K),
     ),
-    _fold=lambda spark, s, d, keep: fold_topk_join_view(
+    _fold=lambda spark, s, d: fold_topk_join_view(
         spark, d["agg"], d["view"], VIEW_KEY,
-        GROUP_COL, VIEW_KEY[0], s.value_col, TOPK_K, keep=keep,
+        GROUP_COL, VIEW_KEY[0], s.value_col, TOPK_K,
     ),
     _serve=lambda s, stored: serve_topk(stored, GROUP_COL, VIEW_KEY[0]).orderBy(
         GROUP_COL, "rnk"

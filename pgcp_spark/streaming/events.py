@@ -597,9 +597,9 @@ def streaming_foreach_batch_lake_upsert(spark: SparkSession, sf_dir: str) -> Dat
             )
         )
         if lake.current_snapshot(table_dir) is None:
-            lake.write_snapshot(latest, table_dir, keep=2)
+            lake.write_snapshot(latest, table_dir)
         else:
-            lake.upsert(spark, table_dir, latest, key=["user_id"], keep=2)
+            lake.upsert(spark, table_dir, latest, key=["user_id"])
 
     with _stream_partitions(spark):
         q = (

@@ -217,9 +217,9 @@ def process_ingest_batch(
         )
     )
     if current_snapshot(neighbors_dir) is None:
-        write_snapshot(neighbors, neighbors_dir, keep=2)
+        write_snapshot(neighbors, neighbors_dir)
     else:
-        upsert(spark, neighbors_dir, neighbors, key=["vec_id", "rank"], keep=2)
+        upsert(spark, neighbors_dir, neighbors, key=["vec_id", "rank"])
     update_ann_index(spark, batch, index_dir)
     # self-healing cadence (round 10): every FLATTEN_MAX_DELTAS-th batch
     # merges the fold deltas so the probe join's read tax never compounds

@@ -251,9 +251,9 @@ def process_ingest_batch(
         )
     )
     if current_snapshot(decisions_dir) is None:
-        write_snapshot(decisions, decisions_dir, keep=2)
+        write_snapshot(decisions, decisions_dir)
     else:
-        upsert(spark, decisions_dir, decisions, key=["doc_id"], keep=2)
+        upsert(spark, decisions_dir, decisions, key=["doc_id"])
     update_index(spark, batch, index_dir, batch_postings=batch_sh)
     # self-healing cadence (round 10): every FLATTEN_MAX_DELTAS-th batch
     # merges each subtable's fold deltas so the vs-index joins' read tax

@@ -223,28 +223,18 @@ def fold_view_batch(
     captures the live post states; the CAS still guards against an
     operator accidentally racing a second owner (detect, never lose)."""
     dirs = member_dirs(root, spec)
-    # RETENTION, decided once here: under txn a group-manifest reader
-    # pins the PREVIOUS publish's downstream snapshots, and one publish
-    # window can land TWO commits per owned table (the fold + the
-    # flatten's re-stamp) — keep must exceed commits-per-publish (the
-    # BM25 group fold's rule), so keep=3 (keep=1 GC'd the pinned
-    # snapshot under a racing reader). A per-table stream has no pinned
-    # reader: the per-table default.
-    keep = 3 if txn else 1
     after_fold = on_flatten = after_batch = None
     if spec is not None:
 
         def after_fold() -> None:
-            spec.fold(spark, dirs, keep)
+            spec.fold(spark, dirs)
 
         def on_flatten() -> None:
             # the owned tables re-anchor independently to the same
             # committed view state — overlapped (§2.6)
             overlap(
                 *[
-                    lambda t=t: stamp_applied_state(
-                        spark, dirs[t], dirs["view"], keep=keep
-                    )
+                    lambda t=t: stamp_applied_state(spark, dirs[t], dirs["view"])
                     for t in spec.tables
                 ]
             )
@@ -293,9 +283,6 @@ def run_ingest_view(
     base = orders.filter(F.col("o_orderkey") % 3 != 0)
     root = tempfile.mkdtemp(prefix="pgcp_ingest_view_")
     dirs = member_dirs(root, spec)
-    # the initial snapshots of a group keep one commit of grace for the
-    # manifest reader pinned to them; a per-table run uses the default
-    keep = 2 if txn else 1
     staging = None
     try:
         view0 = base.join(
@@ -312,8 +299,8 @@ def run_ingest_view(
             )
 
         overlap(  # fact lake, view + spec tables, CDC staging: independent (§2.6)
-            lambda: write_snapshot(base, dirs["fact"], keep=keep),
-            lambda: write_view_and_tables(view0, dirs, spec, keep=keep),
+            lambda: write_snapshot(base, dirs["fact"]),
+            lambda: write_view_and_tables(view0, dirs, spec),
             _stage,
         )
         if txn:

@@ -278,8 +278,8 @@ def test_compact_leaves_reader_grace(spark, ann_root, tmp_path):
     """Maintenance runs while probes are served: a reader that resolved
     the PRE-compaction snapshot (its DataFrame plan points at those
     files) must still be able to finish after compact_ann_index commits
-    — keep=2 retains exactly one snapshot of reader grace, so the
-    collect below would FileNotFound under keep=1."""
+    — the lake's reader grace keeps the retired snapshot's files, with
+    no keep count."""
     import shutil
 
     from pgcp_spark.functions.ann_index import compact_ann_index

@@ -168,7 +168,7 @@ def test_sketch_day_retirement_and_user_resketch(spark, tmp_path):
         "event_type",
     )
     assert len(got) > 0
-    # time travel still reads the pre-retirement partials (keep=2)
+    # a reader of the pre-retirement partials keeps them (the grace)
     assert lake.read_snapshot(spark, table_dir, pre_snap).count() > len(
         lake.read_current(spark, table_dir).collect()
     ) - 1

@@ -251,9 +251,8 @@ def txn_runs(spark):
                 try:
                     _observe()
                 except Exception as exc:  # noqa: BLE001 — a died reader must
-                    # FAIL the test (a GC'd pin under keep=1 killed the
-                    # thread silently and passed it vacuously — the exact
-                    # hazard the keep-exceeds-commits-per-publish rule fixes)
+                    # FAIL the test, never pass it vacuously (a GC'd pin is
+                    # the hazard the lake's reader grace closes)
                     torn.append(f"reader died: {exc}")
                     return
                 if torn:

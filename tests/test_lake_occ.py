@@ -226,7 +226,7 @@ def test_read_as_of_timestamp(spark, tdir):
     GC'd snapshot raises the retention error."""
     import time as _t
 
-    from pgcp_spark.sources.lake import commit_times, read_as_of
+    from pgcp_spark.sources.lake import commit_times, read_as_of, vacuum
 
     write_snapshot(_kv(spark, [(1, 1)]), tdir, keep=3)
     _t.sleep(0.02)
@@ -244,9 +244,10 @@ def test_read_as_of_timestamp(spark, tdir):
     with pytest.raises(FileNotFoundError, match="no commit at or before"):
         read_as_of(spark, tdir, times[0][1] - 1.0)
 
-    # GC the oldest (keep=1) — its timestamp now answers with the
-    # retention error, not silently newer data
+    # reap the history (vacuum keep=1) — the oldest timestamp now
+    # answers with the retention error, not silently newer data
     write_snapshot(_kv(spark, [(1, 4)]), tdir, keep=1)
+    vacuum(tdir, keep=1)
     with pytest.raises(FileNotFoundError, match="GC'd past the keep window"):
         read_as_of(spark, tdir, mid)
 
@@ -275,9 +276,9 @@ def test_stale_lock_break_protocol(tmp_path):
 
 
 def test_commit_gc_runs_outside_lock(spark, tmp_path):
-    """Beyond-keep snapshots still reap on commit (the GC moved outside
-    the lock — behavior unchanged, hold time shortened), and the lock
-    file is gone when write_snapshot returns."""
+    """The commit's GC decision is taken under the lock and its rmtree
+    runs after release: the lock file is gone when write_snapshot
+    returns, and the replaced snapshot is still there (its grace)."""
     import os
 
     from pgcp_spark.sources.lake import (
@@ -290,8 +291,8 @@ def test_commit_gc_runs_outside_lock(spark, tmp_path):
     df = spark.createDataFrame([(1,)], ["k"])
     s1 = write_snapshot(df, d, keep=1)
     s2 = write_snapshot(df, d, keep=1)
-    assert history(d) == [s2]
-    assert not os.path.isdir(os.path.join(d, s1))  # reaped
+    assert history(d) == [s1, s2]
+    assert os.path.isdir(os.path.join(d, s1))  # retired just now: grace
     assert os.path.isdir(os.path.join(d, s2))
     assert not os.path.exists(os.path.join(d, COMMIT_LOCK))
 

@@ -57,9 +57,13 @@ def test_readers_unaffected_by_uncommitted_snapshot(spark, tmp_path):
 
 
 def test_commit_leaves_exactly_one_snapshot(spark, tmp_path):
+    """The replaced snapshot outlives the commit for the reader grace;
+    vacuum, the explicit end of grace, leaves exactly the current one."""
     table = str(tmp_path / "t")
-    lake.write_snapshot(_df(spark, [(1, "a", 1.0)]), table)
+    s1 = lake.write_snapshot(_df(spark, [(1, "a", 1.0)]), table)
     lake.upsert(spark, table, _df(spark, [(1, "a2", 10.0)]), key=["id"])
+    assert os.path.isdir(os.path.join(table, s1))  # in its grace
+    assert lake.vacuum(table) == [s1]
     snaps = [e for e in os.listdir(table) if e.startswith(lake.SNAPSHOT_PREFIX)]
     assert len(snaps) == 1
     assert lake.current_snapshot(table) == snaps[0]
@@ -84,8 +88,11 @@ def test_time_travel_with_keep(spark, tmp_path):
     new = [tuple(r) for r in lake.read_current(spark, table).collect()]
     assert old == [(1, "a", 1.0)]
     assert new == [(1, "a2", 2.0)]
-    # third commit with keep=2 expires s1
+    # a third commit puts s1 beyond keep=2, but it stays in its grace
+    # until vacuum ends that
     s3 = lake.upsert(spark, table, _df(spark, [(1, "a3", 3.0)]), key=["id"], keep=2)
+    assert lake.history(table) == [s1, s2, s3]
+    assert lake.vacuum(table, keep=2) == [s1]
     assert lake.history(table) == [s2, s3]
     try:
         lake.read_snapshot(spark, table, s1)
@@ -245,13 +252,72 @@ def test_flatten_deltas_merges_then_retires_with_grace(spark, tmp_path):
     assert snap is not None
     assert lake.delta_names(table) == []
     assert lake.retired_delta_names(table) == [delta]
-    assert os.path.isdir(os.path.join(table, delta))  # one cycle of grace
+    assert os.path.isdir(os.path.join(table, delta))  # in its grace
     got = sorted(tuple(r) for r in lake.read_current(spark, table).collect())
     assert got == [(1, "a", 1.0), (2, "b2", 20.0)]
-    # idempotent when drained; the NEXT flatten ends the grace
+    # idempotent when drained; later commits inside the grace keep it
     assert lake.flatten_deltas(spark, table, key=["id"]) is None
-    assert not os.path.isdir(os.path.join(table, delta))
+    lake.write_snapshot(lake.read_current(spark, table), table)
+    assert os.path.isdir(os.path.join(table, delta))
+    assert lake.retired_delta_names(table) == [delta]
+
+
+def _age(path: str, by: float) -> None:
+    """Move every recorded time in a tab-separated sidecar log back by
+    ``by`` seconds: the commits and retirements it records happened
+    that long ago."""
+    lines = []
+    for line in open(path).read().splitlines():
+        name, ts = line.split("\t")
+        lines.append(f"{name}\t{float(ts) - by:.6f}\n")
+    open(path, "w").write("".join(lines))
+
+
+def test_commit_gc_reaps_by_retire_time_not_count(spark, tmp_path):
+    """The one GC rule: a commit reaps a snapshot beyond ``keep`` only
+    once its successor committed ``GRACE_S`` ago, and a flatten-retired
+    delta only ``GRACE_S`` after the flatten. Time passing is the
+    recorded commit and retire times moved back."""
+    table = str(tmp_path / "t")
+    s1 = lake.write_snapshot(_df(spark, [(1, "a", 1.0)]), table)
+    lake.append_delta(_df(spark, [(1, "b", 2.0)]), table)
+    (delta,) = lake.delta_names(table)
+    s2 = lake.flatten_deltas(spark, table, key=["id"])
+    s3 = lake.write_snapshot(lake.read_current(spark, table), table)
+    assert lake.history(table) == [s1, s2, s3]  # all retired < GRACE_S ago
+    _age(os.path.join(table, "_COMMITS"), lake.GRACE_S + 1)
+    _age(os.path.join(table, lake.DELTA_RETIRED), lake.GRACE_S + 1)
+    s4 = lake.write_snapshot(lake.read_current(spark, table), table)
+    # s1 and s2 were retired by commits now past the grace; s3 was
+    # retired by s4, just now
+    assert lake.history(table) == [s3, s4]
+    for gone in (s1, s2, delta):
+        assert not os.path.isdir(os.path.join(table, gone))
     assert lake.retired_delta_names(table) == []
+    # keep still holds history past the grace
+    _age(os.path.join(table, "_COMMITS"), lake.GRACE_S + 1)
+    s5 = lake.write_snapshot(lake.read_current(spark, table), table, keep=3)
+    assert lake.history(table) == [s3, s4, s5]
+
+
+def test_commit_gc_without_retire_record_reaps_by_count(spark, tmp_path):
+    """A table written before retire times were recorded: no ``_COMMITS``
+    line for a successor, a ``_DELTAS_RETIRED`` line with no time. Such
+    a snapshot or delta counts as retired long ago and is reaped by
+    count, as before the grace; the snapshot the new commit replaces
+    gets its grace from that commit's own line."""
+    table = str(tmp_path / "t")
+    s1 = lake.write_snapshot(_df(spark, [(1, "a", 1.0)]), table)
+    lake.append_delta(_df(spark, [(1, "b", 2.0)]), table)
+    (delta,) = lake.delta_names(table)
+    s2 = lake.flatten_deltas(spark, table, key=["id"])
+    os.remove(os.path.join(table, "_COMMITS"))
+    open(os.path.join(table, lake.DELTA_RETIRED), "w").write(delta + "\n")
+    s3 = lake.write_snapshot(lake.read_current(spark, table), table)
+    assert lake.history(table) == [s2, s3]
+    assert not os.path.isdir(os.path.join(table, s1))
+    assert not os.path.isdir(os.path.join(table, delta))
+    assert os.path.isdir(os.path.join(table, s2))
 
 
 def test_vacuum_reaps_retired_deltas_spares_active_and_young_orphans(
@@ -361,8 +427,8 @@ def test_flatten_applies_tombstones_physically(spark, tmp_path):
     base = lake.read_current(spark, table)
     assert base.columns == ["id", "name", "amount"]  # marker never lands
     assert [tuple(r) for r in base.collect()] == [(2, "b", 2.0)]
-    # flatten + vacuum = the "truly gone" GDPR step: after the NEXT
-    # flatten/vacuum ends grace, no file under the table contains id=1
+    # flatten + vacuum = the "truly gone" GDPR step: once vacuum ends
+    # the grace, no file under the table contains id=1
     lake.vacuum(table, keep=1)
     import glob as _glob
 
@@ -487,23 +553,6 @@ def test_pending_changes_mixed_key_shapes_union_not_intersection(spark, tmp_path
         ("x", 1, 9, "update_postimage"),
         ("y", 2, 1, "delete"),
     ]
-
-
-def test_warn_dead_keep_is_visible_by_default():
-    """Round-9 advisory follow-up: the dead-keep warning must be a
-    FutureWarning (shown under Python's default filters) — a
-    DeprecationWarning is hidden outside __main__/test runners, which
-    would be exactly the silent no-op the warning exists to prevent."""
-    import warnings
-
-    from pgcp_spark.indexes.loop import warn_dead_keep
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("default")
-        warn_dead_keep(2)  # default: silent
-        assert w == []
-        warn_dead_keep(5)
-        assert len(w) == 1 and issubclass(w[0].category, FutureWarning)
 
 
 # --- schema sidecar (r13 optimization: reads skip the footer-inference job) ---

@@ -195,6 +195,54 @@ def test_live_failure_cleans_created_table(transport, client):
     assert not cat.table_exists(client, "dst", "does_not_exist")
 
 
+def test_live_copy_transfer_leaves_no_staged_csv(spark, pg_server, client, tmp_path, monkeypatch):
+    """The ``--transfer copy`` seams stage CSV under the temp dir; a copy
+    leaves none of it behind, neither after a successful ``copy_table``
+    nor after one whose COPY FROM fails mid-load."""
+    import gc
+    import glob as globmod
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    def staged():
+        return globmod.glob(str(tmp / "pgcp_copy_*"))
+
+    def copy(writer_client) -> None:
+        Transport(
+            spark, src_cfg=pg_server, dest_cfg=pg_server,
+            src_client=client, dest_client=client,
+            reader=make_copy_reader(spark, client),
+            writer=make_copy_writer(writer_client),
+        ).copy_table("src.people", options=CopyOptions(force_schema="dst_tmp"))
+
+    client.execute("DROP SCHEMA IF EXISTS dst_tmp CASCADE")
+    copy(client)
+    assert client.fetch("SELECT COUNT(*) FROM dst_tmp.people")[0][0] == 1000
+    assert staged() == []
+
+    class FailingLoads:
+        """The live client, except that every COPY FROM fails."""
+
+        def __getattr__(self, name):
+            return getattr(client, name)
+
+        def execute(self, sql):
+            if " from '" in sql:
+                raise RuntimeError("forced load failure")
+            return client.execute(sql)
+
+    try:
+        copy(FailingLoads())
+    except RuntimeError as exc:
+        assert "forced load failure" in str(exc)
+    else:
+        pytest.fail("the forced load failure did not surface")
+    gc.collect()  # the failed copy's traceback cycle held the read frame
+    assert staged() == []
+
+
 def test_live_schema_names_lists_non_system_schemas(client):
     # O5: the only §2a operator without a test until now
     names = cat.schema_names(client)

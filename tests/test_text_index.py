@@ -190,7 +190,7 @@ def test_compaction_preserves_results(spark, tmp_path):
     before = _rows(bm25_from_index(spark, index_dir), "rnk")
     compact_text_index(spark, index_dir)
     assert _rows(bm25_from_index(spark, index_dir), "rnk") == before
-    # reader grace: the pre-compaction snapshots are retained (keep=2)
+    # reader grace: the pre-compaction snapshots are retained
     for t in TI._SUBTABLES:
         snaps = [
             e
@@ -349,8 +349,8 @@ def test_newest_delta_wins_per_doc_across_overlapping_folds(spark, tmp_path):
 def test_compaction_flattens_pending_deltas(spark, tmp_path):
     """compact_text_index is the cadence where the deferred fold cost is
     paid: pending deltas merge into the base, results unchanged, and the
-    retired delta dirs keep one cycle of reader grace before the next
-    maintenance pass reaps them."""
+    retired delta dirs keep the lake's reader grace until a commit past
+    it, or ``vacuum``, reaps them."""
     from pgcp_spark.sources import lake, load_table
 
     index_dir = str(tmp_path / "ti")
@@ -367,7 +367,9 @@ def test_compaction_flattens_pending_deltas(spark, tmp_path):
     assert os.path.isdir(os.path.join(postings_dir, delta_name))  # grace
     assert _rows(bm25_from_index(spark, index_dir), "rnk") == before
 
-    compact_text_index(spark, index_dir)  # next cadence: grace ends
+    compact_text_index(spark, index_dir)  # next cadence: still in grace
+    assert os.path.isdir(os.path.join(postings_dir, delta_name))
+    assert delta_name in lake.vacuum(postings_dir)  # vacuum ends it
     assert not os.path.isdir(os.path.join(postings_dir, delta_name))
     assert _rows(bm25_from_index(spark, index_dir), "rnk") == before
 
@@ -386,7 +388,7 @@ def test_retention_delete_erases_pending_delta_rows_too(spark, tmp_path):
     build_text_index_from(spark, _docs(spark, [(1, "a b"), (2, "b c")]), index_dir)
     update_text_index(spark, _docs(spark, [(3, "a secret")]), index_dir)
     remove_from_text_index(
-        spark, spark.createDataFrame([(3,)], "doc_id long"), index_dir, keep=1
+        spark, spark.createDataFrame([(3,)], "doc_id long"), index_dir
     )
     postings_dir = os.path.join(index_dir, "postings")
     # fold delta + tombstone delta, commit-ordered; base untouched
@@ -789,8 +791,7 @@ def test_group_commit_reader_never_sees_index_corpus_skew(spark, tmp_path):
             try:
                 _observe()
             except Exception as exc:  # noqa: BLE001 — a died reader must
-                # FAIL the test (a GC'd pin under keep=2 killed the
-                # thread silently and passed this test vacuously)
+                # FAIL the test, never pass it vacuously
                 torn.append(f"reader died: {exc}")
                 return
             if torn:
@@ -836,11 +837,10 @@ def test_group_commit_reader_never_sees_index_corpus_skew(spark, tmp_path):
             .withColumn("_op", F.lit("delete"))
         )
         merge_cdc_delta(spark, docs_dir, ups.unionByName(dels), key=["doc_id"])
-        # keep=3: the retention ladder — a fold lands TWO commits per
-        # copy-on-write member, and the racing reader's pinned manifest
-        # must stay resolvable until the publish (keep=2 GC'd its pin
-        # and killed the reader — the exact hazard this pin guards)
-        fold_text_index_from_docs_state(spark, docs_dir, gdir, keep=3)
+        # the fold lands TWO commits per copy-on-write member, and the
+        # racing reader's pinned manifest must stay resolvable until the
+        # publish — the lake's reader grace, not a keep count
+        fold_text_index_from_docs_state(spark, docs_dir, gdir)
         occ_commit_group(
             gdir, lambda _s: {n: table_state(gdir, n) for n in members}
         )

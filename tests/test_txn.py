@@ -603,3 +603,112 @@ def test_asof_history_query_serves_distinct_epoch_states(spark):
     assert all(
         s == "SEG3" for k, s in by_epoch[3].items() if k % 3 == 0
     )
+
+
+def test_racing_group_reader_survives_default_keep_commits(spark):
+    """Reader safety by the lake's grace, not by a ``keep`` count: a
+    ``read_group`` reader collects continuously while 20 transactions
+    (fact upsert → view fold → cascade agg fold, a view flatten every
+    4th, → one group commit) land with every writer at its default
+    ``keep``. Each commit retires snapshots and deltas the previous
+    manifest pins; the reader must never lose their files and never see
+    a torn trio."""
+    import os
+
+    from pgcp_spark.indexes.loop import maybe_flatten
+    from pgcp_spark.sources.lake import pending_state
+    from pgcp_spark.sources.view_maintenance import (
+        build_agg_over,
+        fold_agg_join_view,
+        stamp_applied_state,
+    )
+
+    gdir = tempfile.mkdtemp(prefix="txn_race_group_")
+    dirs = {n: os.path.join(gdir, n) for n in ("fact", "dim", "view", "agg")}
+    try:
+        fact = spark.createDataFrame([(1, 10, 1.0), (2, 20, 2.0)], ["k", "g", "v"])
+        dim = spark.createDataFrame([(10, "a"), (20, "b")], ["g", "dname"])
+        view = fact.join(dim, on="g").select("k", "g", "v", "dname")
+        write_snapshot(fact, dirs["fact"])
+        write_snapshot(dim, dirs["dim"])
+        write_snapshot(view, dirs["view"])
+        write_snapshot(
+            build_agg_over(view, "dname", "v"), dirs["agg"],
+            meta={"applied_view_state": pending_state(dirs["view"])},
+        )
+        commit_group(gdir, {n: table_state(gdir, n) for n in dirs})
+        dim_rows = _rows(dim)
+
+        stop = threading.Event()
+        failures: list[str] = []
+        reads = [0]
+
+        def reader():
+            keys = {"fact": ["k"], "view": ["k"], "agg": ["dname"]}
+            while not stop.is_set() and not failures:
+                try:
+                    dfs = read_group(spark, gdir, keys)
+                    facts = _rows(dfs["fact"])
+                    got_view = _rows(dfs["view"].select("k", "g", "v", "dname"))
+                    got_agg = _rows(
+                        dfs["agg"].filter(F.col("order_cnt") > 0)
+                        .select("dname", "order_cnt")
+                    )
+                except Exception as exc:  # noqa: BLE001 — recorded, fails below
+                    failures.append(f"reader died: {exc}")
+                    return
+                names = dict(dim_rows)
+                want_view = sorted(
+                    (k, g, v, names[g]) for k, g, v in facts if g in names
+                )
+                if got_view != want_view:
+                    failures.append(f"torn: view {got_view} != fact ⋈ dim")
+                    return
+                counts: dict[str, int] = {}
+                for _, _, _, d in got_view:
+                    counts[d] = counts.get(d, 0) + 1
+                if got_agg != sorted(counts.items()):
+                    failures.append(f"torn: agg {got_agg} != groupBy(view)")
+                    return
+                reads[0] += 1
+
+        t = threading.Thread(target=reader)
+        t.start()
+        try:
+            for i in range(20):
+                # one new key per transaction, so its change feed is one
+                # insert (a literal frame: no Python-side scan per use)
+                batch = spark.range(1).select(
+                    F.lit(100 + i).cast("long").alias("k"),
+                    F.lit(10 + 10 * (i % 2)).cast("long").alias("g"),
+                    F.lit(float(i)).alias("v"),
+                )
+                upsert(spark, dirs["fact"], batch, key=["k"])
+                fold_join_view(
+                    spark, dirs["view"], view_key=["k"],
+                    fact_feed=batch.withColumn("_change_type", F.lit("insert")),
+                    dim_feed=None, dim_current=read_current(spark, dirs["dim"]),
+                    fact_join_col="g", dim_join_col="g",
+                    fact_feed_types={"insert"},
+                )
+                fold_agg_join_view(
+                    spark, dirs["agg"], dirs["view"], ["k"], "dname", "v"
+                )
+                # the drivers' flatten cadence: retires view deltas a
+                # pinned manifest may still name, and bounds the merge
+                if maybe_flatten(spark, dirs["view"], key=["k"], max_deltas=4):
+                    stamp_applied_state(spark, dirs["agg"], dirs["view"])
+                commit_group(
+                    gdir, {n: table_state(gdir, n) for n in ("fact", "view", "agg")}
+                )
+                if failures:
+                    break
+        finally:
+            stop.set()
+            t.join()
+        assert not failures, failures[0]
+        assert reads[0] > 0
+        final = read_group(spark, gdir, {"view": ["k"]})
+        assert final["view"].count() == 2 + 20
+    finally:
+        shutil.rmtree(gdir, ignore_errors=True)

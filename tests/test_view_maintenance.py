@@ -22,6 +22,7 @@ from pgcp_spark.sources.lake import (
     read_current_with_deltas,
     table_changes,
     upsert,
+    vacuum,
     write_snapshot,
 )
 from pgcp_spark.sources.view_maintenance import (
@@ -314,8 +315,9 @@ def test_cascade_crash_window_replay_is_skipped(spark, cascade_lake):
 )
 def test_cascade_flatten_stamp_then_fold_is_noop(spark, ivm_lake_factory, spec):
     """The owner protocol after a flatten, for every aggregate kind: the
-    old state id is GC-bait, so a fold across it must REFUSE with the
-    re-anchor recipe (never guess — a blind re-fold double-counts), and
+    old state id is GC-bait (reaped here by ``vacuum``, the end of the
+    reader grace), so a fold across it must REFUSE with the re-anchor
+    recipe (never guess — a blind re-fold double-counts), and
     the documented flatten-then-stamp sequence — every owned table
     re-stamped, as ``fold_view_batch`` does — makes the next fold a clean
     no-op with the aggregate still equal to the recompute."""
@@ -335,6 +337,7 @@ def test_cascade_flatten_stamp_then_fold_is_noop(spark, ivm_lake_factory, spec):
         flatten_deltas(
             spark, lk["view_dir"], key=["o_orderkey"], cluster_by=["o_custkey"]
         )
+        vacuum(lk["view_dir"])
         with pytest.raises(RuntimeError, match="stamp_applied_state"):
             spec.fold(spark, dirs)
         for t in spec.tables:
@@ -971,41 +974,39 @@ def test_distinct_metaless_agg_rebuilds_from_support(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
-def test_fold_keep_preserves_pinned_snapshots(spark):
+def test_fold_grace_preserves_pinned_snapshots(spark):
     """The retention rule the transactional streams rely on, pinned
     deterministically (the racing-reader tests exercise it under real
-    timing, but a race can pass by luck): a fold with keep=3 leaves the
-    previous agg snapshot resolvable — a group-manifest reader pinned to
-    it survives — while the per-table default keep=1 GC's it."""
+    timing, but a race can pass by luck): a fold leaves the previous agg
+    snapshot resolvable — a group-manifest reader pinned to it survives
+    — with no ``keep`` at all, because the lake keeps a retired snapshot
+    for its reader grace; ``vacuum``, the explicit end of grace, then
+    reaps it."""
     import os
 
-    from pgcp_spark.sources.lake import append_delta, current_snapshot
+    from pgcp_spark.sources.lake import append_delta, current_snapshot, vacuum
+    from pgcp_spark.sources.view_maintenance import fold_distinct_join_view
 
-    for keep, survives in ((3, True), (1, False)):
-        view_dir, sup_dir, agg_dir = _dst_lake(spark, _DST_ROWS)
-        try:
-            pinned = current_snapshot(agg_dir)
-            append_delta(
-                spark.createDataFrame(
-                    [(9, 30, "P7", "a")],
-                    ["o_orderkey", "o_custkey", "o_orderpriority",
-                     "c_mktsegment"],
-                ),
-                view_dir,
-            )
-            from pgcp_spark.sources.view_maintenance import (
-                fold_distinct_join_view,
-            )
-
-            assert fold_distinct_join_view(
-                spark, sup_dir, agg_dir, view_dir, ["o_orderkey"],
-                "c_mktsegment", "o_orderpriority", keep=keep,
-            ) is True
-            exists = os.path.isdir(os.path.join(agg_dir, pinned))
-            assert exists is survives, (keep, pinned)
-        finally:
-            for d in (view_dir, sup_dir, agg_dir):
-                shutil.rmtree(d, ignore_errors=True)
+    view_dir, sup_dir, agg_dir = _dst_lake(spark, _DST_ROWS)
+    try:
+        pinned = current_snapshot(agg_dir)
+        append_delta(
+            spark.createDataFrame(
+                [(9, 30, "P7", "a")],
+                ["o_orderkey", "o_custkey", "o_orderpriority", "c_mktsegment"],
+            ),
+            view_dir,
+        )
+        assert fold_distinct_join_view(
+            spark, sup_dir, agg_dir, view_dir, ["o_orderkey"],
+            "c_mktsegment", "o_orderpriority",
+        ) is True
+        assert os.path.isdir(os.path.join(agg_dir, pinned))
+        assert pinned in vacuum(agg_dir)
+        assert not os.path.isdir(os.path.join(agg_dir, pinned))
+    finally:
+        for d in (view_dir, sup_dir, agg_dir):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 # --- per-group TOP-K fold (round 13) ---------------------------------------

@@ -491,7 +491,7 @@ def remove_from_ann_index(
     ``vec_id``) from the stored vectors. Without this, a deleted
     embedding keeps surfacing as everyone's neighbor.
 
-    Since round 10 the delete lands as an O(keys) TOMBSTONE DELTA
+    Since round 10 the delete lands as an O(keys) tombstone delta
     (``lake.delete_delta`` — previously flatten + a keyed copy-on-write
     rewrite whose cost grew with INDEX size, the asymmetry round 9
     removed from the fold side): the vectors base keeps its clustered

@@ -62,6 +62,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import reduce
 
 import numpy as np
 
@@ -81,6 +82,7 @@ from pgcp_spark.sources.lake import (
     current_snapshot,
     delta_names,
     read_current,
+    split_deltas,
     write_snapshot,
 )
 
@@ -197,21 +199,13 @@ def resolve_quantized_base(
     delta_live = None
     names = delta_names(vec_dir)
     if names:
-        from pgcp_spark.sources.lake import TOMBSTONE, read_parquet_dir
-
-        raw = [read_parquet_dir(spark, os.path.join(vec_dir, n)) for n in names]
-        data_keys = None
-        for p in raw:
-            if TOMBSTONE in p.columns:
-                shape = [c for c in p.columns if c != TOMBSTONE]
-                stored_q = stored_q.join(
-                    p.select(*shape).distinct(), on=shape, how="left_anti"
-                )
-            else:
-                k = p.select("vec_id")
-                data_keys = k if data_keys is None else data_keys.unionByName(k)
-        if data_keys is not None:
-            data_keys = data_keys.distinct()
+        data, tombs = split_deltas(spark, vec_dir, names, ["vec_id"])
+        for _, shape, t in tombs:
+            stored_q = stored_q.join(t.distinct(), on=shape, how="left_anti")
+        if data:
+            data_keys = reduce(
+                DataFrame.unionByName, [p.select("vec_id") for _, p in data]
+            ).distinct()
             stored_q = stored_q.join(data_keys, on="vec_id", how="left_anti")
             from pgcp_spark.functions.ann_index import stored_vectors
 

@@ -275,7 +275,7 @@ def remove_from_index(
     corpus keeps matching future batches through its stored postings,
     resurfacing text the retention policy removed.
 
-    Since round 10 each delete lands as an O(keys) TOMBSTONE DELTA
+    Since round 10 each delete lands as an O(keys) tombstone delta
     (``lake.delete_delta`` — previously flatten + three keyed
     copy-on-write rewrites whose cost grew with INDEX size, the exact
     asymmetry round 9 removed from the fold side). The postings table is

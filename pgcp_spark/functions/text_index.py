@@ -334,7 +334,7 @@ def remove_from_text_index(
     search system bolted onto a mutable lake; with ``lake.delete`` in
     the writer surface (round 8), index families must honor it too.
 
-    The postings delete lands as an O(keys) TOMBSTONE DELTA
+    The postings delete lands as an O(keys) tombstone delta
     (``lake.delete_delta``, round 10 — previously flatten + a keyed
     copy-on-write rewrite whose cost grew with INDEX size, the exact
     asymmetry round 9 removed from the fold side): the corpus-sized

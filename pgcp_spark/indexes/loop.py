@@ -122,6 +122,9 @@ def maybe_flatten(
     makes the steady state self-healing: folds stay O(batch), and every
     ``max_deltas``-th batch pays the one deferred merge — the same
     amortization ``maybe_refit_ann_index`` applies to quantizer drift.
+    The count is of delta DIRS, and a CDC batch is one dir (its upserts
+    and tombstones land together through ``merge_cdc_delta`` or the view
+    fold's fact arm), so that cadence is per batch.
     Returns the new snapshot name when a flatten ran, else None."""
     limit = FLATTEN_MAX_DELTAS if max_deltas is None else max_deltas
     if len(delta_names(table_dir)) < limit:

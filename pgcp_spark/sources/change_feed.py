@@ -319,7 +319,7 @@ ORDER BY o_orderkey
 @register(
     "lake_cdc_merge_on_read_orders",
     oracle=_CDC_MOR_ORACLE,
-    doc="CDC batch applied MERGE-ON-READ: merge_cdc_delta lands updates as an O(batch) data delta + deletes as an O(keys) tombstone (base untouched), reader resolves base ∪ deltas — hash-exact vs the post-CDC state recomputed from scratch",
+    doc="CDC batch applied MERGE-ON-READ: merge_cdc_delta lands updates and deleted keys as ONE O(batch) op-tagged delta (base untouched), reader resolves base ∪ deltas — hash-exact vs the post-CDC state recomputed from scratch",
 )
 def lake_cdc_merge_on_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-10 CDC hot path: the SAME batch shape as
@@ -328,7 +328,7 @@ def lake_cdc_merge_on_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     every 7th non-5th key a delete, with the %21 keys outside the base
     proving the unmatched-delete no-op) applied through
     ``lake.merge_cdc_delta`` instead of the copy-on-write ``merge_cdc``:
-    one data delta + one tombstone, the base snapshot untouched
+    one delta of data rows and tombstones, the base snapshot untouched
     (guarded by an explicit raise). The result is the merge-on-read
     view, hash-checked against the post-CDC state recomputed from the
     orders table — proving the delta-resolved read loses nothing vs the
@@ -368,7 +368,7 @@ def lake_cdc_merge_on_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     # the pending (un-flattened) feed — a hash match proves the
     # merge-on-read CDC view is bit-identical to the rewrite-based feed
     oracle=_DELETE_ORACLE,
-    doc="change feed over UN-FLATTENED deltas: one merge_cdc_delta batch (updates + deletes) lands as data delta + tombstone, pending_changes classifies base-vs-view — same oracle as the two-commit copy-on-write feed",
+    doc="change feed over UN-FLATTENED deltas: one merge_cdc_delta batch (updates + deletes) lands as one op-tagged delta, pending_changes classifies base-vs-view — same oracle as the two-commit copy-on-write feed",
 )
 def lake_cdc_pending_changes_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The delta layer's CDC story completed (round 10): the SAME

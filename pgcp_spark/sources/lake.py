@@ -52,6 +52,9 @@ vectors / Iceberg's equality deletes, reduced to this layer's
 pointer-file minimum). Tombstones share the ONE ``_DELTAS`` log, so
 commit order stays the version order: delete-then-reingest resurrects,
 ingest-then-delete deletes. ``flatten_deltas`` applies them physically.
+A CDC batch (``merge_cdc_delta``) lands its upserts and deleted keys as
+ONE delta, one write and one log commit, as the reference publishes a
+copy as one unit (transport.rb:33-62).
 """
 
 from __future__ import annotations
@@ -655,6 +658,10 @@ def write_snapshot(
 #           the table's delta key (a postings table keyed
 #           (shingle, doc_id) deletes whole documents by doc_id alone —
 #           the equality-delete shape).
+#   cdc:    ``merge_cdc_delta`` lands a whole CDC batch as ONE delta: data
+#           rows carry ``_tombstone = false``, deleted keys ``true`` with
+#           their other columns NULL. Every reader reads a delta dir
+#           through ``split_deltas``, the one rule for what a row means.
 #   read:   ``read_current_with_deltas`` serves base ∪ deltas with
 #           whole-KEY replacement semantics matching ``upsert``: a key
 #           present in any delta reads from its NEWEST delta only; base
@@ -801,73 +808,111 @@ def merge_cdc_delta(
     key: list[str],
     op_col: str = "_op",
     delete_op: str = "delete",
-    ops: set[str] | None = None,
-) -> list[str]:
-    """Apply one CDC batch MERGE-ON-READ (round 10): the non-delete rows
-    land as an O(batch) data delta and the delete keys as an O(keys)
-    tombstone — the base is never read or rewritten, making this the
-    delta-layer twin of ``merge_cdc`` (whose copy-on-write rewrite stays
-    the right call when the batch is table-sized or the table is small).
-    Readers see the post-CDC state through ``read_current_with_deltas``;
-    ``flatten_deltas`` applies it physically on the compaction cadence.
+) -> str | None:
+    """Apply one CDC batch MERGE-ON-READ (round 10): the whole batch lands
+    as ONE O(batch) delta — non-delete rows as data (``_tombstone =
+    false``), delete rows as their key values (``_tombstone = true``,
+    every other column NULL) — so the base is never read or rewritten,
+    making this the delta-layer twin of ``merge_cdc`` (whose
+    copy-on-write rewrite stays the right call when the batch is
+    table-sized or the table is small). Readers see the post-CDC state
+    through ``read_current_with_deltas``; ``flatten_deltas`` applies it
+    physically on the compaction cadence.
 
     Same contracts as ``merge_cdc``: the batch is key-unique (a key
     appearing as both update and delete in one batch is a malformed
-    feed — which also makes the two deltas' relative order immaterial),
-    an unmatched delete is a no-op (a tombstone on an absent key kills
-    nothing), and at-least-once replay converges (the re-appended data
-    delta shadows its twin; the re-appended tombstone re-kills the same
-    keys). ADDITIVE schema evolution is supported since late round 10:
+    feed; the delta's tombstone then kills its data row, since both
+    share the delta's seq), an unmatched delete is a no-op (a tombstone
+    on an absent key kills nothing), and at-least-once replay converges
+    (the re-appended delta shadows its twin and re-kills the same keys).
+    ADDITIVE schema evolution is supported since late round 10:
     ``read_current_with_deltas`` resolves columns by name with null fill
     (a batch may add columns or omit non-key ones), and the next flatten
     materializes the evolved schema — the ``merge_cdc(evolve_schema=
-    True)`` contract on the merge-on-read path. Returns the committed
-    delta names (data first, then tombstone; either may be absent for a
-    one-sided batch).
+    True)`` contract on the merge-on-read path.
 
-    Each side is evaluated EXACTLY ONCE, by its delta write — the
+    The batch is evaluated EXACTLY ONCE, by the delta write, and the
     emptiness decision reads the written parquet footers
-    (``append_delta(skip_if_empty=True)``), so the pre-r13 shape
-    (materialize + two isEmpty probes + two writes = 5 actions) is now
-    two actions, and the determinism concern that forced the
-    materialize (a probe and a write disagreeing on a recomputed
-    source) is gone with the probes. The batch IS still evaluated once
-    per side; a caller with a non-deterministic source must materialize
-    it first (every in-repo caller passes parquet-backed or already-
-    checkpointed frames).
+    (``append_delta(skip_if_empty=True)``): one action and one log
+    commit per batch. A caller with a non-deterministic source need not
+    materialize it first. Returns the committed delta name, or None for
+    an empty batch."""
+    dead = F.col(op_col).eqNullSafe(F.lit(delete_op))
+    cols = [
+        F.col(c) if c in key else F.when(~dead, F.col(c)).alias(c)
+        for c in batch.columns
+        if c != op_col
+    ]
+    return append_delta(
+        batch.select(*cols, dead.alias(TOMBSTONE)), table_dir, skip_if_empty=True
+    )
 
-    The two sides' writes run CONCURRENTLY (guide §2.6): they are
-    independent jobs over the same batch scan, and the key-unique batch
-    contract above already makes their relative delta-log order
-    immaterial (disjoint key sets through newest-wins resolution — the
-    same fact that lets a one-sided batch commit alone). The returned
-    list stays data-first regardless of which commit wins the lock.
 
-    ``ops`` (r14): the EXACT set of ``op_col`` values present in the
-    batch, when the caller already knows it (the streaming loop reads it
-    off the same distinct-collect that orders its sub-batches) — a
-    one-sided batch then skips the absent side's write job instead of
-    evaluating it to emptiness. None = unknown, both sides
-    write-then-decide as before."""
-    from pgcp_spark.plans.overlap import overlap
+def _kinds(delta_path: str) -> tuple[bool, bool]:
+    """(may hold data rows, may hold tombstones) of a ``_tombstone``-
+    carrying delta dir, from the min/max and null count of the column in
+    its parquet footers — driver-side metadata, no Spark job, the same
+    footers ``_wrote_nothing`` reads. A one-sided CDC batch then plans no
+    branch for the side it lacks (each branch is a join, and under AQE a
+    job), and a ``delete_delta`` dir reads exactly as it did before
+    mixed deltas. A row group without statistics counts as both."""
+    import pyarrow.parquet as pq
 
-    do_ups = ops is None or bool(ops - {delete_op})
-    do_dels = ops is None or delete_op in ops
-    thunks = []
-    if do_ups:
-        ups = batch.filter(~F.col(op_col).eqNullSafe(F.lit(delete_op))).drop(
-            op_col
-        )
-        thunks.append(lambda: append_delta(ups, table_dir, skip_if_empty=True))
-    if do_dels:
-        dels = batch.filter(F.col(op_col).eqNullSafe(F.lit(delete_op))).select(
-            *key
-        )
-        thunks.append(
-            lambda: delete_delta(dels, table_dir, key=key, skip_if_empty=True)
-        )
-    names = overlap(*thunks)
-    return [n for n in names if n is not None]
+    data = dead = False
+    for entry in os.listdir(delta_path):
+        if not (entry.startswith("part-") and entry.endswith(".parquet")):
+            continue
+        meta = pq.read_metadata(os.path.join(delta_path, entry))
+        col = meta.schema.names.index(TOMBSTONE)
+        for g in range(meta.num_row_groups):
+            if meta.row_group(g).num_rows == 0:
+                continue
+            st = meta.row_group(g).column(col).statistics
+            if st is None or not st.has_min_max or not st.has_null_count:
+                return True, True
+            data |= st.min is False or st.null_count > 0
+            dead |= st.max is True
+    return data, dead
+
+
+def split_deltas(
+    spark: SparkSession, table_dir: str, names: list[str], key: list[str]
+) -> tuple[list[tuple[int, DataFrame]], list[tuple[int, list[str], DataFrame]]]:
+    """Read the delta dirs ``names`` of ``table_dir`` (in log order) by
+    THE rule for what a delta row means, shared by every reader of the
+    delta stack: a row is data unless ``_tombstone`` is true, and a
+    tombstone's shape is the reader ``key`` when its dir carries every
+    key column, else the dir's own columns (the sub-key and attribute
+    equality deletes: a postings ``doc_id``, the IVM dim arm's
+    ``o_custkey``). A dir without the column (``append_delta``) is all
+    data; a ``delete_delta`` dir is all tombstones; a ``merge_cdc_delta``
+    dir is both, and a side its footers prove empty is left out
+    (``_kinds``). Data rows must carry every key column (newest-wins
+    resolution cannot null-fill a key), so a data dir that lacks one
+    raises. Returns (data: [(seq, rows without ``_tombstone``)],
+    tombs: [(seq, shape, the tombstones' shape columns)]), seq being the
+    position in ``names``."""
+    data, tombs = [], []
+    for i, n in enumerate(names):
+        path = os.path.join(table_dir, n)
+        p = read_parquet_dir(spark, path)
+        if TOMBSTONE not in p.columns:
+            missing = [k for k in key if k not in p.columns]
+            if missing:
+                raise ValueError(
+                    f"data delta lacks key column(s) {missing}; keys cannot evolve"
+                )
+            data.append((i, p))
+            continue
+        has_data, has_dead = _kinds(path)
+        dead = F.col(TOMBSTONE).eqNullSafe(F.lit(True))
+        full = all(k in p.columns for k in key)
+        if full and has_data:
+            data.append((i, p.filter(~dead).drop(TOMBSTONE)))
+        if has_dead:
+            shape = list(key) if full else [c for c in p.columns if c != TOMBSTONE]
+            tombs.append((i, shape, p.filter(dead).select(*shape)))
+    return data, tombs
 
 
 def read_current_with_deltas(
@@ -881,7 +926,7 @@ def read_current_with_deltas(
     whole-key replacement, newest delta wins, base fills the rest;
     tombstone deltas kill every matching row whose last write predates
     them. With no active deltas this IS ``read_current`` — zero
-    overhead; with no TOMBSTONE deltas the plan is exactly the round-9
+    overhead; with no tombstones pending the plan is exactly the round-9
     data-only shape. Additive schema evolution resolves BY NAME with
     null fill (inline comment below); ``flatten_deltas`` then
     materializes the evolved schema into the next base.
@@ -900,29 +945,26 @@ def read_current_with_deltas(
         names = delta_names(table_dir)
     if not names:
         return base
-    raw = [
-        (i, read_parquet_dir(spark, os.path.join(table_dir, n)))
-        for i, n in enumerate(names)
-    ]
-    return _merge_deltas(base, raw, key)
+    return _merge_deltas(base, *split_deltas(spark, table_dir, names, key), key)
 
 
 def _merge_deltas(
-    base: DataFrame, raw: list[tuple[int, DataFrame]], key: list[str]
+    base: DataFrame,
+    data: list[tuple[int, DataFrame]],
+    tombs: list[tuple[int, list[str], DataFrame]],
+    key: list[str],
 ) -> DataFrame:
     """The merge-on-read resolution core (newest-wins whole-key
     replacement + tombstone application + additive schema evolution),
     factored from ``read_current_with_deltas`` (r14) so ``state_changes``'
     extends path can resolve just the FRESH deltas over the
     already-resolved old state instead of re-resolving the whole delta
-    stack a second time. ``raw`` is [(log seq, frame)] in commit order;
-    ``base`` rows resolve at seq -1 — older than every delta, which is
+    stack a second time. ``data`` / ``tombs`` are ``split_deltas``'
+    parts in commit order; ``base`` rows resolve at seq -1 — older than every delta, which is
     exactly the contract when ``base`` is itself a resolved earlier state
     (every old write predates every fresh delta). Under AQE every
     exchange is its own job, so no step aggregates and joins back: the
     joins below, and one window at two or more data deltas, are all."""
-    data = [(i, p) for i, p in raw if TOMBSTONE not in p.columns]
-    tombs = [(i, p) for i, p in raw if TOMBSTONE in p.columns]
 
     # Additive schema evolution, resolved BY NAME (round 10 — closes the
     # positional-alignment limitation merge_cdc_delta used to document):
@@ -931,15 +973,10 @@ def _merge_deltas(
     # from whichever frame carries the column (the ``table_changes``
     # evolve rule). A delta batch may therefore ADD columns (base rows
     # read NULL) or OMIT non-key ones (its rows read NULL) — but never a
-    # KEY column, which newest-wins resolution cannot null-fill.
+    # KEY column (``split_deltas`` raises).
     types: dict[str, str] = dict(base.dtypes)
     cols = list(base.columns)
     for _, p in data:
-        missing_keys = [k for k in key if k not in p.columns]
-        if missing_keys:
-            raise ValueError(
-                f"data delta lacks key column(s) {missing_keys}; keys cannot evolve"
-            )
         for c, t in p.dtypes:
             if c not in types:
                 types[c] = t
@@ -994,7 +1031,7 @@ def _merge_deltas(
         resolved = resolved.unionByName(
             winners.select(*cols, F.col("_delta_seq"))
         )
-    for shape, tall in _shapes_of(tombs, key):
+    for shape, tall in _shapes_of(tombs):
         tk = [f"_tk{j}" for j in range(len(shape))]  # no name clashes
         hit = [F.col(c) == F.col(t) for c, t in zip(shape, tk)]
         resolved = resolved.join(
@@ -1524,11 +1561,13 @@ def pending_changes(
     semi-joined to the union of the deltas' key values (batch-sized
     under the compaction cadence → AQE broadcasts it, one pass over the
     base, no corpus shuffle) and the full-outer diff itself runs over
-    batch-sized frames. A data delta prunes on the reader ``key`` (it
-    replaces whole rows by key); a tombstone prunes on its OWN column
-    set (equality-delete semantics: it kills exactly the rows matching
-    those columns, whether or not they overlap the reader key — the IVM
-    dim arm's attribute-keyed tombstones are the live case). Only a
+    batch-sized frames. Data rows prune on the reader ``key`` (they
+    replace whole rows by key); a tombstone prunes on its
+    ``split_deltas`` shape — the reader key in a dir that carries it
+    (``merge_cdc_delta``), else the dir's OWN column set (equality-delete
+    semantics: it kills exactly the rows matching those columns, whether
+    or not they overlap the reader key — the IVM dim arm's
+    attribute-keyed tombstones are the live case). Only a
     tombstone on columns the table doesn't carry forces the unpruned
     full diff (which stays correct — it is what ``table_changes``
     always pays)."""
@@ -1594,8 +1633,8 @@ def state_changes(
             if c not in new.columns:
                 new = new.withColumn(c, F.lit(None).cast(old_t[c]))
         return _keyed_diff(old.select(*cols), new.select(*cols), cols, key)
-    fresh = t_deltas[len(f_deltas):]
-    if not fresh:
+    data, tombs = split_deltas(spark, table_dir, t_deltas[len(f_deltas):], key)
+    if not (data or tombs):  # no fresh delta holds a row
         return _keyed_diff(old.limit(0), old.limit(0), old.columns, key)
     # Extends path (r14 optimization, guide §2.4: remove a whole pass):
     # the new state IS the old state plus the fresh deltas, so instead of
@@ -1613,17 +1652,11 @@ def state_changes(
     # docstring). Fresh data-delta keys are in the touched set by
     # construction (their shape is the reader key), so pruning before the
     # resolve loses nothing.
-    raw_fresh = [
-        (i, read_parquet_dir(spark, os.path.join(table_dir, n)))
-        for i, n in enumerate(fresh)
-    ]
     # additive evolution: columns a fresh DATA delta introduces null-fill
     # onto the old side (same rule the full resolution applies)
     types = dict(old.dtypes)
     cols = list(old.columns)
-    for _, p in raw_fresh:
-        if TOMBSTONE in p.columns:
-            continue
+    for _, p in data:
         for c, t in p.dtypes:
             if c not in types:
                 types[c] = t
@@ -1632,7 +1665,7 @@ def state_changes(
         if c not in old.columns:
             old = old.withColumn(c, F.lit(None).cast(types[c]))
     old = old.select(*cols)
-    shapes = _shapes_of(raw_fresh, key)
+    shapes = _shapes_of([(i, key, p.select(*key)) for i, p in data] + tombs)
     if any(not s or any(c not in cols for c in s) for s, _ in shapes):
         new = read_current_with_deltas(
             spark, table_dir, key, snapshot=t_snap, names=t_deltas
@@ -1652,7 +1685,7 @@ def state_changes(
     )
     if len(shapes) > 1:
         old_p = old_p.dropDuplicates(key)
-    new_p = _merge_deltas(old_p, raw_fresh, key)
+    new_p = _merge_deltas(old_p, data, tombs, key)
     return _keyed_diff(old_p, new_p, cols, key)
 
 
@@ -1708,22 +1741,18 @@ def unapplied_changes(
     return state, materialize(feed)
 
 
-def _shapes_of(raw: list[tuple[int, DataFrame]], key: list[str]):
-    """[(column set, touched values + the ``_t_seq`` of their delta)]
-    across delta frames, one entry per column set. A data delta touches
-    the reader ``key`` (all key columns are guaranteed present — the
-    delta-key contract); a tombstone its own column set, which may be a
-    key prefix OR disjoint attribute columns (equality deletes).
-    ``state_changes`` semi-joins on these to bound the extends-path diff
-    at batch size, and ``_merge_deltas`` anti-joins its tombstones on
-    them. Both joins ignore duplicates, so the values keep theirs."""
+def _shapes_of(parts: list[tuple[int, list[str], DataFrame]]):
+    """[(column set, touched values + the ``_t_seq`` of their delta)],
+    one entry per column set, over ``split_deltas``-shaped parts
+    [(seq, shape, shape columns)]. Data rows touch the reader ``key``;
+    a tombstone its ``split_deltas`` shape, which may be a key prefix OR
+    disjoint attribute columns (equality deletes). ``state_changes``
+    semi-joins on these to bound the extends-path diff at batch size,
+    and ``_merge_deltas`` anti-joins its tombstones on them. Both joins
+    ignore duplicates, so the values keep theirs."""
     by_shape: dict[tuple[str, ...], list[DataFrame]] = {}
-    for i, p in raw:
-        if TOMBSTONE in p.columns:
-            shape = tuple(c for c in p.columns if c != TOMBSTONE)
-        else:
-            shape = tuple(c for c in key if c in p.columns)
-        by_shape.setdefault(shape, []).append(
+    for i, shape, p in parts:
+        by_shape.setdefault(tuple(shape), []).append(
             p.select(*shape, F.lit(i).alias("_t_seq"))
         )
     return [(list(s), reduce(DataFrame.unionByName, fs)) for s, fs in by_shape.items()]

@@ -27,7 +27,8 @@ exactly that row). Neither arm ever rescans a base table:
     same pushed-IN + layout contract as the BM25 postings reads).
 
 All view mutations land MERGE-ON-READ (``append_delta`` /
-``delete_delta``): the view's base snapshot is never rewritten by a fold,
+``delete_delta`` for the dim arm, one ``merge_cdc_delta`` for the fact
+arm): the view's base snapshot is never rewritten by a fold,
 making maintenance O(changed rows) end to end; ``flatten_deltas`` applies
 them physically on the compaction cadence exactly like the index
 families. At 100 TB this is the shape that keeps a denormalized serving
@@ -121,7 +122,6 @@ def fold_join_view(
     fact_join_col: str,
     dim_join_col: str,
     fact_current: DataFrame | None = None,
-    fact_feed_types: set[str] | None = None,
 ) -> None:
     """Fold one maintenance cycle of ``V = fact ⋈_{fact_join_col =
     dim_join_col} dim`` into the view at ``view_dir`` (keyed by
@@ -224,20 +224,7 @@ def fold_join_view(
         # strictly after the whole dim arm (its rows must win shared keys).
         overlap(*arm_writes)
     if fact_feed is not None:
-        # ``fact_feed_types`` (r14): the EXACT set of ``_change_type``
-        # values present in the feed, when the caller already knows it —
-        # the streaming loop reads per-seq op presence off the same
-        # distinct-collect job that orders its sub-batches, so a
-        # one-sided batch (pure deletes, pure upserts) skips the absent
-        # arm's write job instead of evaluating it to emptiness. None =
-        # unknown: both arms evaluate, write-then-decide as before.
-        has_post = fact_feed_types is None or bool(
-            fact_feed_types & set(_POST_TYPES)
-        )
-        has_del = fact_feed_types is None or "delete" in fact_feed_types
-        if not (has_post or has_del):
-            return
-        fact_feed = materialize(fact_feed)  # consumed by both arms
+        fact_feed = materialize(fact_feed)  # consumed by three branches
         dim_renamed = dim_current.withColumnRenamed(dim_join_col, fact_join_col)
         post = fact_feed.filter(F.col("_change_type").isin(*_POST_TYPES)).drop(
             "_change_type"
@@ -246,45 +233,27 @@ def fold_join_view(
         # Rows that must LEAVE the view: fact deletes, plus updates/inserts
         # whose post row found no dim partner (an update can re-point at a
         # missing key). Tombstoning every touched key would also kill the
-        # rebuilt rows just appended (tombstones kill all earlier writes) —
-        # and the keyed feed carries each key as exactly one of insert /
-        # delete / update pre+post, so the dead set is DERIVABLE without
-        # reading the rebuilt delta back: delete keys ∪ post keys with NO
-        # dim partner (one batch-sized anti-join against the dim). That
-        # makes the two writes key-disjoint AND independent, so they run
-        # CONCURRENTLY (guide §2.6, the merge_cdc_delta argument: disjoint
-        # key sets through newest-wins make their log order immaterial) —
-        # replacing the r12 shape (rebuilt write → read it back → tombstone
-        # write, a 2-action serial chain) with one overlapped pair.
-        # NULL-join-key post rows land in `dead` (NULL matches nothing in
-        # the anti-join), exactly as the read-back left them; NULL view
-        # keys yield inert tombstones either way (NULL matches no row).
+        # rebuilt rows (a tombstone kills every write at its own seq or
+        # older) — and the keyed feed carries each key as exactly one of
+        # insert / delete / update pre+post, so the dead set is DERIVABLE
+        # without reading the rebuilt rows back: delete keys ∪ post keys
+        # with NO dim partner (one batch-sized anti-join against the dim).
+        # That makes the rebuilt rows and the dead keys key-disjoint, so
+        # they land as ONE CDC delta (``merge_cdc_delta``: one write, one
+        # log commit). NULL-join-key post rows land in `dead` (NULL
+        # matches nothing in the anti-join); NULL view keys yield inert
+        # tombstones (NULL matches no row).
         dels = fact_feed.filter(F.col("_change_type") == "delete").select(
             *view_key
         )
         nomatch = post.join(
             dim_renamed.select(fact_join_col), on=fact_join_col, how="left_anti"
         ).select(*view_key)
-        # presence-pruned dead set: a type the hint rules out contributes
-        # no rows by construction, so its branch drops from the plan —
-        # and a post-free feed skips the rebuilt write job entirely
-        if has_post and has_del:
-            dead = dels.unionByName(nomatch)
-        elif has_post:
-            dead = nomatch
-        else:
-            dead = dels
-        fact_writes = []
-        if has_post:
-            fact_writes.append(
-                lambda: append_delta(rebuilt, view_dir, skip_if_empty=True)
-            )
-        fact_writes.append(
-            lambda: delete_delta(
-                dead, view_dir, key=view_key, skip_if_empty=True
-            )
+        batch = rebuilt.withColumn("_op", F.lit("upsert")).unionByName(
+            dels.unionByName(nomatch).withColumn("_op", F.lit("delete")),
+            allowMissingColumns=True,
         )
-        overlap(*fact_writes)
+        merge_cdc_delta(spark, view_dir, batch, key=view_key)
 
 
 # --- the fact/dim/view cycle, shared by every lake_*join_view* query -------
@@ -1085,9 +1054,9 @@ def lake_join_view_from_pending_feeds(spark: SparkSession, sf_dir: str) -> DataF
     """The ``lake_incremental_join_view_orders`` scenario with every base
     mutation landing MERGE-ON-READ: the dim's segment rename is an
     ``append_delta`` (newest-wins), the fact CDC batch a
-    ``merge_cdc_delta`` (data delta + tombstone) — neither base snapshot
-    is rewritten — and the fold's feeds come from ``pending_changes``,
-    the CDC view between compactions. SCALE.md r10 claimed the MOR feed
+    ``merge_cdc_delta`` (one delta of data rows and tombstones) — neither
+    base snapshot is rewritten — and the fold's feeds come from
+    ``pending_changes``, the CDC view between compactions. SCALE.md r10 claimed the MOR feed
     "plugs into the same fold unchanged"; this is that claim as a driver
     row. ``dim_current`` resolves merge-on-read too, so the fact arm
     rebuilds against the post dim state the deltas imply."""

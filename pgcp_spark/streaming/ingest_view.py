@@ -4,10 +4,11 @@ Completes the per-family streaming story for round 10's incremental
 JOIN-view layer (``sources/view_maintenance.py``), the way each index
 family got its ingest loop: CDC batches arrive as a stream of files;
 each micro-batch (a) applies its batches to the fact's lake table
-MERGE-ON-READ (``merge_cdc_delta`` — data delta + tombstone, base
-untouched), (b) folds the SAME batch through ``fold_join_view`` into
-the materialized ``fact ⋈ dim`` view, and (c) when a ``ViewSpec`` is
-given, folds the view's changes into that aggregate kind's tables — so
+MERGE-ON-READ (``merge_cdc_delta`` — one delta of data rows and
+tombstones, base untouched), (b) folds the SAME batch through
+``fold_join_view`` into the materialized ``fact ⋈ dim`` view, and (c)
+when a ``ViewSpec`` is given, folds the view's changes into that
+aggregate kind's tables — so
 view and aggregate track the fact with CDC-batch latency and no
 base-table rescans anywhere in the loop. One driver runs every variant:
 ``run_ingest_view(spark, sf_dir, spec, txn)``.
@@ -147,22 +148,15 @@ def apply_cdc_batches(
     re-anchoring) → ``after_batch()`` (the transactional group publish —
     it must see post-flatten states).
 
-    ``micro_batch`` must be DETERMINISTIC under re-evaluation (the
-    merge_cdc_delta contract): every caller passes either a file-stream
-    micro-batch (pinned to specific staged parquet files) or a
-    parquet-backed transform, so no checkpoint is taken here (r13
+    ``micro_batch`` must be DETERMINISTIC under re-evaluation (the fact
+    write and the view fold each evaluate it): every caller passes
+    either a file-stream micro-batch (pinned to specific staged parquet
+    files) or a parquet-backed transform, so no checkpoint is taken here (r13
     wave 5 — the former unconditional materialize was one extra job
     per micro-batch; each seq's consumers re-scan the batch-sized
     source instead, and the fold checkpoints its own feed)."""
-    # the same ONE distinct-collect job that orders the sub-batches also
-    # reads each seq's op presence (r14) — fold_join_view's
-    # ``fact_feed_types`` hint then skips the absent arm's write job for
-    # one-sided batches (a pure-delete batch used to evaluate the whole
-    # rebuild join just to discover it wrote nothing)
-    ops_by_seq: dict[int, set[str]] = {}
-    for r in micro_batch.select("seq", "_op").distinct().collect():
-        ops_by_seq.setdefault(r[0], set()).add(r[1])
-    for s in sorted(ops_by_seq):
+    seqs = sorted(r[0] for r in micro_batch.select("seq").distinct().collect())
+    for s in seqs:
         b = micro_batch.filter(F.col("seq") == s).drop("seq")
         feed = b.withColumn(
             "_change_type",
@@ -170,19 +164,13 @@ def apply_cdc_batches(
                 F.lit("update_postimage")
             ),
         ).drop("_op")
-        feed_types = {
-            "delete" if op == "delete" else "update_postimage"
-            for op in ops_by_seq[s]
-        }
         # Fact landing and view fold run CONCURRENTLY (guide §2.6): both
         # consume the (checkpointed) batch `b`, write DISJOINT tables
         # (fact_dir / view_dir), and nothing downstream in this iteration
         # reads the fact table — the fold's feed IS the batch. overlap()
         # joins both before the next seq, preserving cross-batch order.
         overlap(
-            lambda: merge_cdc_delta(
-                spark, fact_dir, b, key=["o_orderkey"], ops=ops_by_seq[s]
-            ),
+            lambda: merge_cdc_delta(spark, fact_dir, b, key=["o_orderkey"]),
             lambda: fold_join_view(
                 spark,
                 view_dir,
@@ -192,7 +180,6 @@ def apply_cdc_batches(
                 dim_current=dim,
                 fact_join_col="o_custkey",
                 dim_join_col="c_custkey",
-                fact_feed_types=feed_types,
             ),
         )
         if after_fold is not None:

@@ -451,8 +451,9 @@ def test_tombstone_only_delta_set_and_replay_idempotence(spark, tmp_path):
 def test_merge_cdc_delta_matches_copy_on_write_merge_cdc(spark, tmp_path):
     """The merge-on-read CDC apply must produce the SAME effective state
     as the copy-on-write merge_cdc for the same batch — including the
-    unmatched-delete no-op — while landing as two deltas with the base
-    snapshot untouched; flatten converges the physical base too."""
+    unmatched-delete no-op — while landing as ONE delta (one
+    ``delta_names`` entry per batch) with the base snapshot untouched;
+    flatten converges the physical base too."""
     rows = [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)]
     batch = spark.createDataFrame(
         [
@@ -467,8 +468,8 @@ def test_merge_cdc_delta_matches_copy_on_write_merge_cdc(spark, tmp_path):
     lake.write_snapshot(_df(spark, rows), mor)
     lake.write_snapshot(_df(spark, rows), cow)
     before = lake.current_snapshot(mor)
-    names = lake.merge_cdc_delta(spark, mor, batch, key=["id"])
-    assert len(names) == 2 and lake.current_snapshot(mor) == before
+    name = lake.merge_cdc_delta(spark, mor, batch, key=["id"])
+    assert lake.delta_names(mor) == [name] and lake.current_snapshot(mor) == before
     lake.merge_cdc(spark, cow, batch, key=["id"])
     want = sorted(tuple(r) for r in lake.read_current(spark, cow).collect())
     got = sorted(
@@ -476,7 +477,8 @@ def test_merge_cdc_delta_matches_copy_on_write_merge_cdc(spark, tmp_path):
     )
     assert got == want == [(1, "a", 1.0), (2, "b2", 20.0), (4, "d", 4.0)]
     # replay converges (at-least-once contract)
-    lake.merge_cdc_delta(spark, mor, batch, key=["id"])
+    replay = lake.merge_cdc_delta(spark, mor, batch, key=["id"])
+    assert lake.delta_names(mor) == [name, replay]
     got2 = sorted(
         tuple(r) for r in lake.read_current_with_deltas(spark, mor, ["id"]).collect()
     )
@@ -487,16 +489,25 @@ def test_merge_cdc_delta_matches_copy_on_write_merge_cdc(spark, tmp_path):
 
 
 def test_merge_cdc_delta_one_sided_batches(spark, tmp_path):
+    """A pure-delete and a pure-upsert batch each land as one delta that
+    reads as one side only; an empty batch commits nothing."""
     table = str(tmp_path / "t")
     lake.write_snapshot(_df(spark, [(1, "a", 1.0), (2, "b", 2.0)]), table)
     only_del = spark.createDataFrame(
         [(1, None, None, "delete")], "id long, name string, amount double, _op string"
     )
-    assert len(lake.merge_cdc_delta(spark, table, only_del, key=["id"])) == 1
+    first = lake.merge_cdc_delta(spark, table, only_del, key=["id"])
     only_ups = spark.createDataFrame(
         [(5, "e", 5.0, "upsert")], "id long, name string, amount double, _op string"
     )
-    assert len(lake.merge_cdc_delta(spark, table, only_ups, key=["id"])) == 1
+    second = lake.merge_cdc_delta(spark, table, only_ups, key=["id"])
+    assert lake.delta_names(table) == [first, second]
+    # the footers prove each dir one-sided, so readers plan no empty side
+    data, tombs = lake.split_deltas(spark, table, [first, second], ["id"])
+    assert [i for i, _ in data] == [1] and [i for i, _, _ in tombs] == [0]
+    # an empty batch commits nothing
+    assert lake.merge_cdc_delta(spark, table, only_ups.limit(0), key=["id"]) is None
+    assert lake.delta_names(table) == [first, second]
     got = sorted(
         tuple(r) for r in lake.read_current_with_deltas(spark, table, ["id"]).collect()
     )
@@ -611,10 +622,12 @@ def test_delta_dirs_carry_sidecar_and_mor_read_matches(spark, tmp_path):
 
 
 # --- merge-on-read resolve semantics, pinned against a plain replay --------
-# Key (k1, k2); sub-key tombstones delete on k1 alone. A row's key is "real"
-# only when every key column is non-NULL: a NULL never equals anything, so
-# a NULL-key data-delta row replaces nothing and is not served, and a
-# tombstone kills only rows whose shape columns equal its (non-NULL) values.
+# Key (k1, k2); sub-key tombstones delete on k1 alone; a CDC delta
+# (``merge_cdc_delta``) carries upserts and full-key deletes in one dir.
+# A row's key is "real" only when every key column is non-NULL: a NULL
+# never equals anything, so a NULL-key data-delta row replaces nothing and
+# is not served, and a tombstone kills only rows whose shape columns equal
+# its (non-NULL) values.
 
 _MOR_SCHEMA = "k1 int, k2 int, v string"
 _kv = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
@@ -626,6 +639,11 @@ _mor_delta = st.one_of(
     ),
     st.tuples(st.just("full"), st.lists(st.tuples(_kv, _kv), max_size=3)),
     st.tuples(st.just("sub"), st.lists(st.tuples(_kv), max_size=2)),
+    st.tuples(  # (k1, k2, v, is_delete)
+        st.just("cdc"),
+        st.lists(st.tuples(_kv, _kv, st.sampled_from(["x", None]), st.booleans()),
+                 max_size=5),
+    ),
 )
 
 
@@ -649,9 +667,15 @@ def _unique_by_key(rows):
 def _replay(base, deltas):
     """Sequential plain-Python replay: a data delta replaces every live
     row at its real keys and adds its real-key rows; a tombstone kills
-    every live row whose shape columns equal its non-NULL values."""
+    every live row whose shape columns equal its non-NULL values; a CDC
+    delta does both for its (key-disjoint) upserts and deletes."""
     state = list(base)
     for kind, rows in deltas:
+        if kind == "cdc":
+            dead = {(r[0], r[1]) for r in rows if r[-1] and _real(r[0], r[1])}
+            state = [r for r in state if (r[0], r[1]) not in dead]
+            rows = [r[:-1] for r in rows if not r[-1]]
+            kind = "data"
         if kind == "data":
             keys = {(r[0], r[1]) for r in rows if _real(r[0], r[1])}
             state = [r for r in state if (r[0], r[1]) not in keys]
@@ -666,7 +690,7 @@ def _replay(base, deltas):
 def _apply_feed(old, feed):
     state = list(old)
     for r in feed:
-        row, kind = tuple(r[:3]), r[3]
+        row, kind = tuple(r[:-1]), r[-1]
         if kind in ("delete", "update_preimage"):
             state.remove(row)  # ValueError: the feed removed a row old lacks
         else:
@@ -680,37 +704,76 @@ def _apply_feed(old, feed):
     base=st.lists(st.tuples(_kv, _kv, st.sampled_from(["a", "b"])), max_size=6),
     deltas=st.lists(_mor_delta, min_size=1, max_size=3),
     split=st.integers(min_value=0, max_value=2),
+    key_only=st.booleans(),
 )
 @example(  # a NULL-key data-delta row is dropped, not served
     base=[(1, 1, "a"), (2, 2, "b")],
     deltas=[("data", [(2, 2, "x"), (None, 3, "y")])],
-    split=0,
+    split=0, key_only=False,
 )
 @example(  # a re-ingest after a sub-key delete resurrects only that key
     base=[(1, 1, "a"), (1, 2, "b"), (None, 1, "a")],
     deltas=[("sub", [(1,)]), ("data", [(1, 2, "x"), (1, None, "y")]),
             ("full", [(2, 2), (None, 2)]), ("data", [(1, 2, "y")])],
-    split=1,
+    split=1, key_only=False,
 )
-def test_mor_resolve_matches_plain_replay(spark, base, deltas, split):
+@example(  # CDC deltas among parent-format data / full / sub dirs
+    base=[(1, 1, "a"), (1, 2, "b"), (2, 2, "a")],
+    deltas=[("data", [(1, 1, "x")]),
+            ("cdc", [(1, 1, None, True), (2, 2, "y", False), (3, 3, "x", False),
+                     (None, 1, "x", True), (1, 2, "x", True)]),
+            ("sub", [(2,)]),
+            ("cdc", [(2, 2, "x", False), (1, 2, None, False)]),
+            ("full", [(3, 3)])],
+    split=2, key_only=False,
+)
+@example(  # an empty tombstone dir holds no row, so it plans nothing
+    base=[], deltas=[("full", [])], split=0, key_only=False,
+)
+@example(  # a key-only table: its CDC dir has a full-key delete dir's schema
+    base=[(1, 1, "a"), (1, 2, "a"), (2, 2, "a")],
+    deltas=[("cdc", [(3, 3, None, False), (1, 1, None, True)]),
+            ("full", [(1, 2)]),
+            ("cdc", [(1, 1, None, False), (2, 2, None, True)]),
+            ("data", [(2, 2, None)])],
+    split=1, key_only=True,
+)
+def test_mor_resolve_matches_plain_replay(spark, base, deltas, split, key_only):
     """``read_current_with_deltas`` (every delta over the base) and
     ``state_changes``' extends path (the fresh deltas resolved over the
     already-resolved prefix state) both agree with a sequential replay,
     over repeated keys across deltas, full-key and sub-key tombstones,
-    and NULL key values in the base, the data deltas and the tombstones."""
+    one-dir CDC deltas mixed among them, NULL key values in the base, the
+    data deltas and the tombstones, and key-only tables (no value column),
+    where a CDC dir and a full-key tombstone dir share one schema."""
     import tempfile
 
-    base = _unique_by_key(base)
-    deltas = [(k, _unique_by_key(r) if k == "data" else r) for k, r in deltas]
+    def shaped(r):  # a data row as the table stores it
+        return r[:2] if key_only else r[:3]
+
+    schema = "k1 int, k2 int" if key_only else _MOR_SCHEMA
+    base = [shaped(r) for r in _unique_by_key(base)]
+    deltas = [
+        (k, [shaped(t) for t in _unique_by_key(r)] if k == "data"
+         else [(*shaped(t), t[3]) for t in _unique_by_key(r)] if k == "cdc"
+         else r)
+        for k, r in deltas
+    ]
     split = min(split, len(deltas) - 1)
     table = tempfile.mkdtemp(prefix="mor_prop_")
     try:
-        snap = lake.write_snapshot(spark.createDataFrame(base, _MOR_SCHEMA), table)
+        snap = lake.write_snapshot(spark.createDataFrame(base, schema), table)
         names = []
         for kind, rows in deltas:
             if kind == "data":
                 names.append(lake.append_delta(
-                    spark.createDataFrame(rows, _MOR_SCHEMA), table))
+                    spark.createDataFrame(rows, schema), table))
+            elif kind == "cdc":
+                batch = spark.createDataFrame(
+                    [(*r[:-1], "delete" if r[-1] else "upsert") for r in rows],
+                    f"{schema}, _op string",
+                )
+                names.append(lake.merge_cdc_delta(spark, table, batch, ["k1", "k2"]))
             else:
                 cols = ["k1", "k2"] if kind == "full" else ["k1"]
                 keys = spark.createDataFrame(
@@ -721,10 +784,11 @@ def test_mor_resolve_matches_plain_replay(spark, base, deltas, split):
         assert sorted(map(tuple, got), key=repr) == _replay(base, deltas)
 
         old = _replay(base, deltas[:split])
+        prefix = [n for n in names[:split] if n is not None]  # None: empty CDC
         feed = lake.state_changes(
-            spark, table, f"{snap}|{','.join(names[:split])}",
+            spark, table, f"{snap}|{','.join(prefix)}",
             lake.pending_state(table), key,
-        ).select("k1", "k2", "v", "_change_type").collect()
+        ).select(*key, *([] if key_only else ["v"]), "_change_type").collect()
         assert _apply_feed(old, feed) == _replay(base, deltas)
     finally:
         shutil.rmtree(table, ignore_errors=True)

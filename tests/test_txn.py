@@ -689,7 +689,6 @@ def test_racing_group_reader_survives_default_keep_commits(spark):
                     fact_feed=batch.withColumn("_change_type", F.lit("insert")),
                     dim_feed=None, dim_current=read_current(spark, dirs["dim"]),
                     fact_join_col="g", dim_join_col="g",
-                    fact_feed_types={"insert"},
                 )
                 fold_agg_join_view(
                     spark, dirs["agg"], dirs["view"], ["k"], "dname", "v"

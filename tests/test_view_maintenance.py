@@ -205,6 +205,48 @@ def test_dim_insert_without_fact_current_raises(spark):
         shutil.rmtree(view_dir, ignore_errors=True)
 
 
+def test_fact_arm_lands_one_delta_per_batch(spark):
+    """The fact arm writes its rebuilt rows and its dead keys (deletes and
+    posts re-pointed at a missing dim key) as ONE delta: a feed carrying
+    both adds exactly one ``delta_names`` entry, and the view reads as
+    the recomputed join."""
+    dim = spark.createDataFrame([(1, "n1"), (2, "n2")], ["c_custkey", "c_name"])
+    fact = spark.createDataFrame(
+        [(1, 1, 10.0), (2, 1, 20.0), (3, 2, 30.0)],
+        ["o_orderkey", "o_custkey", "o_totalprice"],
+    )
+    cols = ["o_orderkey", "o_custkey", "o_totalprice", "c_name"]
+    view_dir = tempfile.mkdtemp(prefix="ivm_t_onedelta_")
+    try:
+        join = lambda f: f.join(  # noqa: E731
+            dim.withColumnRenamed("c_custkey", "o_custkey"), on="o_custkey"
+        ).select(*cols)
+        write_snapshot(join(fact), view_dir)
+        feed = spark.createDataFrame(
+            [
+                (4, 2, 40.0, "insert"),
+                (1, 2, 11.0, "update_postimage"),
+                (3, 404, 30.0, "update_postimage"),  # no dim partner: leaves
+                (2, 1, 20.0, "delete"),
+            ],
+            ["o_orderkey", "o_custkey", "o_totalprice", "_change_type"],
+        )
+        fold_join_view(
+            spark, view_dir, view_key=["o_orderkey"], fact_feed=feed,
+            dim_feed=None, dim_current=dim,
+            fact_join_col="o_custkey", dim_join_col="c_custkey",
+        )
+        assert len(delta_names(view_dir)) == 1
+        post = spark.createDataFrame(
+            [(1, 2, 11.0), (3, 404, 30.0), (4, 2, 40.0)], fact.columns
+        )
+        assert _rows(
+            read_current_with_deltas(spark, view_dir, key=["o_orderkey"])
+        ) == _rows(join(post)) == [(1, 2, 11.0, "n2"), (4, 2, 40.0, "n2")]
+    finally:
+        shutil.rmtree(view_dir, ignore_errors=True)
+
+
 def test_pruned_by_keys_pushes_in_filter(spark, ivm_lake):
     """The dim arm's selector reaches the parquet footers: PushedFilters
     carries the In(o_custkey,…) on the view's base scan AND on pending
@@ -1279,7 +1321,7 @@ def _spark_jobs(spark, fn) -> int:
 
 def test_lake_fold_job_counts_stay_batch_sized(spark):
     """One CDC batch per fold over a 3,000-row lake, as in the ``lake_ivm``
-    benchmark: ``merge_cdc_delta`` lands a data and a tombstone delta, and
+    benchmark: ``merge_cdc_delta`` lands the batch as one delta, and
     ``fold_agg_join_view`` folds them into the stored aggregate. Under AQE
     every exchange of the merge-on-read resolve and of the signed fold is
     a job of its own, so the counts pin the plan shapes: the fold runs at

@@ -5,7 +5,8 @@ Reference parity:
     the Q8 fallback bug fixed (dest table defaults to the SOURCE table
     name, not the dest schema) and identifiers quoted (Q6).
   - create_index_statements ← postgres.rb:243-261 (O11), with composite
-    primary keys kept whole (Q5 — the reference truncated to columns[0]).
+    primary keys kept whole (Q5 — the reference truncated to columns[0]),
+    built on the staging table and named inside the hotswap transaction.
 
 Why custom DDL at all: Spark's generic JDBC write degrades types
 (varchar(n)→TEXT, numeric precision lost, arrays unsupported) — SURVEY.md
@@ -44,23 +45,54 @@ def create_table_statement(
 
 
 def create_index_statements(
-    table: QualifiedName, indexes: Sequence[IndexDef], rename_prefix: str | None = None
-) -> list[str]:
-    """postgres.rb:243-261 — PK via ALTER TABLE (ALL columns, fixing Q5),
-    other indexes via CREATE [UNIQUE] INDEX … [WHERE pred]."""
-    stmts = []
-    for ix in indexes:
-        cols = ", ".join(ix.columns)
+    staging: QualifiedName,
+    dest_table: str,
+    indexes: Sequence[IndexDef],
+    rename_prefix: str | None = None,
+) -> tuple[list[str], list[str]]:
+    """postgres.rb:243-261, built before the swap: ``(builds, attaches)``.
+
+    ``builds`` holds one ``CREATE [UNIQUE] INDEX <staging>_i<k> ON
+    <staging> (…) [WHERE pred]`` per source index; they are independent
+    and may run concurrently once the rows are loaded. ``attaches`` go
+    into the hotswap transaction after the rename: each secondary index
+    takes its source name (behind ``rename_prefix`` if given), and the
+    primary key's index becomes the constraint ``ALTER TABLE … ADD
+    PRIMARY KEY (cols)`` would have named, with ALL its columns (Q5)."""
+    dest = QualifiedName(staging.schema_name, dest_table)
+    builds, attaches = [], []
+    for k, ix in enumerate(indexes):
+        built = f"{staging.table_name}_i{k}"
+        unique = "UNIQUE " if ix.unique or ix.primary else ""
+        where = f" WHERE {ix.where}" if ix.where else ""
+        builds.append(
+            f"CREATE {unique}INDEX {quote_ident(built)} ON {staging.quoted}"
+            f" ({', '.join(ix.columns)}){where}"
+        )
         if ix.primary:
-            stmts.append(f"ALTER TABLE {table.quoted} ADD PRIMARY KEY ({cols})")
-        else:
-            unique = "UNIQUE " if ix.unique else ""
-            name = f"{rename_prefix}{ix.name}" if rename_prefix else ix.name
-            where = f" WHERE {ix.where}" if ix.where else ""
-            stmts.append(
-                f"CREATE {unique}INDEX {quote_ident(name)} ON {table.quoted} ({cols}){where}"
+            attaches.append(
+                f"ALTER TABLE {dest.quoted} ADD CONSTRAINT"
+                f" {quote_ident(default_pkey_name(dest_table))}"
+                f" PRIMARY KEY USING INDEX {quote_ident(built)}"
             )
-    return stmts
+        else:
+            name = f"{rename_prefix}{ix.name}" if rename_prefix else ix.name
+            attaches.append(
+                f"ALTER INDEX {QualifiedName(staging.schema_name, built).quoted}"
+                f" RENAME TO {quote_ident(name)}"
+            )
+    return builds, attaches
+
+
+def default_pkey_name(table: str) -> str:
+    """The name PG gives ``ALTER TABLE <table> ADD PRIMARY KEY``'s
+    constraint (makeObjectName with label ``pkey``): the table name,
+    clipped at a character boundary so that ``<table>_pkey`` fits
+    NAMEDATALEN - 1 = 63 bytes of a UTF-8 database. PG would add a digit
+    if another relation of the schema held that name; the swap then
+    fails and the old table stays published."""
+    clipped = table.encode()[: 63 - len("_pkey")].decode(errors="ignore")
+    return f"{clipped}_pkey"
 
 
 def hotswap_statements(

@@ -70,9 +70,11 @@ NUMERIC_PG_TYPES = (
     "bigserial",
 )
 
-# below this many (filtered) rows a single stream wins: partition setup
-# costs one probe + one sample query + N connections
-SMALL_TABLE_ROWS = 100_000
+# up to this many (filtered) rows a single stream wins: partition setup
+# costs one probe + one bounds query + N streams. The measured crossover
+# of copy_table at 4 cores, one stream against the split read, is
+# plans/r20_copy_split_crossover.md
+SMALL_TABLE_ROWS = 10_000
 # a sample this small (vs the boundary count) escalates to exact
 # percentiles — a SYSTEM page sample on a barely-over-threshold table
 # can return too few rows to place N-1 boundaries meaningfully

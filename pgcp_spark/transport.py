@@ -4,8 +4,14 @@ Transport (lib/pgcp/transport.rb).
 The fixed sequence (transport.rb:33-62, O19) is preserved:
 
   parse names → force_schema → CREATE SCHEMA → create dest table if
-  missing → staged copy + atomic hotswap → replay indexes;
-  on failure drop the dest table this run created.
+  missing → staged copy → build the indexes on the staging table, in
+  parallel → atomic hotswap that also names the indexes and attaches the
+  primary key; on failure drop the dest table this run created.
+
+The reference replayed the indexes one by one AFTER the swap, so the live
+table was briefly unindexed, and a failed replay left it published with
+no indexes. Here the swapped-in table carries every index at the commit,
+and a failed build leaves the old table published as it was.
 
 What changes is the middle: instead of a single-threaded
 ``psql COPY | psql COPY`` shell pipe (transport.rb:66-110, O1-O3), rows move
@@ -33,9 +39,8 @@ from __future__ import annotations
 
 import fnmatch
 import logging
-import threading
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any
@@ -103,12 +108,6 @@ class Transport:
         )
         self.reader = reader or self._default_reader
         self.writer = writer or self._default_writer
-        # source-catalog memo: each copy needs columns/indexes in up to
-        # three places (dest DDL, staging DDL, partition-column pick,
-        # index replay) — introspect once per table, not per use
-        self._cat_lock = threading.Lock()
-        self._col_cache: dict[str, list[cat.ColumnDef]] = {}
-        self._idx_cache: dict[str, list[cat.IndexDef]] = {}
 
     # ---------------- public API (O18/O19) ----------------
 
@@ -160,18 +159,22 @@ class Transport:
                 f"CREATE SCHEMA IF NOT EXISTS {quote_ident(dest.schema_name)}"
             )
 
-        created_dest = self._create_dest_table(src, dest)
+        # the source catalog is read once per copy, never remembered past
+        # it: a later copy sees columns and indexes added or dropped since
+        columns = cat.column_definitions(self.src_client, src.schema_name, src.table_name)
+        indexes = [] if options.skip_indexes else cat.get_indexes(  # Q3 fixed
+            self.src_client, src.schema_name, src.table_name
+        )
+        created_dest = self._create_dest_table(columns, dest)
         try:
-            self._copy_table_data(src, dest, options)
-            if not options.skip_indexes:  # Q3 fixed
-                indexes = self._src_indexes(src)
-                # PG index names are schema-scoped: copying a table under a
-                # NEW name into a schema that already holds a copy of the
-                # original would replay the same index name twice — prefix
-                # with the dest table name to keep replays collision-free
-                prefix = f"{dest.table_name}_" if dest.table_name != src.table_name else None
-                for stmt in ddl.create_index_statements(dest, indexes, rename_prefix=prefix):
-                    self.dest_client.execute(stmt)
+            # transport.rb:128-143 (O9)
+            df = self.reader(src, options)
+            # PG index names are schema-scoped: copying a table under a
+            # NEW name into a schema that already holds a copy of the
+            # original would publish the same index name twice — prefix
+            # with the dest table name to keep them collision-free
+            prefix = f"{dest.table_name}_" if dest.table_name != src.table_name else None
+            self._staged_write(df, dest, options, columns, indexes, prefix)
         except Exception:
             # transport.rb:57-61 semantics — clean up the table we created —
             # but propagate the error instead of swallowing it (Q4 fixed)
@@ -229,61 +232,49 @@ class Transport:
 
     # ---------------- internals ----------------
 
-    def _create_dest_table(self, src: QualifiedName, dest: QualifiedName) -> bool:
-        """transport.rb:112-126: introspect source → exact-type DDL on dest
-        if missing. Returns True if this run created the table."""
+    def _create_dest_table(self, columns: list[cat.ColumnDef], dest: QualifiedName) -> bool:
+        """transport.rb:112-126: exact-type DDL from the source columns on
+        dest if missing. Returns True if this run created the table."""
         if cat.table_exists(self.dest_client, dest.schema_name, dest.table_name):
             return False
-        columns = self._src_columns(src)
         self.dest_client.execute(ddl.create_table_statement(columns, dest))
         return True
-
-    def _src_columns(self, qn: QualifiedName) -> list[cat.ColumnDef]:
-        key = str(qn)
-        with self._cat_lock:
-            if key not in self._col_cache:
-                self._col_cache[key] = cat.column_definitions(
-                    self.src_client, qn.schema_name, qn.table_name
-                )
-            return self._col_cache[key]
-
-    def _src_indexes(self, qn: QualifiedName) -> list[cat.IndexDef]:
-        key = str(qn)
-        with self._cat_lock:
-            if key not in self._idx_cache:
-                self._idx_cache[key] = cat.get_indexes(
-                    self.src_client, qn.schema_name, qn.table_name
-                )
-            return self._idx_cache[key]
-
-    def _copy_table_data(
-        self, src: QualifiedName, dest: QualifiedName, options: CopyOptions
-    ) -> None:
-        """transport.rb:128-143 (O9): staging table + COPY + hotswap, with
-        the staging table dropped in all failure paths."""
-        df = self.reader(src, options)
-        self._staged_write(df, dest, options, src_for_ddl=src)
 
     def _staged_write(
         self,
         df: Any,
         dest: QualifiedName,
         options: CopyOptions,
-        src_for_ddl: QualifiedName | None = None,
+        columns: list[cat.ColumnDef] | None = None,
+        indexes: Sequence[cat.IndexDef] = (),
+        rename_prefix: str | None = None,
     ) -> None:
+        """Load ``df`` into a staging table, build ``indexes`` on it
+        concurrently, and swap it in under ``dest``'s name. The staging
+        table, with whatever indexes it got, is dropped on every failure
+        path, and ``dest`` is then left as it was."""
         staging_name = f"temp_{uuid.uuid4().hex}"  # transport.rb:129-136
         staging = QualifiedName(dest.schema_name, staging_name)
-        if src_for_ddl is not None:
+        if columns is not None:
             # exact PG types from the source catalog
-            columns = self._src_columns(src_for_ddl)
             self.dest_client.execute(ddl.create_table_statement(columns, staging))
         else:
             # Spark-schema-derived staging table (CTAS / CSV path)
             self.dest_client.execute(_spark_schema_ddl(df, staging))
+        builds, attaches = ddl.create_index_statements(
+            staging, dest.table_name, indexes, rename_prefix
+        )
         try:
             self.writer(df, staging, options)
+            if builds:
+                # one session per index (pgcopydb's --index-jobs); leaving
+                # the pool waits for every build, failed or not, so the
+                # DROP below never races one
+                with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+                    list(pool.map(self.dest_client.execute, builds))
             self.dest_client.execute_transaction(
                 ddl.hotswap_statements(dest.schema_name, staging_name, dest.table_name)
+                + attaches
             )  # postgres.rb:93-106 (O8)
         finally:
             # transport.rb:141-142 — orphan cleanup; no-op after a
@@ -340,7 +331,10 @@ class Transport:
         for single-stream (no PK / small table / degenerate key). The
         boundary queries run against the SOURCE, and the predicates are
         evaluated there too — same server, same collation."""
-        part = partition.pk_leading_column(self._src_indexes(src), self._src_columns(src))
+        part = partition.pk_leading_column(
+            cat.get_indexes(self.src_client, src.schema_name, src.table_name),
+            cat.column_definitions(self.src_client, src.schema_name, src.table_name),
+        )
         if part is None:
             return None
         col, is_numeric = part

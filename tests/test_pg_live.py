@@ -182,6 +182,184 @@ def test_live_recopy_hotswaps_not_appends(transport, client):
     assert leftovers == []
 
 
+def _index_defs(client, schema, table):
+    """(name, definition) of each index of ``schema.table``, the schema
+    left out of the definition so two schemas compare."""
+    return client.fetch(
+        "SELECT indexname, replace(indexdef, ' ON ' || schemaname || '.', ' ON ')"
+        f" FROM pg_indexes WHERE schemaname = '{schema}' AND tablename = '{table}'"
+        " ORDER BY 1"
+    )
+
+
+def test_live_swap_publishes_every_index(spark, pg_server, client):
+    """Right after the swap transaction returns, and before the copy runs
+    any other statement, the destination carries every source index —
+    onto a missing table and onto an earlier copy alike."""
+    at_swap = []
+
+    class IndexesAtSwap:
+        def __getattr__(self, name):
+            return getattr(client, name)
+
+        def execute_transaction(self, statements):
+            client.execute_transaction(statements)
+            at_swap.append(_index_defs(client, "dst_swap", "people"))
+
+    tr = Transport(
+        spark, src_cfg=pg_server, dest_cfg=pg_server,
+        src_client=client, dest_client=IndexesAtSwap(),
+        reader=make_copy_reader(spark, client), writer=make_copy_writer(client),
+    )
+    client.execute("DROP SCHEMA IF EXISTS dst_swap CASCADE")
+    for _ in range(2):
+        tr.copy_table("src.people", options=CopyOptions(force_schema="dst_swap"))
+    want = _index_defs(client, "src", "people")
+    assert len(want) == 3
+    assert at_swap == [want, want]
+
+
+def test_live_failed_index_build_keeps_old_table(spark, pg_server, client):
+    """A CREATE INDEX that fails on the staging table leaves the old table
+    published with its old rows and indexes, propagates the error, and
+    leaves no temp_* table or index behind."""
+    client.execute("DROP TABLE IF EXISTS src.ixf")
+    client.execute("CREATE TABLE src.ixf (id INT PRIMARY KEY, name TEXT NOT NULL, flag BOOLEAN)")
+    client.execute("CREATE UNIQUE INDEX ixf_name_key ON src.ixf (name)")
+    client.execute("CREATE INDEX ixf_flag ON src.ixf (flag)")
+    client.execute(
+        "INSERT INTO src.ixf SELECT i, 'n' || i, i % 2 = 0 FROM generate_series(1, 300) g(i)"
+    )
+
+    class UniqueOnFlag:
+        """The live client, except that the unique index on name is built
+        on the two-valued flag column: PG fails it on duplicate keys."""
+
+        def __getattr__(self, name):
+            return getattr(client, name)
+
+        def execute(self, sql):
+            if sql.startswith("CREATE UNIQUE INDEX") and sql.endswith("(name)"):
+                sql = sql[: -len("(name)")] + "(flag)"
+            return client.execute(sql)
+
+    def copy(dest_client):
+        Transport(
+            spark, src_cfg=pg_server, dest_cfg=pg_server,
+            src_client=client, dest_client=dest_client,
+            reader=make_copy_reader(spark, client), writer=make_copy_writer(client),
+        ).copy_table("src.ixf", options=CopyOptions(force_schema="dst_ixf"))
+
+    def published():
+        rows = client.fetch(
+            "SELECT COUNT(*), md5(string_agg(CAST(ROW(id, name, flag) AS TEXT), '|'"
+            " ORDER BY id)) FROM dst_ixf.ixf"
+        )
+        return rows, _index_defs(client, "dst_ixf", "ixf")
+
+    client.execute("DROP SCHEMA IF EXISTS dst_ixf CASCADE")
+    copy(client)
+    before = published()
+    assert before[0][0][0] == 300 and len(before[1]) == 3
+    client.execute(
+        "INSERT INTO src.ixf SELECT i, 'n' || i, true FROM generate_series(301, 400) g(i)"
+    )
+    with pytest.raises(RuntimeError, match="could not create unique index"):
+        copy(UniqueOnFlag())
+    assert published() == before
+    assert client.fetch(
+        "SELECT relname FROM pg_class c JOIN pg_namespace n ON n.oid = c.relnamespace"
+        " WHERE n.nspname = 'dst_ixf' AND c.relname LIKE 'temp%'"
+    ) == []
+
+
+def test_live_recopy_sees_source_catalog_changes(transport, client):
+    """One Transport re-copies a source after a column was added and its
+    indexes changed: the copy follows the source, not the first copy."""
+    client.execute("DROP TABLE IF EXISTS src.evolving")
+    client.execute("CREATE TABLE src.evolving (id INT PRIMARY KEY, a TEXT)")
+    client.execute("CREATE INDEX evolving_a ON src.evolving (a)")
+    client.execute("INSERT INTO src.evolving SELECT i, 'a' || i FROM generate_series(1, 200) g(i)")
+    client.execute("DROP SCHEMA IF EXISTS dst_evo CASCADE")
+    opts = CopyOptions(force_schema="dst_evo")
+    transport.copy_table("src.evolving", options=opts)
+
+    client.execute("ALTER TABLE src.evolving ADD COLUMN b INT")
+    client.execute("UPDATE src.evolving SET b = id * 2")
+    client.execute("CREATE INDEX evolving_b ON src.evolving (b)")
+    client.execute("DROP INDEX src.evolving_a")
+    transport.copy_table("src.evolving", options=opts)
+
+    def cols(schema):
+        return [(c.name, c.type, c.nullable) for c in cat.column_definitions(client, schema, "evolving")]
+
+    assert cols("dst_evo") == cols("src")
+    assert _index_defs(client, "dst_evo", "evolving") == _index_defs(client, "src", "evolving")
+    md5 = "SELECT md5(string_agg(CAST(ROW(id, a, b) AS TEXT), '|' ORDER BY id)) FROM {}.evolving"
+    assert client.fetch(md5.format("dst_evo")) == client.fetch(md5.format("src"))
+
+
+def test_live_long_and_renamed_names_match_the_replay(transport, client):
+    """The names and definitions of a copy's constraints and indexes equal
+    what replaying ``ALTER TABLE … ADD PRIMARY KEY`` and ``CREATE INDEX``
+    on the published table gives: for a 60-character table name, whose
+    ``<table>_pkey`` PG clips to 63 bytes, and for a copy under another
+    60-character name, whose prefixed index names PG clips the same way."""
+    table = "orders_by_region_and_quarter_with_a_name_past_the_pkey_limit"
+    renamed = "orders_copied_under_a_new_name_whose_index_names_get_clipped"
+    assert len(table) >= 60 and len(renamed) >= 60
+    client.execute(f"DROP TABLE IF EXISTS src.{table}")
+    client.execute(
+        f"CREATE TABLE src.{table} (region INT, quarter INT, amount NUMERIC(10,2),"
+        " note TEXT, PRIMARY KEY (region, quarter))"
+    )
+    client.execute(f"CREATE INDEX a_amount ON src.{table} (amount)")
+    client.execute(f"CREATE UNIQUE INDEX b_note ON src.{table} (note) WHERE note <> ''")
+    client.execute(
+        f"INSERT INTO src.{table} SELECT i % 7, i, i / 4.0, 'n' || i"
+        " FROM generate_series(1, 100) g(i)"
+    )
+    for schema in ("dst_nm", "ref_nm"):
+        client.execute(f"DROP SCHEMA IF EXISTS {schema} CASCADE")
+    transport.copy_table(f"src.{table}", options=CopyOptions(force_schema="dst_nm"))
+    transport.copy_table(f"src.{table}", f"dst_nm.{renamed}")
+
+    # the replay, as copy_table ran it on the published table before the
+    # indexes were built ahead of the swap
+    client.execute("CREATE SCHEMA ref_nm")
+    for name, prefix in ((table, ""), (renamed, f"{renamed}_")):
+        client.execute(f"CREATE TABLE ref_nm.{name} (LIKE src.{table})")
+        for ix in cat.get_indexes(client, "src", table):
+            cols = ", ".join(ix.columns)
+            if ix.primary:
+                client.execute(f"ALTER TABLE ref_nm.{name} ADD PRIMARY KEY ({cols})")
+                continue
+            unique = "UNIQUE " if ix.unique else ""
+            where = f" WHERE {ix.where}" if ix.where else ""
+            client.execute(
+                f'CREATE {unique}INDEX "{prefix}{ix.name}" ON ref_nm.{name} ({cols}){where}'
+            )
+
+    def names_and_defs(schema):
+        return client.fetch(
+            "SELECT t.relname, i.relname,"
+            f" replace(pg_get_indexdef(i.oid), ' ON {schema}.', ' ON '),"
+            " k.conname, pg_get_constraintdef(k.oid)"
+            " FROM pg_index x JOIN pg_class i ON i.oid = x.indexrelid"
+            " JOIN pg_class t ON t.oid = x.indrelid"
+            " JOIN pg_namespace n ON n.oid = t.relnamespace"
+            " LEFT JOIN pg_constraint k ON k.conindid = i.oid AND k.contype = 'p'"
+            f" WHERE n.nspname = '{schema}' ORDER BY 1, 2"
+        )
+
+    got = names_and_defs("dst_nm")
+    assert got == names_and_defs("ref_nm")
+    assert len(got) == 6
+    pkeys = sorted(r[3] for r in got if r[3])
+    assert pkeys == sorted(f"{n[:58]}_pkey" for n in (table, renamed))
+    assert f"{renamed}_a_"[:63] in [r[1] for r in got]
+
+
 def test_live_glob_fan_out(transport, client):
     client.execute("DROP SCHEMA IF EXISTS dst2 CASCADE")
     copied = transport.copy_tables("src.pe*", options=CopyOptions(force_schema="dst2"))

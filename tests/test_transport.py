@@ -110,23 +110,70 @@ def test_copy_table_full_sequence():
 
     assert reads == ["public.users"]
     assert len(writes) == 1 and writes[0].startswith("public.temp_")
-    joined = "\n".join(dest.executed)
-    # sequence: schema → dest table → staging table → hotswap txn → cleanup → indexes
-    assert 'CREATE SCHEMA IF NOT EXISTS "public"' in dest.executed[0]
-    assert 'CREATE TABLE "public"."users"' in dest.executed[1]
-    assert '"balance" numeric(12,2) NULL' in dest.executed[1]  # exact PG types
-    assert '"tags" text[] NULL' in dest.executed[1]
-    assert "temp_" in dest.executed[2]  # staging created
-    assert dest.transactions, "hotswap must be transactional"
+    staging = writes[0].split(".")[1]
+    stg = f'"public"."{staging}"'
+    ex = dest.executed
+    # sequence: schema → dest table → staging table → index builds on the
+    # staging table → hotswap txn → staging cleanup, and nothing after
+    assert 'CREATE SCHEMA IF NOT EXISTS "public"' in ex[0]
+    assert 'CREATE TABLE "public"."users"' in ex[1]
+    assert '"balance" numeric(12,2) NULL' in ex[1]  # exact PG types
+    assert '"tags" text[] NULL' in ex[1]
+    assert ex[2].startswith(f"CREATE TABLE {stg}")
+    # the builds run concurrently, so in any order; composite PK kept
+    # whole (Q5 fixed), unique index, partial index predicate retained
+    assert sorted(ex[3:6]) == [
+        f'CREATE INDEX "{staging}_i2" ON {stg} (created_at) WHERE is_active',
+        f'CREATE UNIQUE INDEX "{staging}_i0" ON {stg} (id, tenant_id)',
+        f'CREATE UNIQUE INDEX "{staging}_i1" ON {stg} (email)',
+    ]
+    assert len(dest.transactions) == 1, "hotswap must be transactional"
     swap = dest.transactions[0]
-    assert swap[0].startswith('DROP TABLE IF EXISTS "public"."users"')
-    assert 'RENAME TO "users"' in swap[1]
-    # composite PK kept whole (Q5 fixed)
-    assert 'ADD PRIMARY KEY (id, tenant_id)' in joined
-    # partial index predicate retained
-    assert 'WHERE is_active' in joined
-    # unique index
-    assert 'CREATE UNIQUE INDEX "users_email_idx"' in joined
+    assert swap == [
+        'DROP TABLE IF EXISTS "public"."users"',
+        f'ALTER TABLE {stg} RENAME TO "users"',
+        'ALTER TABLE "public"."users" ADD CONSTRAINT "users_pkey"'
+        f' PRIMARY KEY USING INDEX "{staging}_i0"',
+        f'ALTER INDEX "public"."{staging}_i1" RENAME TO "users_email_idx"',
+        f'ALTER INDEX "public"."{staging}_i2" RENAME TO "users_active_idx"',
+    ]
+    assert ex[6:] == swap + [f"DROP TABLE IF EXISTS {stg}"]
+
+
+@pytest.mark.parametrize("dest_exists", [False, True])
+def test_failed_index_build_never_swaps(dest_exists):
+    """A failing index build on the staging table propagates, the swap
+    never runs, the staging table goes, and the destination is dropped
+    only if this run created it."""
+    src = FakeClient(tables={"public": ["users"]}, columns=COLS, indexes=INDEXES)
+
+    class FailingBuild(FakeClient):
+        def execute(self, sql):
+            super().execute(sql)
+            if "INDEX" in sql and "_i1" in sql:
+                raise RuntimeError("simulated index build failure")
+
+    dest = FailingBuild(tables={"public": ["users"] if dest_exists else []})
+    tr, _, writes = make_transport(src, dest)
+    with pytest.raises(RuntimeError, match="simulated index build failure"):
+        tr.copy_table("public.users")
+    assert dest.transactions == []
+    assert sum("CREATE" in s and "INDEX" in s for s in dest.executed) == 3
+    stg = '"public"."{}"'.format(writes[0].split(".")[1])
+    dropped = [s for s in dest.executed if s.startswith("DROP TABLE")]
+    assert dropped == [f"DROP TABLE IF EXISTS {stg}"] + (
+        [] if dest_exists else ['DROP TABLE IF EXISTS "public"."users"']
+    )
+
+
+def test_default_pkey_name_clips_like_postgres():
+    """``ADD PRIMARY KEY`` names its constraint ``<table>_pkey``, the table
+    name clipped at a character boundary so the whole fits 63 bytes."""
+    assert ddl.default_pkey_name("users") == "users_pkey"
+    long = "t" * 70
+    assert ddl.default_pkey_name(long) == "t" * 58 + "_pkey"
+    # a 2-byte character straddling byte 58 is dropped whole
+    assert ddl.default_pkey_name("t" * 57 + "é" + "x") == "t" * 57 + "_pkey"
 
 
 def test_skip_indexes_is_honored():  # Q3
